@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from mlvectordb_spark.functions.localdf import local_rows_df
 
+from mlvectordb_spark.operators.cdc import PendingTail, latest_per_key
 from mlvectordb_spark.operators.knn import knn
 
 # fan-out for two-phase per-key top-k: phase 1 runs over key×salt groups
@@ -228,17 +229,6 @@ class IVFIndex:
     """
 
     REBUILD_THRESHOLD = 0.2  # reference index.py:18 — refit at 20% drift
-    # apply_changes materializes its own bounded pieces and folds the
-    # pending tail itself — the store sync must NOT re-checkpoint the
-    # whole index after every bounded batch (see _sync_namespace)
-    manages_materialization = True
-    # retire anti-join strategy bound: a steady-state CDC feed (bounded
-    # by the sync interval) broadcasts its id set; a catch-up/resync
-    # feed above this row count must NOT be forced through a broadcast
-    # (the 8 GB / 512M-row broadcast cap, r12 ADVICE medium) — it falls
-    # back to the AQE-sized anti-join, and the pending-tail fold
-    # materializes the result right after anyway.
-    BROADCAST_FEED_ROWS = 2_000_000
 
     def __init__(
         self,
@@ -273,10 +263,7 @@ class IVFIndex:
         # reloaded serving index can honor a recall target without
         # re-measuring
         self._recall_curve: dict[int, float] | None = None
-        # pending-tail CDC state (apply_changes): syncs/rows accumulated
-        # since the last full fold of the anti-join/union chain
-        self._tail_syncs = 0
-        self._tail_rows = 0
+        self.cdc = PendingTail()
 
     def _fit_centroids(
         self, df: DataFrame, vec_col: str, id_col: str
@@ -360,8 +347,8 @@ class IVFIndex:
                     # record a radius slightly BELOW the true max member
                     # distance; certified-exact pruning needs radii to be
                     # true upper bounds, and _radius_rows computes the
-                    # direct form, so build-time and incremental radii now
-                    # agree numerically (r12 ADVICE).
+                    # direct form, so build-time and incremental radii
+                    # agree numerically.
                     diff = mat - cent[cids]
                     pdf["__cdist"] = np.sqrt((diff * diff).sum(axis=1))
                 yield pdf
@@ -412,6 +399,7 @@ class IVFIndex:
         self.indexed = self._assign(df, vec_col)
         self._added_count = 0
         self._radii = self._counts = None
+        self.cdc = PendingTail()
         if self.eager_stats:
             # ONE pass computes radii+counts (build-time work, so the first
             # search is probe-only), and built_count falls out of the
@@ -470,111 +458,36 @@ class IVFIndex:
 
     def apply_changes(
         self, changes: DataFrame, vec_col: str | None = None,
-        id_col: str = "vec_id",
+        id_col: str = "vec_id", encode=None,
     ) -> DataFrame:
-        """Roll the index forward from a CDC feed (`VectorStore.
-        changes_since` shape: `change_type` in {'upsert','delete'} plus a
-        monotone `write_version`) WITHOUT a rebuild: latest event per id
-        wins, deleted/superseded ids drop out, upserted vectors assign to
-        their nearest EXISTING centroid (no refit) — the maintenance loop
-        that keeps a serving index continuously fresh against the
-        merge-on-read store.
-
-        Scale shape: the event collapse is a window over the FEED (bounded
-        by the sync interval, not the corpus); retiring changed ids is one
-        anti-join of the indexed table against that bounded id set
-        (broadcast while the feed is provably small, AQE-sized above the
-        bound — a catch-up/resync-sized feed must not be forced through a
-        broadcast, r12 ADVICE); assignment is the same Arrow argmin map as
-        add() — narrow, no shuffle of the corpus. Upserts count toward the
-        W11 drift trigger exactly like add(); exactness of `search_exact`
-        is unaffected either way (certified pruning holds on any
-        assignment). The feed must carry every non-derived column of the
-        indexed table (the union is by name)."""
-        from pyspark.sql.window import Window as _W
-
+        """Roll the index forward from a CDC feed without a refit (the
+        `PendingTail` contract): upserts assign to their nearest EXISTING
+        centroid, then pass through `encode` when given (IVF+PQ's codes),
+        and grow the cached cluster radii. Upserts count toward the W11
+        drift trigger exactly like add(); certified pruning stays exact on
+        any assignment. The feed must carry every non-derived column of
+        the indexed table (the union is by name)."""
         vec_col = vec_col or self._vec_col
         assert self.indexed is not None and self.centroids is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        cols = self.indexed.columns
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+
+        def enter(ups: DataFrame) -> DataFrame:
+            out = self._assign(ups.drop("cluster_id"), vec_col, with_dist=True)
+            return out if encode is None else encode(out, vec_col)
+
+        feed, stats = self.cdc.absorb(
+            changes, id_col, enter, keys=["cluster_id"],
+            aggs=[F.max("__cdist").alias("radius")],
         )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version", "cluster_id"
-        )
-        # ONE materialization job for the whole sync (guide §1.2): the
-        # assigned upserts and the delete events union into a single
-        # LAZY localCheckpoint whose first (and only) materializing
-        # action is the stats aggregate below — it yields the radius
-        # growth (from __cdist, emitted by the same Arrow matmul as the
-        # assignment — one boundary crossing, guide §4), the upsert
-        # count (W11 drift), AND the total feed size (the broadcast
-        # bound). The r12 shape paid three jobs here: checkpoint(latest)
-        # + checkpoint(assigned) + stats collect. Materializing detaches
-        # the plan from the store's parquet/tombstone files before
-        # compaction or tombstone retirement can rewrite them; deletes
-        # are discriminated by cluster_id NULL (the assignment map stamps
-        # every upsert with a real cluster).
-        assigned = self._assign(ups, vec_col, with_dist=True)
-        dels = (
-            latest.filter(F.col("change_type") == "delete")
-            .drop("change_type", "write_version", "cluster_id")
-            .withColumn("cluster_id", F.lit(None).cast("int"))
-            .withColumn("__cdist", F.lit(None).cast("double"))
-        )
-        feed = assigned.unionByName(dels).localCheckpoint(eager=False)
-        stats_rows = (
-            feed.groupBy("cluster_id")
-            .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-            .collect()
-        )
-        n_new = 0
-        n_del = 0
-        for r in stats_rows:
-            if r.cluster_id is None:
-                n_del += int(r.n)
-                continue
-            n_new += int(r.n)
-            if (
-                self._radii is not None
-                and r.radius is not None
-                and float(r.radius) > self._radii[int(r.cluster_id)]
-            ):
-                self._radii[int(r.cluster_id)] = float(r.radius)
-        # consumed by resync_index_from_snapshot to size the fresh drift
-        # baseline without re-counting the snapshot
-        self.last_applied_upserts = n_new
-        # PENDING-TAIL composition (the graph family's fold pattern):
-        # retire this feed's ids with one bounded anti-join and union the
-        # checkpointed batch — per-sync cost is O(feed), not O(index).
-        # The old shape (store sync re-checkpointing the WHOLE index
-        # after every bounded batch) paid a full index materialization
-        # per sync cycle — at continuous-ingest scale that is an
-        # O(corpus) write amplification per micro-batch.
-        ids = feed.select(id_col)
-        if n_new + n_del <= self.BROADCAST_FEED_ROWS:
-            ids = F.broadcast(ids)
-        self.indexed = self.indexed.join(ids, id_col, "left_anti").unionByName(
-            feed.filter(F.col("cluster_id").isNotNull()).select(*cols)
-        )
-        self._added_count += n_new
+        for r in stats:
+            j = int(r.cluster_id)
+            if self._radii is not None and float(r.radius) > self._radii[j]:
+                self._radii[j] = float(r.radius)
+        self._added_count += self.cdc.last_upserts
         self._counts = None
-        # FOLD: collapse the anti-join/union chain when the accumulated
-        # tail is no longer small next to the index (the same 20%
-        # economics as the store's compaction trigger), or when plan
-        # depth alone starts to cost analysis time. A resync-sized feed
-        # trips the row bound immediately, so catch-up still ends in one
-        # fully-materialized index.
-        self._tail_syncs += 1
-        self._tail_rows += n_new
-        base = max(1024, self._built_count + self._added_count)
-        if self._tail_syncs >= 8 or self._tail_rows >= 0.2 * base:
-            self.indexed = self.indexed.localCheckpoint()
-            self._tail_syncs = 0
-            self._tail_rows = 0
+        (self.indexed,) = self.cdc.fold(
+            self._built_count + self._added_count,
+            self.cdc.roll(self.indexed, feed, id_col),
+        )
         return self.indexed
 
     def _radius_rows(self, df: DataFrame, vec_col: str):
@@ -1159,6 +1072,7 @@ class LSHIndex:
         self.seed = seed
         self.model = None
         self.indexed: DataFrame | None = None
+        self.cdc = PendingTail()
 
     def build(
         self, df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
@@ -1173,6 +1087,7 @@ class LSHIndex:
         )
         self.model = lsh.fit(feat)
         self.indexed = self.model.transform(feat)
+        self.cdc = PendingTail()
         return self.indexed
 
     def save(self, path: str) -> None:
@@ -1226,40 +1141,24 @@ class LSHIndex:
         self, changes: DataFrame, vec_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> DataFrame:
-        """CDC maintenance for the LSH family (the IVFIndex.apply_changes
-        contract): latest event per id wins over the bounded feed, changed
-        ids retire via one anti-join, upserts re-hash through the FITTED
-        model. Unlike IVF, LSH maintenance cannot drift at all: the random
-        hyperplanes are data-independent, so hashing new rows with the
-        saved model is exactly what a fresh build would compute — no
-        rebuild trigger needed. Works on both index shapes (built:
-        __hashes/__features present; loaded: materialized b0..bN bucket
-        columns)."""
-        from pyspark.sql.window import Window as _W
+        """CDC maintenance (the `PendingTail` contract): upserts re-hash
+        through the FITTED model. LSH cannot drift — the random hyperplanes
+        are data-independent, so hashing new rows with the saved model is
+        exactly what a fresh build computes. Works on both index shapes
+        (built: __hashes/__features; loaded: b0..bN bucket columns). LSH
+        keeps no corpus count, so its tail folds at the row floor."""
+        from pyspark.ml.functions import vector_to_array
 
         assert self.model is not None and self.indexed is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        survivors = self.indexed.join(
-            latest.select(id_col), id_col, "left_anti"
-        )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version"
-        )
-        hashed = self.model.transform(
-            ups.withColumn("__features", array_to_vector(F.col(vec_col)))
-        )
-        if "__hashes" not in self.indexed.columns:
-            # bucket-materialized shape: extract b{i} from the NEW rows'
-            # hash vectors (self._bucket_col keys off self.indexed and
-            # would wrongly reference the not-yet-existing b{i} here)
-            from pyspark.ml.functions import vector_to_array
 
-            hashed = hashed.select(
+        def enter(ups: DataFrame) -> DataFrame:
+            hashed = self.model.transform(
+                ups.withColumn("__features", array_to_vector(F.col(vec_col)))
+            )
+            if "__hashes" in self.indexed.columns:
+                return hashed
+            # bucket-materialized shape: b{i} from the NEW rows' hashes
+            return hashed.select(
                 *ups.columns,
                 *[
                     vector_to_array(F.col("__hashes")[i])[0]
@@ -1268,8 +1167,10 @@ class LSHIndex:
                     for i in range(self.num_hash_tables)
                 ],
             )
-        self.indexed = survivors.unionByName(
-            hashed.select(*survivors.columns)
+
+        feed, _ = self.cdc.absorb(changes, id_col, enter)
+        (self.indexed,) = self.cdc.fold(
+            0, self.cdc.roll(self.indexed, feed, id_col)
         )
         return self.indexed
 
@@ -1430,12 +1331,6 @@ class IVFPQIndex:
     residual encoding would shrink e and the pool, not change answers).
     Driver state: k centroids + k radii + m·k_sub sub-centroids."""
 
-    # apply_changes materializes its own bounded pieces and folds the
-    # pending tail itself (the IVFIndex contract) — the store sync must
-    # not re-checkpoint the whole encoded table after every bounded
-    # batch (r12 verdict, next-round #5)
-    manages_materialization = True
-
     def __init__(
         self,
         n_clusters: int = 16,
@@ -1450,13 +1345,14 @@ class IVFPQIndex:
         self.encoded: DataFrame | None = None
         # measured nprobe → recall@k (same contract as IVFIndex)
         self._recall_curve: dict[int, float] | None = None
-        # pending-tail CDC state (apply_changes, the IVFIndex fold)
-        self._tail_syncs = 0
-        self._tail_rows = 0
 
     @property
     def n_clusters(self) -> int:
         return self.ivf.n_clusters
+
+    @property
+    def cdc(self) -> PendingTail:
+        return self.ivf.cdc
 
     def build(
         self, df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
@@ -1486,7 +1382,6 @@ class IVFPQIndex:
         encoded_new = self.pq.encode(assigned, vec_col=vec_col)
         # one job: count + grow-only radius update over the bounded batch
         n_new = self.ivf._absorb_batch_stats(encoded_new, vec_col)
-        self.last_applied_upserts = n_new
         assert self.encoded is not None
         self.encoded = self.encoded.unionByName(
             encoded_new.select(*self.encoded.columns)
@@ -1526,85 +1421,13 @@ class IVFPQIndex:
         self, changes: DataFrame, vec_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> DataFrame:
-        """CDC maintenance through the composed layout (the IVFIndex.
-        apply_changes contract): latest event per id wins over the bounded
-        feed, changed ids retire via one anti-join (broadcast while the
-        feed is provably small, AQE-sized above the bound), upserts
-        re-enter through the assign+encode path (existing centroids and
-        codebooks — no refit). Exactness is unconditional, as with add():
-        errors are computed fresh per re-encoded vector; only pruning
-        quality drifts, tracked by the W11 counter.
-
-        Job economics mirror IVFIndex.apply_changes: ONE lazy
-        localCheckpoint over (encoded upserts ∪ delete events) whose
-        materializing action is the stats aggregate — radius growth (from
-        the assignment matmul's __cdist), upsert count, and feed size in
-        one job — then a pending-tail composition that folds at 20% drift
-        or 8 syncs, so per-sync cost is O(feed), not O(index)."""
-        from pyspark.sql.window import Window as _W
-
-        assert self.encoded is not None and self.ivf.centroids is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        cols = self.encoded.columns
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        """CDC maintenance through the composed layout: the IVF roll-forward
+        with the EXISTING codebooks encoding the upserts. Exactness is
+        unconditional, as with add(): errors are computed fresh per
+        re-encoded vector; only pruning quality drifts (W11 counter)."""
+        self.indexed = self.ivf.apply_changes(
+            changes, vec_col=vec_col, id_col=id_col, encode=self.pq.encode
         )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version", "cluster_id"
-        )
-        encoded_new = self.pq.encode(
-            self.ivf._assign(ups, vec_col, with_dist=True), vec_col
-        )
-        dels = (
-            latest.filter(F.col("change_type") == "delete")
-            .drop("change_type", "write_version", "cluster_id")
-            .withColumn("cluster_id", F.lit(None).cast("int"))
-            .withColumn("__cdist", F.lit(None).cast("double"))
-            .withColumn(
-                "pq_codes", F.lit(None).cast("array<int>")
-            )
-            .withColumn("pq_err", F.lit(None).cast("double"))
-        )
-        feed = encoded_new.unionByName(dels).localCheckpoint(eager=False)
-        stats_rows = (
-            feed.groupBy("cluster_id")
-            .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-            .collect()
-        )
-        n_new = 0
-        n_del = 0
-        for r in stats_rows:
-            if r.cluster_id is None:
-                n_del += int(r.n)
-                continue
-            n_new += int(r.n)
-            if (
-                self.ivf._radii is not None
-                and r.radius is not None
-                and float(r.radius) > self.ivf._radii[int(r.cluster_id)]
-            ):
-                self.ivf._radii[int(r.cluster_id)] = float(r.radius)
-        self.last_applied_upserts = n_new
-        ids = feed.select(id_col)
-        if n_new + n_del <= IVFIndex.BROADCAST_FEED_ROWS:
-            ids = F.broadcast(ids)
-        merged = self.encoded.join(ids, id_col, "left_anti").unionByName(
-            feed.filter(F.col("cluster_id").isNotNull()).select(*cols)
-        )
-        self.encoded = merged
-        self.ivf.indexed = merged
-        self.pq.encoded = merged
-        self.ivf._added_count += n_new
-        self.ivf._counts = None
-        self._tail_syncs += 1
-        self._tail_rows += n_new
-        base = max(1024, self.ivf._built_count + self.ivf._added_count)
-        if self._tail_syncs >= 8 or self._tail_rows >= 0.2 * base:
-            self.indexed = self.encoded.localCheckpoint()
-            self._tail_syncs = 0
-            self._tail_rows = 0
         return self.encoded
 
     def save(self, path: str) -> None:
@@ -2002,10 +1825,10 @@ def resync_index_from_snapshot(
 
     Expressed as one synthetic CDC feed through the index's own
     `apply_changes` — the same maintenance kernel serves catch-up and
-    incremental, for any family that speaks the feed (IVF, IVF+PQ, LSH):
-    every live row as an upsert (retire-and-reassign) plus a delete for
-    every indexed id the snapshot no longer holds. One snapshot scan +
-    one anti-join of the index's id column; no refit. Afterwards the
+    incremental for every family (IVF, IVF+PQ, LSH, graph): every live
+    row as an upsert (retire-and-reassign) plus a delete for every served
+    id the snapshot no longer holds. One snapshot scan + one anti-join of
+    the index's id column; no refit. Afterwards the
     drift counters restart at the snapshot size — a resync is a fresh
     baseline, not drift (without the reset, absorbing the snapshot as
     adds trips is_rebuild_required() permanently on every floor-forced
@@ -2014,9 +1837,12 @@ def resync_index_from_snapshot(
         vec_col
     ]
     wv = int(write_version)
+    served = index.indexed.select(id_col)
+    pending = getattr(index, "pending", None)  # the graph's flat tail
+    if pending is not None:
+        served = served.unionByName(pending.select(id_col))
     stale = (
-        index.indexed.select(id_col)
-        .join(snap.select(id_col), id_col, "left_anti")
+        served.join(snap.select(id_col), id_col, "left_anti")
         .select(
             F.col(id_col),
             F.lit(None).cast(vec_type).alias(vec_col),
@@ -2027,9 +1853,7 @@ def resync_index_from_snapshot(
     index.apply_changes(snap.unionByName(stale), vec_col=vec_col, id_col=id_col)
     note = getattr(index, "note_full_resync", None)
     if note is not None:
-        # apply_changes counted the snapshot's upserts already — reuse it
-        n_live = getattr(index, "last_applied_upserts", None)
-        note(n_live if n_live is not None else snap.count())
+        note(index.cdc.last_upserts)
     # a full resync is also the natural stats-refresh point: grow-only
     # radii never shrink, so restore tightness while the corpus is in hand
     refresh = getattr(index, "refresh_stats", None)
@@ -2097,28 +1921,19 @@ class NamespaceIndexFamily:
         isolation of maintenance, unlike the reference's rebuild which
         drops every other namespace's index (the documented
         query_processor.py:58-61 bug we do not replicate)."""
-        from pyspark.sql.window import Window as _W
-
         for ns in [r[0] for r in changes.select(ns_col).distinct().collect()]:
             sub = changes.filter(F.col(ns_col) == ns).drop(ns_col)
             idx = self.members.get(ns)
             if idx is None:
                 idx = self.factory()
                 # a brand-new member builds from the feed's LIVE state:
-                # latest event per id wins (same collapse apply_changes
-                # performs), and ids whose latest event is a delete never
-                # enter — a feed can legitimately carry
+                # latest event per id wins, and ids whose latest event is a
+                # delete never enter — a feed can legitimately carry
                 # upsert(x,v1) → upsert(x,v2) → delete(y)
-                w = _W.partitionBy(id_col).orderBy(
-                    F.col("write_version").desc()
-                )
                 live = (
-                    sub.withColumn("__rn", F.row_number().over(w))
-                    .filter(
-                        (F.col("__rn") == 1)
-                        & (F.col("change_type") == "upsert")
-                    )
-                    .drop("__rn", "change_type", "write_version")
+                    latest_per_key(sub, [id_col], F.col("write_version").desc())
+                    .filter(F.col("change_type") == "upsert")
+                    .drop("change_type", "write_version")
                 )
                 if not live.limit(1).count():
                     # every id's latest event is a delete: nothing live to

@@ -70,6 +70,7 @@ from mlvectordb_spark.functions.localdf import local_rows_df
 
 from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
 from mlvectordb_spark.operators.ann import IVFIndex, per_key_topk
+from mlvectordb_spark.operators.cdc import PendingTail
 from mlvectordb_spark.operators.knn import knn
 
 _SCORE_DECIMALS = 4
@@ -616,6 +617,7 @@ class GraphANNIndex:
         # a recall target without re-measuring — the graph's dial is ef
         # where IVF's is nprobe, same calibration contract
         self._recall_curve: dict[int, float] | None = None
+        self.cdc = PendingTail()
 
     # ---------------------------------------------------------------- build
 
@@ -649,6 +651,7 @@ class GraphANNIndex:
         self._built_count = df.count()
         self._added_count = 0
         self._uncounted_adds = None
+        self.cdc = PendingTail()
         return self.indexed
 
     def _graph_stage(self, assigned: DataFrame) -> DataFrame:
@@ -1227,57 +1230,27 @@ class GraphANNIndex:
         vec_col: str | None = None,
         id_col: str | None = None,
     ) -> DataFrame:
-        """CDC maintenance (`VectorStore.changes_since` shape): latest
-        event per id wins; changed/deleted ids anti-join out of BOTH
-        segments (a removed graph node's dangling edges are skipped by id
-        at traversal time); upserts append to the pending tail. Upserts
-        AND deletes count toward drift — deletes also erode graph
-        navigability, exactly the reference's deleted/total counter
-        (index.py:85-89)."""
-        from pyspark.sql.window import Window as _W
-
+        """CDC maintenance (the `PendingTail` contract): changed/deleted ids
+        retire from BOTH segments (a removed graph node's dangling edges
+        are skipped by id at traversal time); upserts append to the
+        pending tail. Upserts AND deletes count toward drift — deletes
+        also erode graph navigability, exactly the reference's
+        deleted/total counter (index.py:85-89)."""
         icol = id_col or self._id_col
         assert self.indexed is not None, "build() first"
-        w = _W.partitionBy(icol).orderBy(F.col("write_version").desc())
-        # LAZY checkpoint of the bounded deduped feed, materialized by the
-        # counts job just below (no extra job): the pending tail and the
-        # retire anti-joins must not lazily reference the store's parquet/
-        # tombstone files — the store sync re-checkpoints only `indexed`,
-        # so an un-checkpointed feed inside `pending` would dangle once
-        # compaction rewrites those files (r13 audit of the graph family).
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        ).localCheckpoint(eager=False)
-        touched = latest.select(icol)
-        self.indexed = self.indexed.join(touched, icol, "left_anti")
-        if self.pending is not None:
-            self.pending = self.pending.join(touched, icol, "left_anti")
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version"
+        feed, _ = self.cdc.absorb(
+            changes, icol, lambda ups: ups.select(*(self._data_cols or ups.columns))
         )
-        cols = self._data_cols or ups.columns
-        ups = ups.select(*cols)
-        # ONE count job for the whole feed (total drives drift, upserts
-        # drive the resync baseline) instead of the two separate counts
-        # the r8 verdict flagged on the serving maintenance path
-        counts = latest.agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count(
-                F.when(F.col("change_type") == "upsert", F.lit(1))
-            ).alias("n_up"),
-        ).head()
-        n_total, n_up = int(counts.n_total), int(counts.n_up)
-        if n_up:
-            self.pending = (
-                ups if self.pending is None
-                else self.pending.unionByName(ups)
-            )
-        # consumed by resync_index_from_snapshot to size the fresh drift
-        # baseline without re-counting the snapshot (IVF protocol parity)
-        self.last_applied_upserts = n_up
-        self._added_count += n_total
+        indexed = self.cdc.retire(self.indexed, feed, icol)
+        pending = self.pending
+        if pending is not None:
+            pending = self.cdc.roll(pending, feed, icol)
+        elif self.cdc.last_upserts:
+            pending = self.cdc.entering(feed)
+        self._added_count += self.cdc.last_events
+        self.indexed, self.pending = self.cdc.fold(
+            self._built_count + self._added_count, indexed, pending
+        )
         return self.indexed
 
     def _settle_drift(self) -> None:
@@ -1315,7 +1288,9 @@ class GraphANNIndex:
         live = self.indexed.drop("neighbors", "is_entry", "block_id")
         if self.pending is not None:
             live = live.unionByName(self.pending.select(*live.columns))
-        return self.build(live, vec_col=self._vec_col, id_col=self._id_col)
+        self.build(live, vec_col=self._vec_col, id_col=self._id_col)
+        self.indexed = self.indexed.localCheckpoint()
+        return self.indexed
 
     # ---------------------------------------------------------- persistence
 

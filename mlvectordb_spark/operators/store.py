@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from mlvectordb_spark.functions.localdf import local_rows_df
 
 from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
+from mlvectordb_spark.operators.cdc import latest_per_key
 from mlvectordb_spark.schema import STORAGE_SCHEMA, VECTOR_SCHEMA
 
 DEFAULT_NAMESPACE = "default"
@@ -342,14 +343,10 @@ class VectorStore:
         if not dirty:
             return raw
         is_dirty = F.col("namespace").isin(dirty)
-        w = SqlWindow.partitionBy("id", "namespace").orderBy(
-            F.coalesce(F.col("write_version"), F.lit(0)).desc()
-        )
-        deduped = (
-            raw.filter(is_dirty)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        deduped = latest_per_key(
+            raw.filter(is_dirty),
+            ["id", "namespace"],
+            F.coalesce(F.col("write_version"), F.lit(0)).desc(),
         )
         return raw.filter(~is_dirty).unionByName(deduped)
 
@@ -512,14 +509,15 @@ class VectorStore:
                     F.lit(0).alias("__kind"),
                 )
             )
-        w = SqlWindow.partitionBy("id", "namespace").orderBy(
-            wv.desc(), F.col("__kind").asc()
-        )
         return (
-            events.filter(wv <= version)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (F.col("__kind") == 1))
-            .drop("__rn", "__kind", "write_version")
+            latest_per_key(
+                events.filter(wv <= version),
+                ["id", "namespace"],
+                wv.desc(),
+                F.col("__kind").asc(),
+            )
+            .filter(F.col("__kind") == 1)
+            .drop("__kind", "write_version")
         )
 
     def changes_since(self, version: int) -> DataFrame:
@@ -799,12 +797,7 @@ class VectorStore:
                 order = [F.col(order_col).desc()]
             else:
                 order = [F.monotonically_increasing_id().desc()]
-            w = SqlWindow.partitionBy("namespace", "id").orderBy(*order)
-            shaped = (
-                shaped.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            shaped = latest_per_key(shaped, ["namespace", "id"], *order)
         if order_col:
             shaped = shaped.drop(order_col)
         if check_dims:
@@ -1431,14 +1424,10 @@ class VectorStore:
         seeded from a full snapshot converges to the primary's state after
         each delta, and re-applying a delta is idempotent (latest-wins).
         Returns the number of events applied."""
-        feed = self.spark.read.parquet(backup_path)
-        w = SqlWindow.partitionBy("id", "namespace").orderBy(
-            F.col("write_version").desc()
-        )
-        latest = (
-            feed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        latest = latest_per_key(
+            self.spark.read.parquet(backup_path),
+            ["id", "namespace"],
+            F.col("write_version").desc(),
         )
         # metadata_json rides along verbatim (shape_ingest_df keeps a
         # precomputed column): re-deriving it from the flat map diverges
@@ -1493,16 +1482,17 @@ class VectorStore:
 
         The attached index's `.indexed` plan must NOT lazily reference the
         store's own parquet files (compaction rewrites them): attach a
-        SAVED/loaded index or a checkpointed one. `build_index` and every
-        `sync_indexes` cycle checkpoint automatically; only a hand-built
-        index derived from `store.df()` needs the caller's care.
+        SAVED/loaded index or a checkpointed one. `build_index` checkpoints
+        automatically and every family's `apply_changes` detaches its feed
+        (`operators/cdc.PendingTail`); only a hand-built index derived from
+        `store.df()` needs the caller's care.
 
         `as_of_version` is the store version the supplied index actually
         reflects (default: the current version — right when the index was
         just built from current state). Attaching an index built from an
         OLDER snapshot with the honest version makes auto-mode detect the
         gap (and sync_indexes close it via the CDC feed) instead of
-        silently serving the stale index as fresh (round-6 ADVICE)."""
+        silently serving the stale index as fresh."""
         if space not in ("l2", "cosine"):
             raise ValueError(f"unsupported index space {space!r}")
         cur = self.current_version()
@@ -1573,8 +1563,7 @@ class VectorStore:
         idx.build(slice_df, vec_col="values", id_col="id")
         # materialize: the built plan lazily scans the store's parquet
         # files, which the next compaction physically deletes — a served
-        # index must not reference store files (the streaming ingest's
-        # per-batch checkpoint, applied at build and every sync)
+        # index must not reference store files
         idx.indexed = idx.indexed.localCheckpoint()
         self.attach_index(
             namespace, idx, vec_col="values", id_col="id", space=space
@@ -1623,7 +1612,7 @@ class VectorStore:
             # without paying an empty-feed apply + checkpoint. The
             # tracker alone is NOT enough — it is a lower bound, blind
             # to other writers — so any unaccounted version falls
-            # through to the real feed check below (round-6 ADVICE).
+            # through to the real feed check below.
             self._serving_synced_at[ns] = v1
             return
         try:
@@ -1662,14 +1651,6 @@ class VectorStore:
         except ValueError:
             self._resync_index(ns, index, vec_col, id_col, space)
             v1 = self.current_version()
-        if not getattr(index, "manages_materialization", False):
-            # cut the union/anti-join lineage AND detach the plan from the
-            # store's parquet files before compaction can delete them.
-            # Indexes that manage their own pending tail (IVF) already
-            # checkpointed the bounded pieces inside apply_changes — the
-            # blanket re-checkpoint here was an O(index) materialization
-            # per bounded sync batch.
-            index.indexed = index.indexed.localCheckpoint()
         self._serving_synced_at[ns] = v1
 
     def _resync_index(

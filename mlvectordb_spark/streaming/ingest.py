@@ -99,14 +99,10 @@ def apply_mutation_batch(store: VectorStore, batch_df: DataFrame) -> None:
     (bounded by the trigger interval); `latest` is unique per key, so the
     upsert skips the in-batch collapse. Shared by both ingest loops."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as _W
 
-    w = _W.partitionBy("id", "namespace").orderBy(F.col("seq").desc())
-    latest = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    from mlvectordb_spark.operators.cdc import latest_per_key
+
+    latest = latest_per_key(batch_df, ["id", "namespace"], F.col("seq").desc())
     ups = latest.filter(F.col("op") == "upsert").select(
         "id", "values", "namespace"
     )
@@ -131,7 +127,7 @@ def start_indexed_ingest(
     store WITH a continuously-fresh serving index: each micro-batch
     applies its upserts/deletes through the store's versioned write paths,
     then rolls the index forward from the store's OWN CDC feed
-    (`changes_since` → `IVFIndex.apply_changes`) — the index never reads
+    (`changes_since` → the index's `apply_changes`) — the index never reads
     the mutation stream directly, so any writer (REST, batch, other
     streams) funnels through the same sync and the index converges on the
     store's truth.
@@ -139,9 +135,9 @@ def start_indexed_ingest(
     Replay safety: a replayed batch re-appends the same ids at a higher
     write_version (latest-wins collapses them) and re-applies a feed that
     retires-then-re-adds the same ids in the index — both idempotent in
-    the read view. The index's union/anti-join lineage is truncated with a
-    localCheckpoint per batch, so a long-running stream holds a bounded
-    plan (the `operators/components.py` iteration lesson).
+    the read view. The index family's pending-tail fold
+    (`operators/cdc.PendingTail`) bounds its union/anti-join lineage, so a
+    long-running stream holds a bounded plan at O(batch) cost per batch.
 
     Intra-batch order: the stream's `seq` field decides — only the LATEST
     op per (id, namespace) applies, so delete(k) then upsert(k) in one
@@ -196,7 +192,6 @@ def start_indexed_ingest(
                 # floor raced past v0 between the check and the read
                 resync_index(store, index, vec_col=vec_col, id_col=id_col)
         bookmark["v"] = v1
-        index.indexed = index.indexed.localCheckpoint()
 
     return (
         stream.writeStream.foreachBatch(write_batch)
@@ -223,7 +218,6 @@ def start_store_ingest(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_mutation_batch(store, batch_df)
-        # sync_indexes checkpoints each member's lineage internally
         store.sync_indexes()
 
     return (

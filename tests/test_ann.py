@@ -693,6 +693,49 @@ def test_lsh_apply_changes_cdc_exact(spark, emb, qvec, tmp_path):
     assert got_loaded == want
 
 
+def test_lsh_apply_changes_detaches_from_feed_files(spark, emb, qvec, tmp_path):
+    """After apply_changes the LSH plan must not read the feed's source
+    files: a feed read from a parquet directory that is then deleted (as a
+    compaction deletes store files) leaves search_exact answering exactly."""
+    import shutil
+
+    base = emb.filter(F.col("vec_id") < 200).select(
+        "vec_id", "embedding"
+    ).localCheckpoint()
+    moved = base.filter(F.col("vec_id") % 7 == 0).select(
+        "vec_id",
+        F.transform("embedding", lambda x: x * F.lit(3.0)).alias("embedding"),
+    )
+    feed_dir = str(tmp_path / "feed")
+    moved.select(
+        "vec_id", "embedding",
+        F.lit("upsert").alias("change_type"), F.lit(2).alias("write_version"),
+    ).unionByName(
+        base.filter(F.col("vec_id") % 11 == 0).select(
+            "vec_id", "embedding",
+            F.lit("delete").alias("change_type"), F.lit(3).alias("write_version"),
+        )
+    ).write.parquet(feed_dir)
+    current = base.filter(F.col("vec_id") % 11 != 0).filter(
+        F.col("vec_id") % 7 != 0
+    ).unionByName(moved.filter(F.col("vec_id") % 11 != 0))
+    want = [
+        (r.vec_id, round(r.score, 4))
+        for r in knn(current, qvec, 10, metric="l2").collect()
+    ]
+
+    idx = LSHIndex(bucket_length=0.5, num_hash_tables=4, seed=42)
+    idx.build(base)
+    idx.apply_changes(spark.read.parquet(feed_dir))
+    shutil.rmtree(feed_dir)
+    assert idx.indexed.inputFiles() == []
+    got = [
+        (r.vec_id, round(r.score, 4))
+        for r in idx.search_exact(qvec, 10).collect()
+    ]
+    assert got == want
+
+
 def test_namespace_family_save_load_roundtrip(spark, tmp_path):
     """Q23 at the family grain: per-namespace members persist and reload
     (IVF members via their cluster-partitioned layout), and a reloaded

@@ -882,21 +882,51 @@ def test_auto_mode_never_serves_stale_index(spark, tmp_path):
     assert store.find_similar(q, 1, metric="l2")[0]["id"] == "fresh"
 
 
-def test_indexed_serving_survives_compaction(spark, tmp_path):
-    """Review r6: the attached index must not reference the store's parquet
-    files — a routine auto-compaction (default 20% trigger) physically
-    rewrites the partition; the serving read must keep working through
-    build → churn → compaction → sync → search."""
-    from mlvectordb_spark.operators.ann import IVFIndex
+def _serving_families():
+    from mlvectordb_spark.operators.ann import IVFIndex, IVFPQIndex, LSHIndex
+    from mlvectordb_spark.operators.graph_ann import GraphANNIndex
 
-    store = VectorStore(spark, str(tmp_path / "compserve"))  # default 0.2
+    return {
+        "ivf": lambda: IVFIndex(n_clusters=2, seed=1),
+        "ivfpq": lambda: IVFPQIndex(n_clusters=2, m=2, k_sub=4, seed=1),
+        "lsh": lambda: LSHIndex(bucket_length=2.0, num_hash_tables=3, seed=1),
+        "graph": lambda: GraphANNIndex(n_blocks=2, m=4, ef_construction=16, seed=1),
+    }
+
+
+def _compaction_store(spark, path, factory):
+    store = VectorStore(spark, path)  # default 0.2 compaction trigger
     store.upsert_df(
         spark.createDataFrame(
             [(f"k{i}", [float(i), 1.0], "default") for i in range(30)],
             "id string, values array<float>, namespace string",
         )
     )
-    store.build_index("default", factory=lambda: IVFIndex(n_clusters=2, seed=1))
+    store.build_index("default", factory=factory)
+    return store
+
+
+def _assert_no_store_files(store, idx):
+    """The served plans must not read the store's own files."""
+    for df in (idx.indexed, getattr(idx, "pending", None)):
+        if df is not None:
+            assert not [f for f in df.inputFiles() if store.path in f]
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph"])
+def test_indexed_serving_survives_compaction(spark, tmp_path, family):
+    """The attached index must not reference the store's parquet files — a
+    routine auto-compaction (default 20% trigger) physically rewrites the
+    partition; the serving read must keep working through build → churn →
+    compaction → sync (floor moved: full resync) → search."""
+    store = _compaction_store(
+        spark, str(tmp_path / "compserve"), _serving_families()[family]
+    )
+    # an id that enters through a CDC sync (graph: its pending tail) and
+    # is deleted again before the compaction erases the delete event
+    store.upsert_by_id([{"id": "tmp", "values": [50.0, 50.0]}])
+    store.sync_indexes()
+    store.delete(["tmp"])
     # churn >20% of the namespace: overwrites + deletes fire compaction
     store.upsert_df(
         spark.createDataFrame(
@@ -912,12 +942,89 @@ def test_indexed_serving_survives_compaction(spark, tmp_path):
     )
     assert store.history_floor() > 0, "compaction should have fired"
     store.sync_indexes()  # floor moved → full resync path
+    idx = store.attached_index("default")
+    _assert_no_store_files(store, idx)
     got = store.find_similar([3.0, 9.0], 3, metric="l2", mode="indexed")
     assert got[0]["id"] == "k3" and round(got[0]["values"][1]) == 9
     assert all(not h["id"].startswith("k2") or h["id"] == "k2" for h in got)
-    # resync is a fresh baseline, not drift (review finding #4)
-    idx = store.attached_index("default")
-    assert not idx.is_rebuild_required()
+    far = store.find_similar([50.0, 50.0], 1, metric="l2", mode="indexed")
+    assert far[0]["id"] == "k29", "a deleted tail row must not survive a resync"
+    if family == "graph":
+        # the resync re-entry is a rebuild: it must end materialized, with
+        # no lazy graph-build stage left in the plan
+        assert idx.pending is None
+        plan = idx.indexed._jdf.queryExecution().optimizedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, plan
+    if family != "lsh":  # LSH cannot drift
+        # resync is a fresh baseline, not drift
+        assert not idx.is_rebuild_required()
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph"])
+def test_incremental_sync_survives_compaction(spark, tmp_path, family):
+    """Incremental case: a CDC sync below the compaction trigger, then an
+    explicit `compact` rewrites the partition the feed was read from, then
+    the served index answers from its own materialized state."""
+    store = _compaction_store(
+        spark, str(tmp_path / "compinc"), _serving_families()[family]
+    )
+    store.upsert_by_id(
+        [{"id": "k3", "values": [3.0, 9.0]}, {"id": "fresh", "values": [3.5, 9.0]}]
+    )
+    store.delete_df(
+        spark.createDataFrame([("k4", "default")], "id string, namespace string")
+    )
+    floor = store.history_floor()
+    store.sync_indexes()
+    assert store.history_floor() == floor, "the sync must be incremental"
+    _assert_no_store_files(store, store.attached_index("default"))
+    store.compact("default")
+    got = store.find_similar([3.0, 9.0], 3, metric="l2", mode="indexed")
+    assert [h["id"] for h in got] == ["k3", "fresh", "k2"]
+    assert round(got[0]["values"][1]) == 9
+    assert "k4" not in {h["id"] for h in store.find_similar(
+        [4.0, 1.0], 3, metric="l2", mode="indexed")}
+
+
+# Spark jobs per `_sync_namespace` over 9 sync cycles. Each family rolls
+# forward through the shared PendingTail: 3 jobs per sync (the feed window's
+# shuffle, then the shuffle and result of the one stats aggregate that
+# materializes the feed); the 8th sync folds the chain (one job per
+# broadcast retire in it + the checkpoint). Graph folds two chains: the
+# graph table and its pending tail.
+_FOLD = {"ivf": 12, "ivfpq": 12, "lsh": 12, "graph": 20}
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph"])
+def test_jobs_per_sync_pinned(spark, tmp_path, family):
+    rng = np.random.default_rng(0)
+    X = rng.normal(size=(2000, 16))
+    store = VectorStore(spark, str(tmp_path / "jobs"))
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k{i}", [float(x) for x in X[i]], "default") for i in range(2000)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    store.build_index("default", factory=_serving_families()[family])
+    sc = spark.sparkContext
+    counts = []
+    for cycle in range(9):
+        store.upsert_by_id(
+            [
+                {"id": f"k{i}", "values": [float(x) for x in rng.normal(size=16)]}
+                for i in rng.choice(2000, 8, replace=False)
+            ]
+        )
+        group = f"sync-jobs-{family}-{cycle}"
+        sc.setJobGroup(group, group)
+        try:
+            store._sync_namespace("default")
+        finally:
+            sc._jsc.clearJobGroup()
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [3] * 7 + [_FOLD[family], 3], counts
 
 
 def test_family_lazy_create_collapses_feed(spark, tmp_path):
