@@ -21,6 +21,7 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import functions as F
 
+from mlvectordb_spark.operators.knn import knn
 from mlvectordb_spark.operators.store import VectorStore
 from mlvectordb_spark.plans.explain import explain_query
 from mlvectordb_spark.plans.stats import QueryStatistics
@@ -271,14 +272,12 @@ class EngineService:
     def explain(
         self, query: Sequence[float], top_k: int, namespace: str, metric: str
     ) -> dict[str, Any]:
-        """Declared Q16: real Catalyst plan in the declared response shape."""
-        from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
-
+        """Declared Q16: real Catalyst plan in the declared response shape —
+        the plan of the exact scan `search` runs."""
         df = self.store.df().filter(F.col("namespace") == namespace)
-        qlit = F.array(*[F.lit(float(x)) for x in query])
-        score = metric_expr(F.col("values"), qlit, metric)
-        ordered = score.asc() if metric_ascending(metric) else score.desc()
-        plan_df = df.withColumn("score", score).orderBy(ordered).limit(top_k)
+        plan_df = knn(
+            df, query, top_k, vec_col="values", id_col="id", metric=metric
+        )
         out = explain_query(plan_df)
         out.pop("raw", None)
         return out

@@ -33,9 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mlvectordb_spark.functions.localdf import local_rows_df
-
+from mlvectordb_spark.functions.vector import metric_expr
 from mlvectordb_spark.operators.cdc import PendingTail, latest_per_key
-from mlvectordb_spark.operators.knn import knn
+from mlvectordb_spark.operators.knn import knn, rank_order
 
 # fan-out for two-phase per-key top-k: phase 1 runs over key×salt groups
 # so a small query batch doesn't funnel the whole candidate set into
@@ -216,6 +216,58 @@ def per_key_topk(
         partial.withColumn("__rn", F.row_number().over(w2))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
+    )
+
+
+def _probe_join(
+    table: DataFrame, queries: DataFrame, k: int, probes, query_vec: str,
+    query_id: str, vec_col: str, id_col: str, pre_filter, score_decimals: int,
+) -> DataFrame:
+    """The IVF-family batch probe-join. Each query's probe clusters
+    (`probes` over its float64 vector: certified or fixed-nprobe) union
+    into ONE partition-pruned scan of `table`; a broadcast
+    (query_id, cluster_id) pair table restricts each query to ITS probes,
+    so each candidate row joins only the queries that probe its cluster.
+    Query vectors drive driver-side probe math, bounded by the serving
+    contract."""
+    qrows = queries.select(query_id, query_vec).collect()
+    pairs = [
+        (r[query_id], int(c))
+        for r in qrows
+        for c in probes(np.asarray(r[query_vec], dtype=np.float64))
+    ]
+    probe_df = local_rows_df(
+        table.sparkSession, pairs, f"{query_id} long, cluster_id int"
+    )
+    cand = table.filter(
+        F.col("cluster_id").isin(sorted({c for _, c in pairs}))
+    )
+    if pre_filter is not None:
+        cand = cand.filter(pre_filter)
+    qv = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
+    return _rank_per_query(
+        cand.join(F.broadcast(probe_df), "cluster_id"),
+        qv, k, query_id, vec_col, id_col, score_decimals,
+    )
+
+
+def _rank_per_query(
+    cand: DataFrame, qv: DataFrame, k: int, query_id: str, vec_col: str,
+    id_col: str, score_decimals: int,
+) -> DataFrame:
+    """Exact rounded l2 of every (query, candidate) row — the bounded
+    query side `qv` (query_id, __qvec) broadcasts — then the per-query
+    top-k in `rank_order`."""
+    scored = cand.join(F.broadcast(qv), query_id).select(
+        F.col(query_id),
+        F.col(id_col),
+        F.round(
+            metric_expr(vec_col, "__qvec", "l2"), score_decimals
+        ).alias("score"),
+    )
+    return per_key_topk(
+        scored, query_id, k, rank_order(F.col("score"), F.col(id_col), "l2"),
+        salt_on=id_col,
     )
 
 
@@ -713,49 +765,14 @@ class IVFIndex:
         union of probed clusters (partition pruning on the saved layout)
         and each candidate row joins only the queries that probe its
         cluster."""
-        from mlvectordb_spark.functions.vector import metric_expr
-
         assert self.indexed is not None
-        spark = self.indexed.sparkSession
         radii, counts = self.cluster_stats(vec_col)
         if pre_filter is not None:
             counts = self._filtered_counts(pre_filter)
-        qrows = queries.select(query_id, query_vec).collect()
-        pairs = [
-            (r[query_id], int(c))
-            for r in qrows
-            for c in self._certified_probes(
-                np.asarray(r[query_vec], dtype=np.float64), k, radii, counts
-            )
-        ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
-        )
-        probed_clusters = sorted({c for _, c in pairs})
-        cand = self.indexed.filter(F.col("cluster_id").isin(probed_clusters))
-        if pre_filter is not None:
-            cand = cand.filter(pre_filter)
-        qv = queries.select(
-            F.col(query_id), F.col(query_vec).alias("__qvec")
-        )
-        scored = (
-            cand.join(F.broadcast(probe_df), "cluster_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                F.col(query_id),
-                F.col(id_col),
-                F.round(
-                    metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                    score_decimals,
-                ).alias("score"),
-            )
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return _probe_join(
+            self.indexed, queries, k,
+            lambda q: self._certified_probes(q, k, radii, counts),
+            query_vec, query_id, vec_col, id_col, pre_filter, score_decimals,
         )
 
     def knn_join(
@@ -782,45 +799,11 @@ class IVFIndex:
         calibration curve (measure_recall_curve / nprobe_for_recall)
         prices the dial, so target-recall BATCH serving rides this via
         `VectorStore.find_similar_batch(mode="approx", target_recall=)`."""
-        from mlvectordb_spark.functions.vector import metric_expr
-
         assert self.indexed is not None
-        spark = self.indexed.sparkSession
-        qrows = queries.select(query_id, query_vec).collect()
-        pairs = [
-            (r[query_id], int(c))
-            for r in qrows
-            for c in self._probe_clusters(
-                np.asarray(r[query_vec], dtype=np.float64), nprobe
-            )
-        ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
-        )
-        cand = self.indexed.filter(
-            F.col("cluster_id").isin(sorted({c for _, c in pairs}))
-        )
-        if pre_filter is not None:
-            cand = cand.filter(pre_filter)
-        qv = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
-        scored = (
-            cand.join(F.broadcast(probe_df), "cluster_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                F.col(query_id),
-                F.col(id_col),
-                F.round(
-                    metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                    score_decimals,
-                ).alias("score"),
-            )
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return _probe_join(
+            self.indexed, queries, k,
+            lambda q: self._probe_clusters(q, nprobe),
+            query_vec, query_id, vec_col, id_col, pre_filter, score_decimals,
         )
 
     def _probe_clusters(self, qvec, nprobe: int) -> list[int]:
@@ -1647,10 +1630,6 @@ class IVFPQIndex:
         Every query's tau is taken within ITS certified probes, which
         provably contain its true top-k, so the pool bound is global and
         the result equals brute-force exact search (the oracle)."""
-        from pyspark.sql import types as T
-
-        from mlvectordb_spark.functions.vector import metric_expr
-
         assert self.encoded is not None and self.pq.codebooks is not None
         spark = self.encoded.sparkSession
         radii, counts = self.ivf.cluster_stats(vec_col)
@@ -1737,20 +1716,8 @@ class IVFPQIndex:
             ],
             f"{query_id} long, __qvec array<double>",
         )
-        scored = pool.join(F.broadcast(qv), query_id).select(
-            F.col(query_id),
-            F.col(id_col),
-            F.round(
-                metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                score_decimals,
-            ).alias("score"),
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return _rank_per_query(
+            pool, qv, k, query_id, vec_col, id_col, score_decimals
         )
 
     def knn_join(
@@ -1772,43 +1739,11 @@ class IVFPQIndex:
         as `search`: approximation lives only in which clusters are
         probed, so the calibration curve prices it and target-recall
         batch serving works against the PQ family too)."""
-        from mlvectordb_spark.functions.vector import metric_expr
-
         assert self.encoded is not None
-        spark = self.encoded.sparkSession
-        qrows = queries.select(query_id, query_vec).collect()
-        pairs = [
-            (r[query_id], int(c))
-            for r in qrows
-            for c in self.ivf._probe_clusters(r[query_vec], nprobe)
-        ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
-        )
-        cand = self.encoded.filter(
-            F.col("cluster_id").isin(sorted({c for _, c in pairs}))
-        )
-        if pre_filter is not None:
-            cand = cand.filter(pre_filter)
-        qv = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
-        scored = (
-            cand.join(F.broadcast(probe_df), "cluster_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                F.col(query_id),
-                F.col(id_col),
-                F.round(
-                    metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                    score_decimals,
-                ).alias("score"),
-            )
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return _probe_join(
+            self.encoded, queries, k,
+            lambda q: self.ivf._probe_clusters(q, nprobe),
+            query_vec, query_id, vec_col, id_col, pre_filter, score_decimals,
         )
 
 

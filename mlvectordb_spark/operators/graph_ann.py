@@ -67,11 +67,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mlvectordb_spark.functions.localdf import local_rows_df
-
-from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
+from mlvectordb_spark.functions.vector import metric_expr, vector_lit
 from mlvectordb_spark.operators.ann import IVFIndex, per_key_topk
 from mlvectordb_spark.operators.cdc import PendingTail
-from mlvectordb_spark.operators.knn import knn
+from mlvectordb_spark.operators.knn import knn, rank_order
 
 _SCORE_DECIMALS = 4
 
@@ -823,13 +822,6 @@ class GraphANNIndex:
             search_block, schema=out_schema
         )
 
-    def _order(self, score_col, id_col):
-        lead = (
-            score_col.asc() if metric_ascending(self.metric)
-            else score_col.desc()
-        )
-        return [lead, id_col.asc()]
-
     def measure_recall_curve(
         self,
         k: int = 10,
@@ -963,9 +955,7 @@ class GraphANNIndex:
                 "score",
                 F.round(
                     metric_expr(
-                        F.col(vec_col or self._vec_col),
-                        F.array(*[F.lit(float(x)) for x in qvec]),
-                        self.metric,
+                        vec_col or self._vec_col, vector_lit(qvec), self.metric
                     ),
                     _SCORE_DECIMALS,
                 ),
@@ -974,7 +964,7 @@ class GraphANNIndex:
         if result_filter is not None:
             out = out.filter(result_filter)
         return out.orderBy(
-            *self._order(F.col("score"), F.col(icol))
+            *rank_order(F.col("score"), F.col(icol), self.metric)
         ).limit(k)
 
     def search_exact(
@@ -1134,7 +1124,7 @@ class GraphANNIndex:
                     F.col(query_id),
                     F.col(icol),
                     F.round(
-                        metric_expr(F.col(vcol), F.col("__qvec"), metric),
+                        metric_expr(vcol, "__qvec", metric),
                         _SCORE_DECIMALS,
                     ).alias("score"),
                 )
@@ -1144,7 +1134,7 @@ class GraphANNIndex:
             scored = scored.filter(result_filter)
         return per_key_topk(
             scored, query_id, k,
-            self._order(F.col("score"), F.col(icol)),
+            rank_order(F.col("score"), F.col(icol), self.metric),
             salt_on=icol,
         )
 

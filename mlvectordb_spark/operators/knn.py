@@ -31,21 +31,35 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
+from mlvectordb_spark.functions.vector import (
+    metric_ascending,
+    metric_expr,
+    vector_lit,
+)
 
 
-def _query_vector_lit(qvec) -> Column:
-    return F.array(*[F.lit(float(x)) for x in qvec])
-
-
-def _order_cols(score: Column, id_col: Column, metric: str, decimals: int) -> list[Column]:
+def rank_order(score: Column, id_col: Column, metric: str) -> list[Column]:
     """Deterministic ordering: rounded score (direction per metric), then id.
 
-    Rounding before ordering makes top-k boundaries stable across engines
-    whose floating-point fold orders differ in the last ulp."""
-    r = F.round(score, decimals)
-    lead = r.asc() if metric_ascending(metric) else r.desc()
+    Ordering by the ROUNDED score makes top-k boundaries stable across
+    engines whose floating-point fold orders differ in the last ulp."""
+    lead = score.asc() if metric_ascending(metric) else score.desc()
     return [lead, id_col.asc()]
+
+
+def top_per_key(
+    scored: DataFrame, key: str, k: int, id_col: str, metric: str
+) -> DataFrame:
+    """Per-`key` top-k of a frame carrying a rounded `score` column, by
+    `rank_order` — a window over the key."""
+    w = Window.partitionBy(key).orderBy(
+        *rank_order(F.col("score"), F.col(id_col), metric)
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 def knn_df(
@@ -67,14 +81,14 @@ def knn_df(
     if pre_filter is not None:
         df = df.filter(pre_filter)
     q = F.broadcast(query_df.select(F.col(query_vec_col).alias("__qvec")).limit(1))
-    score = metric_expr(F.col(vec_col), F.col("__qvec"), metric)
+    score = metric_expr(vec_col, "__qvec", metric)
     scored = (
         df.crossJoin(q)
         .withColumn("score", F.round(score, score_decimals))
         .drop("__qvec")
     )
     return scored.orderBy(
-        *_order_cols(F.col("score"), F.col(id_col), metric, score_decimals)
+        *rank_order(F.col("score"), F.col(id_col), metric)
     ).limit(k)
 
 
@@ -97,9 +111,9 @@ def knn(
     """
     if pre_filter is not None:
         df = df.filter(pre_filter)
-    score = metric_expr(F.col(vec_col), _query_vector_lit(qvec), metric)
+    score = metric_expr(vec_col, vector_lit(qvec), metric)
     scored = df.withColumn("score", F.round(score, score_decimals))
-    return scored.orderBy(*_order_cols(F.col("score"), F.col(id_col), metric, score_decimals)).limit(k)
+    return scored.orderBy(*rank_order(F.col("score"), F.col(id_col), metric)).limit(k)
 
 
 def range_query(
@@ -116,7 +130,7 @@ def range_query(
     scans and filters in one codegen stage. Distance-like metrics keep
     score <= radius."""
     score = F.round(
-        metric_expr(F.col(vec_col), _query_vector_lit(qvec), metric), score_decimals
+        metric_expr(vec_col, vector_lit(qvec), metric), score_decimals
     )
     cond = score <= F.lit(radius) if metric_ascending(metric) else score >= F.lit(radius)
     return df.withColumn("score", score).filter(cond)
@@ -134,7 +148,7 @@ def threshold_query(
     if metric_ascending(metric):
         raise ValueError("threshold_query is for similarity metrics (cosine/ip)")
     score = F.round(
-        metric_expr(F.col(vec_col), _query_vector_lit(qvec), metric), score_decimals
+        metric_expr(vec_col, vector_lit(qvec), metric), score_decimals
     )
     return df.withColumn("score", score).filter(score >= F.lit(threshold))
 
@@ -186,20 +200,14 @@ def knn_join(
         F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
     )
     score = F.round(
-        metric_expr(F.col(data_vec), F.col("__qvec"), metric), score_decimals
+        metric_expr(data_vec, "__qvec", metric), score_decimals
     )
     joined = data.crossJoin(F.broadcast(q)).select(
         F.col("__qid").alias(query_id),
         F.col(data_id).alias(data_id),
         score.alias("score"),
     )
-    lead = F.col("score").asc() if metric_ascending(metric) else F.col("score").desc()
-    w = Window.partitionBy(query_id).orderBy(lead, F.col(data_id).asc())
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return top_per_key(joined, query_id, k, data_id, metric)
 
 
 def hard_negatives(
@@ -229,7 +237,7 @@ def hard_negatives(
         F.col(label_col).alias("__qlabel"),
     )
     score = F.round(
-        metric_expr(F.col(vec_col), F.col("__qvec"), metric), score_decimals
+        metric_expr(vec_col, "__qvec", metric), score_decimals
     )
     joined = (
         data.crossJoin(F.broadcast(q))
@@ -241,13 +249,7 @@ def hard_negatives(
             score.alias("score"),
         )
     )
-    lead = F.col("score").asc() if metric_ascending(metric) else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col(id_col).asc())
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return top_per_key(joined, "query_id", k, id_col, metric)
 
 
 def contrastive_triplets(
@@ -281,7 +283,7 @@ def contrastive_triplets(
         F.col(label_col).alias("__qlabel"),
     )
     score = F.round(
-        metric_expr(F.col(vec_col), F.col("__qvec"), metric), score_decimals
+        metric_expr(vec_col, "__qvec", metric), score_decimals
     )
     lead_min = metric_ascending(metric)
     scored = (

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mlvectordb_spark.functions.vector import vector_lit
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -83,9 +85,8 @@ def column_cuts(
 def _bin_column(axis: Column, cuts: list[float]) -> Column:
     """Equi-depth bin index: #cuts strictly below the value (codegen'd
     comparison chain over the broadcast cut array; no UDF)."""
-    arr = F.array(*[F.lit(float(x)) for x in cuts])
     return F.aggregate(
-        arr,
+        vector_lit(cuts),
         F.lit(0),
         lambda acc, cut: acc + F.when(axis > cut, 1).otherwise(0),
     )

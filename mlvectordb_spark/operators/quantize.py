@@ -57,13 +57,11 @@ def sq8_codes() -> Column:
 
 
 def sq8_reconstruction() -> Column:
-    """Round-tripped (quantize → dequantize) vector over staged columns."""
-    mn, scale = F.col("__mn"), F.col("__scale")
-    return F.transform(
-        "__v",
-        lambda x: mn
-        + F.when(scale == 0.0, F.lit(0.0)).otherwise(F.round((x - mn) / scale, 0))
-        * scale,
+    """Round-tripped (quantize → dequantize) vector over staged columns.
+    SQL text, so it can be an operand of the `functions/vector` scores."""
+    return F.expr(
+        "transform(__v, __x -> __mn + CASE WHEN __scale = 0D THEN 0D "
+        "ELSE round((__x - __mn) / __scale, 0) END * __scale)"
     )
 
 
@@ -359,13 +357,13 @@ def knn_sq8(
     shuffle; the pool (≥k, constant-sized) is the only intermediate."""
     q = F.broadcast(qdf.select(_dbl(vec_col).alias("__qvec")))
     staged = with_sq8_stage(emb, vec_col).crossJoin(q)
-    approx = l2_sq(sq8_reconstruction(), F.col("__qvec"))
+    approx = l2_sq(sq8_reconstruction(), "__qvec")
     cands = (
         staged.withColumn("__approx", approx)
         .orderBy(F.col("__approx").asc(), F.col(id_col).asc())
         .limit(pool)
     )
-    exact = F.round(l2_sq(F.col("__v"), F.col("__qvec")), 4)
+    exact = F.round(l2_sq("__v", "__qvec"), 4)
     return (
         cands.withColumn("score", exact)
         .orderBy(F.col("score").asc(), F.col(id_col).asc())

@@ -45,13 +45,13 @@ import uuid
 from typing import Any, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import Window as SqlWindow
 from pyspark.sql import functions as F
 
 from mlvectordb_spark.functions.localdf import local_rows_df
 
-from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
+from mlvectordb_spark.functions.vector import metric_expr
 from mlvectordb_spark.operators.cdc import latest_per_key
+from mlvectordb_spark.operators.knn import knn, knn_join, top_per_key
 from mlvectordb_spark.schema import STORAGE_SCHEMA, VECTOR_SCHEMA
 
 DEFAULT_NAMESPACE = "default"
@@ -144,6 +144,20 @@ def shape_ingest_df(
         mj.alias("metadata_json"),
         *[F.col(c) for c in (extra_cols or [])],
     )
+
+
+def _matches(ranked: DataFrame) -> list[dict[str, Any]]:
+    """Collect a ranked (id, values, metadata, score) frame as the
+    serving response."""
+    return [
+        {
+            "id": r.id,
+            "values": list(r.values),
+            "metadata": dict(r.metadata or {}),
+            "score": float(r.score),
+        }
+        for r in ranked.collect()
+    ]
 
 
 class VectorStore:
@@ -1757,16 +1771,7 @@ class VectorStore:
                 ),
                 dial=dial,
             )
-            rows = df.collect()
-            return [
-                {
-                    "id": r.id,
-                    "values": list(r.values),
-                    "metadata": dict(r.metadata or {}),
-                    "score": float(r.score),
-                }
-                for r in rows
-            ]
+            return _matches(df)
         df = self.df().filter(F.col("namespace") == namespace)
         return self._search_frame(
             df, query_values, top_k, metric, metadata_filter
@@ -1893,7 +1898,6 @@ class VectorStore:
         if metadata_filter:
             for mk, mv in metadata_filter.items():
                 ns_df = ns_df.filter(F.col("metadata")[mk] == str(mv))
-        ord_asc = metric_ascending(metric)
         if indexable and mode != "exact":
             index, vec_col, id_col, space = self._serving[namespace]
             if mode == "approx":
@@ -1975,24 +1979,15 @@ class VectorStore:
                     ns_df.join(F.broadcast(hits), "id")
                     .join(F.broadcast(qmap), "__qid")
                 )
-                score = F.round(
-                    metric_expr(F.col("values"), F.col("__qraw"), metric), 4
+                scored = cand.withColumn(
+                    "score", F.round(metric_expr("values", "__qraw", metric), 4)
                 )
-                lead = F.col("score").asc() if ord_asc else F.col("score").desc()
-                w = SqlWindow.partitionBy("query_id").orderBy(
-                    lead, F.col("id").asc()
-                )
-                return (
-                    cand.withColumn("score", score)
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= top_k)
-                    .select("query_id", "id", "score", "values", "metadata")
+                return top_per_key(scored, "query_id", top_k, "id", metric).select(
+                    "query_id", "id", "score", "values", "metadata"
                 )
         # brute-force fallback: ONE broadcast of the bounded query set
         # against the namespace scan (operators/knn.knn_join), then one
         # id-join to re-attach values/metadata
-        from mlvectordb_spark.operators.knn import knn_join
-
         qdf_raw = local_rows_df(self.spark, 
             qrows, "query_id string, __qvec array<float>"
         )
@@ -2160,10 +2155,10 @@ class VectorStore:
         # the ids and push an IN-list predicate into the store scan so
         # parquet row-group stats skip everything but the hit rows —
         # without it the enrichment re-scans the full namespace per query,
-        # the one non-pruned read left on the serving hot path (round-6
-        # verdict #4). The broadcast-join form survives as the fallback
-        # for batch-export-sized k, where inlining tens of thousands of
-        # ids into one In() expression would bloat the plan instead of
+        # the one non-pruned read on the serving hot path. The
+        # broadcast-join form survives as the fallback for
+        # batch-export-sized k, where inlining tens of thousands of ids
+        # into one In() expression would bloat the plan instead of
         # helping the scan.
         hit_ids = [
             str(r[0]) for r in hits.select(F.col(id_col)).collect()
@@ -2185,23 +2180,11 @@ class VectorStore:
         # vectors (the index selected; the store scores) — so even a
         # deliberately as-synced indexed read never pairs a row with a
         # score computed from a superseded vector version
-        from mlvectordb_spark.functions.vector import metric_expr
-
-        qlit = F.array(*[F.lit(float(x)) for x in query_values])
         out_metric = "cosine" if space == "cosine" else "l2"
-        true_score = F.round(
-            metric_expr(F.col("values"), qlit, out_metric), 4
-        )
-        joined = joined.withColumn("score", true_score)
-        if space == "cosine":
-            order = [F.col("score").desc(), F.col("id").asc()]
-        else:
-            order = [F.col("score").asc(), F.col("id").asc()]
-        return (
-            joined.orderBy(*order)
-            .limit(top_k)
-            .select("id", "values", "metadata", "score")
-        )
+        return knn(
+            joined, query_values, top_k, vec_col="values", id_col="id",
+            metric=out_metric,
+        ).select("id", "values", "metadata", "score")
 
     def find_similar_as_of(
         self,
@@ -2243,26 +2226,11 @@ class VectorStore:
         if metadata_filter:
             for k, v in metadata_filter.items():
                 df = df.filter(F.col("metadata")[k] == str(v))
-        qlit = F.array(*[F.lit(float(x)) for x in query_values])
-        # mode parity: the indexed path ranks by the 4-decimal rounded
-        # score with an id-ascending tie-break, so the exact path applies
-        # the SAME convention — auto-mode returns bit-identical results
-        # whether or not it routed through an index (round-6 ADVICE; also
-        # the precision the DuckDB oracles assume).
-        score = F.round(metric_expr(F.col("values"), qlit, metric), 4)
-        ordered = score.asc() if metric_ascending(metric) else score.desc()
-        rows = (
-            df.withColumn("score", score)
-            .orderBy(ordered, F.col("id").asc())
-            .limit(top_k)
-            .collect()
-        )
-        return [
-            {
-                "id": r.id,
-                "values": list(r.values),
-                "metadata": dict(r.metadata or {}),
-                "score": float(r.score),
-            }
-            for r in rows
-        ]
+        # mode parity: the indexed path ranks through the same knn() —
+        # 4-decimal rounded score, id-ascending tie-break — so auto-mode
+        # returns bit-identical results whether or not it routed through
+        # an index (also the precision the DuckDB oracles assume)
+        return _matches(knn(
+            df, query_values, top_k, vec_col="values", id_col="id",
+            metric=metric,
+        ))

@@ -3,10 +3,13 @@ reference's routes map 1:1 onto these methods) + explain/statistics."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from mlvectordb_spark.api import EngineService, create_app
 from mlvectordb_spark.operators.store import VectorStore
+from mlvectordb_spark.plans.explain import explain_query
 
 
 @pytest.fixture()
@@ -56,7 +59,17 @@ def test_declared_query_routes(svc):
     assert len(hyb) == 1 and hyb[0]["metadata"]["cat"] == "img"
 
 
-def test_explain_shape(svc):
+def test_explain_shape(svc, monkeypatch):
+    from mlvectordb_spark import api
+
+    raw = []
+
+    def capture(df):
+        out = explain_query(df)
+        raw.append(out["raw"])
+        return out
+
+    monkeypatch.setattr(api, "explain_query", capture)
     svc.insert_vector([1.0, 0.0], None, "default")
     plan = svc.explain([1.0, 0.0], 5, "default", "cosine")
     steps = plan["execution_plan"]["steps"]
@@ -64,6 +77,14 @@ def test_explain_shape(svc):
     ops = " ".join(s["operator"] for s in steps)
     assert "TakeOrderedAndProject" in ops  # top-k without global sort
     assert "Scan" in ops
+    # the plan search runs: 4-decimal rounded score, id tie-break after it
+    assert "round(" in raw[0]
+    assert re.search(
+        r"TakeOrderedAndProject\n.*?Arguments: 5, "
+        r"\[score#\d+ DESC NULLS LAST, id#\d+ ASC",
+        raw[0],
+        re.S,
+    ), raw[0]
 
 
 def test_statistics_counters(svc):

@@ -4,6 +4,9 @@ tests/test_query_processor.py:65-67)."""
 
 from __future__ import annotations
 
+import math
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -23,18 +26,24 @@ def vec_df(spark):
     return df, data
 
 
+def _fold(terms) -> float:
+    """The module's contract: a sequential left-to-right float64 sum."""
+    acc = 0.0
+    for t in terms:
+        acc += t
+    return acc
+
+
 def test_l2_sq_matches_numpy(spark, vec_df):
     df, data = vec_df
-    q = data[0]
+    q = [float(x) for x in data[0]]
     out = {
         r.id: r.s
-        for r in df.withColumn(
-            "s", V.l2_sq("v", F.array(*[F.lit(float(x)) for x in q]))
-        ).collect()
+        for r in df.withColumn("s", V.l2_sq("v", V.vector_lit(q))).collect()
     }
     for i in range(N):
-        expected = float(np.sum((data[i].astype(np.float64) - q.astype(np.float64)) ** 2))
-        assert out[i] == pytest.approx(expected, rel=1e-9)
+        a = [float(x) for x in data[i]]
+        assert out[i] == _fold((x - y) * (x - y) for x, y in zip(a, q))
 
 
 def test_cosine_matches_numpy(spark, vec_df):
@@ -43,7 +52,7 @@ def test_cosine_matches_numpy(spark, vec_df):
     out = {
         r.id: r.s
         for r in df.withColumn(
-            "s", V.cosine_sim("v", F.array(*[F.lit(float(x)) for x in data[0]]))
+            "s", V.cosine_sim("v", V.vector_lit(data[0]))
         ).collect()
     }
     for i in range(N):
@@ -54,14 +63,33 @@ def test_cosine_matches_numpy(spark, vec_df):
 
 def test_ip_and_norm(spark, vec_df):
     df, data = vec_df
-    q = data[1]
-    out = df.withColumn(
-        "d", V.dot("v", F.array(*[F.lit(float(x)) for x in q]))
-    ).withColumn("n", V.norm2("v"))
+    q = [float(x) for x in data[1]]
+    out = df.withColumn("d", V.dot("v", V.vector_lit(q))).withColumn(
+        "n", V.norm2("v")
+    )
     for r in out.collect():
-        a = data[r.id].astype(np.float64)
-        assert r.d == pytest.approx(float(a @ q.astype(np.float64)), rel=1e-9)
-        assert r.n == pytest.approx(float(np.linalg.norm(a)), rel=1e-9)
+        a = [float(x) for x in data[r.id]]
+        assert r.d == _fold(x * y for x, y in zip(a, q))
+        assert r.n == math.sqrt(_fold(x * x for x in a))
+
+
+def test_vector_lit_round_trips(spark):
+    """`vector_lit` (SQL text) carries every double bit-exactly — the
+    per-element `F.lit` array is the reference."""
+    rng = np.random.default_rng(3)
+    normals = rng.normal(size=200).astype(np.float32)
+    values = [
+        -0.0, 5e-324, 2.2250738585072014e-308,
+        1.7976931348623157e308, -1.7976931348623157e308,
+        float("nan"), float("inf"), float("-inf"),
+    ] + [float(x) for x in normals]
+    got, ref = spark.range(1).select(
+        V.vector_lit(values).alias("got"),
+        F.array(*[F.lit(float(x)) for x in values]).alias("ref"),
+    ).first()
+    assert len(got) == len(ref) == len(values)
+    for g, r in zip(got, ref):
+        assert struct.pack(">d", g) == struct.pack(">d", r)
 
 
 def test_normalize_unit_norm(spark, vec_df):

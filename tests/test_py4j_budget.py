@@ -1,0 +1,119 @@
+"""py4j round-trip budgets on the vector read path.
+
+Every py4j call is a driver↔JVM socket round trip; on a warm serving path
+they, not the Spark jobs, dominate the driver time per request. Scores and
+query vectors are built from SQL text (`functions/vector.py`), so a score
+column costs a constant number of calls at any dimension; these tests pin
+that, and the per-search totals the store's serving routes pay."""
+
+from __future__ import annotations
+
+import threading
+
+import numpy as np
+import py4j.clientserver
+import pytest
+
+from mlvectordb_spark.api import EngineService
+from mlvectordb_spark.functions import vector as V
+from mlvectordb_spark.operators.ann import IVFIndex, IVFPQIndex
+from mlvectordb_spark.operators.graph_ann import GraphANNIndex
+from mlvectordb_spark.operators.store import VectorStore
+
+
+class _Calls:
+    """Counts the calling thread's `send_command` calls (a patched
+    method). py4j's ClientServer sends the deletes of collected Java
+    object handles from its own finalizer thread, whenever the garbage
+    collector frees them — those are left out."""
+
+    def __init__(self, monkeypatch):
+        self.n = 0
+        orig = py4j.clientserver.ClientServerConnection.send_command
+        me = threading.get_ident()
+
+        def counted(conn, *args, **kwargs):
+            if threading.get_ident() == me:
+                self.n += 1
+            return orig(conn, *args, **kwargs)
+
+        monkeypatch.setattr(
+            py4j.clientserver.ClientServerConnection, "send_command", counted
+        )
+
+    def cost(self, fn) -> int:
+        start = self.n
+        fn()
+        return self.n - start
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+def test_score_column_calls_independent_of_dim(spark, monkeypatch, metric):
+    calls = _Calls(monkeypatch)
+
+    def build(dim):
+        q = np.random.default_rng(dim).normal(size=dim).tolist()
+        return calls.cost(lambda: V.metric_expr("v", V.vector_lit(q), metric))
+
+    build(8)  # warm any one-time JVM lookups
+    small, large = build(8), build(512)
+    assert small == large, (small, large)
+    assert small <= 10, small
+
+
+DIM = 64
+N_PER_NS = 600
+# upper bounds on py4j calls for one warm EngineService.search, the
+# minimum of 3 calls. Measured with this corpus: see CHANGES.md.
+_BUDGET = {"ivf": 450, "ivfpq": 800, "graph": 400, "exact": 200}
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    rng = np.random.default_rng(11)
+    centers = rng.normal(0.0, 4.0, (8, DIM))
+    factories = {
+        "ivf": lambda: IVFIndex(n_clusters=16, seed=42),
+        "ivfpq": lambda: IVFPQIndex(n_clusters=16, m=8, k_sub=16, seed=42),
+        "graph": lambda: GraphANNIndex(
+            n_blocks=4, m=8, ef_construction=64, seed=42
+        ),
+    }
+    rows = []
+    for ns in factories:
+        X = centers[rng.integers(0, 8, N_PER_NS)] + rng.normal(
+            0.0, 1.0, (N_PER_NS, DIM)
+        )
+        rows += [
+            (f"{ns}-{i}", [float(x) for x in X[i]], ns)
+            for i in range(N_PER_NS)
+        ]
+    store = VectorStore(spark, str(tmp_path_factory.mktemp("py4j") / "store"))
+    store.upsert_df(
+        spark.createDataFrame(
+            rows, "id string, values array<float>, namespace string"
+        ),
+        assume_unique_ids=True,
+    )
+    for ns, factory in factories.items():
+        store.build_index(ns, factory=factory)
+    query = (centers[0] + rng.normal(0.0, 1.0, DIM)).tolist()
+    return EngineService(store), query
+
+
+@pytest.mark.parametrize("route", ["ivf", "ivfpq", "graph", "exact"])
+def test_warm_search_call_budget(served, monkeypatch, route):
+    svc, query = served
+    if route == "exact":
+        ns, metric, mode = "ivf", "cosine", "exact"
+    else:
+        ns, metric, mode = route, "l2", "auto"
+
+    def search():
+        out = svc.search(query, 10, ns, metric=metric, mode=mode)
+        assert len(out) == 10
+
+    search()  # warm
+    calls = _Calls(monkeypatch)
+    costs = [calls.cost(search) for _ in range(3)]
+    assert min(costs) <= _BUDGET[route], costs
