@@ -29,149 +29,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mlvectordb_spark.queries import (
-    QUERIES,
-    session_bpe,
-    session_bucketed,
+from mlvectordb_spark.queries import HEADLINE, QUERIES
+from mlvectordb_spark.queries.common import (
+    BATCH_QUERY_MAX_VID,
+    KNN_K,
+    QUERY_VID,
+)
+from mlvectordb_spark.queries.lakehouse import session_bucketed
+from mlvectordb_spark.queries.store import session_store_indexed
+from mlvectordb_spark.queries.text import session_bpe
+from mlvectordb_spark.queries.vector import (
     session_graph,
     session_ivf,
     session_ivfpq,
     session_lsh,
     session_pq,
-    session_store_indexed,
 )
 from mlvectordb_spark.session import get_spark
-
-HEADLINE = [
-    "knn_l2",
-    "knn_cosine",
-    "knn_batch",
-    "range_l2",
-    "hybrid_knn",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q10",
-    "tpch_q18",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q19",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q4",
-    "tpch_q7",
-    "tpch_q12",
-    "tpch_q16",
-    "tpch_q22",
-    "top_orders_per_cust",
-    "revenue_by_month",
-    "events_json",
-    "events_tumbling",
-    "events_sessionize",
-    "events_asof_error",
-    "events_attribution",
-    "events_funnel",
-    "events_session_stats",
-    "doc_quality",
-    "doc_fingerprint",
-    "doc_bpe_subword",
-    "doc_logprob",
-    "doc_dsir_weights",
-    "doc_bigram_logprob",
-    "doc_dup_ngrams",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    # the bounded cluster-blocked near-dup is the 100 TB path and therefore
-    # the headline; the label-blocked variant (dedup_embedding) remains
-    # oracle-checked in the correctness gate
-    "dedup_embedding_ivf",
-    "dedup_clusters",
-    "curation_pipeline",
-    "decontaminate",
-    "seq_pack",
-    "tfidf_terms",
-    "knn_sq8",
-    "ann_ivf_knn",
-    # exact top-k through the IVF layout (certified cluster pruning) — the
-    # cost of exactness vs the fixed-nprobe probe above
-    "ann_ivf_exact",
-    # round-5 additions: certified-exact LSH, indexed hybrid, batch KNN
-    # through the pruned IVF layout
-    "ann_lsh_exact",
-    "hybrid_ivf_exact",
-    "ann_ivf_batch",
-    "ann_pq_exact",
-    "ann_ivfpq_exact",
-    "ann_ivfpq_batch",
-    "hybrid_ivfpq_exact",
-    # round-8: partitioned NSW graph family (the reference's hnswlib
-    # structure) — exhaustive-exact single + batch, bounded-beam probe
-    "ann_graph_exact",
-    "ann_graph_batch",
-    "ann_graph_knn",
-    # curation additions: hard rule gate, importance resampling, dup-ngram
-    # removal; plus the co-located (zero-exchange) bucketed join
-    "doc_gopher",
-    "quality_sample",
-    "vocab_oov",
-    "mixture_materialize",
-    "doc_strip_dup_ngrams",
-    "bucketed_join",
-    # lexical retrieval + hybrid fusion (one-scan BM25, bounded-list RRF)
-    "bm25_topk",
-    "hybrid_rrf",
-    # classification serving + sketch calibration
-    "knn_classify",
-    "minhash_sim_est",
-    # round-5 curation: cross-doc boilerplate signal, per-source domain cap,
-    # quality-policy cluster survivor
-    "doc_cross_dup_ngrams",
-    "source_cap",
-    "dedup_keep_best",
-    # ANALYZE-style profile, semantic decontamination screen
-    "doc_profile",
-    "decontaminate_semantic",
-    # token-budget water-filling mix
-    "mixture_budget",
-    "hard_negatives",
-    "contrastive_triplets",
-    # the end-to-end materialized corpus pipeline (capstone composition)
-    "pipeline_materialize",
-    # r7: the store serving path routed through an attached index —
-    # steady-state shape: bounded CDC batch + incremental sync + routed
-    # read against the session store (store build + KMeans fits are
-    # ingest-time, amortized in session_store_indexed; the full lifecycle
-    # stays oracle-gated as store_indexed_search)
-    "store_indexed_probe",
-    # batch serving steady-state: |queries| answers through ONE certified
-    # pruned scan + broadcast enrichment against the session store
-    "store_batch_probe",
-    # r7b: CMS-certified exact heavy hitters (sketch prune before the
-    # count shuffle — cost tracked here, shuffle-volume evidence in
-    # SCALING.md via tools/shuffle_probe.py)
-    "heavy_bigrams",
-    # r7c: MERGE INTO with the broadcast (target-unshuffled) strategy —
-    # table maintenance as a first-class engine cost
-    "merge_orders",
-    # r7d: schema-evolving merge, join-view incremental refresh, and the
-    # one-scan expectations surfaces (row rules + uniqueness + FK)
-    "merge_evolve",
-    "join_mv",
-    "doc_expectations",
-    "orders_expectations",
-    # r9: multimodal decode-and-extract — real WAV/BMP/PNG/JPEG codecs
-    # (the JPEG rows exercise the native baseline decoder) through the
-    # Arrow-batched mapInPandas feature pipeline
-    "media_stats",
-    # r11: the lossless decoders vs committed javax.imageio /
-    # javax.sound ground truth, and the cross-engine md5 shard routing
-    "media_pixel_checksums",
-    "media_audio_checksums",
-    "shard_assignments",
-]
 
 
 def _recall_tail(spark, sf_dir: str) -> dict[str, float]:
@@ -182,7 +56,6 @@ def _recall_tail(spark, sf_dir: str) -> dict[str, float]:
 
     from mlvectordb_spark.operators.ann import recall_at_k
     from mlvectordb_spark.operators.knn import knn
-    from mlvectordb_spark.queries import KNN_K, QUERY_VID
     from mlvectordb_spark.sources.testdata import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -239,7 +112,6 @@ def _recall_tail(spark, sf_dir: str) -> dict[str, float]:
 
     from mlvectordb_spark.operators.ann import IVFPQIndex
     from mlvectordb_spark.operators.store import VectorStore
-    from mlvectordb_spark.queries import BATCH_QUERY_MAX_VID
 
     pq_store = VectorStore(spark, store.path, rebuild_threshold=0.95)
     pqidx = IVFPQIndex(n_clusters=8, m=8, k_sub=16, seed=42)
@@ -284,8 +156,8 @@ def _recall_tail(spark, sf_dir: str) -> dict[str, float]:
     # far below the 32k exact-pool cutoff, so force the NN-descent
     # construction (the >32k-block scale path) through the instance seam
     # and track the bounded beam's quality at the shipped dial
-    # round-over-round; the 50k/1M-scale numbers live in SCALING.md
-    # (tools/graph_probe.py / descent probes).
+    # round-over-round; at scale (4 blocks of 50k descent-built rows) the
+    # shipped dial ef=128, nprobe=4 measured recall@10 0.925 (SCALING.md).
     from mlvectordb_spark.operators.graph_ann import GraphANNIndex
 
     didx = GraphANNIndex(n_blocks=4, m=8, ef_construction=64, seed=42)

@@ -469,7 +469,7 @@ def partition_by_format(
     rows across all partitions, so every partition carries ~the same
     per-format mix.
 
-    Measured rationale (tools/media_probe.py A/Bs, SCALING.md r12):
+    Measured rationale (layout A/Bs, SCALING.md r12):
     per-row decode cost is format-heterogeneous — a progressive-JPEG row
     costs ~10× a BMP row. Three layouts at 8 cores / 8k rows:
     format-PURE equal-row partitions (repartitionByRange on mime_type)

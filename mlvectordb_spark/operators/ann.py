@@ -199,8 +199,8 @@ def per_key_topk(
     phase 1 whatever bucket they hash into. This is the batch-join analog
     of TakeOrderedAndProject's partial limits — with a handful of query
     keys the naive window sorts the entire candidate set in |keys|
-    reducers; measured 7.3 s → ~1 s on 3.2M candidate rows × 16 queries
-    (tools/scale_probe.py)."""
+    reducers; measured 7.3 s → ~1 s on 3.2M candidate rows × 16
+    queries."""
     from pyspark.sql import Window
 
     salt = F.pmod(F.xxhash64(F.col(salt_on)), F.lit(TOPK_SALT_BUCKETS))
@@ -582,8 +582,8 @@ class IVFIndex:
         CDC maintenance from forcing a full-corpus radius recompute on
         the next search — at continuous-ingest scale the stats pass would
         otherwise re-read the whole corpus every sync cycle (1M×64d
-        measurement: ~12 s per post-churn search repaying the pass,
-        tools/scale_probe.py). Returns the batch row count. When no radii
+        measurement: ~12 s per post-churn search repaying the pass).
+        Returns the batch row count. When no radii
         are cached, falls back to a bare count (no vector decode)."""
         if self._radii is None:
             return batch.count()

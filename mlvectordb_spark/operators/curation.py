@@ -449,7 +449,7 @@ def strip_duplicate_ngrams(
     only other shuffle carries the COVERED positions (duplicated-gram
     hits only) into one int-set per doc; the doc side joins that set back
     by id (AQE broadcasts the small set side) and the rebuild is a
-    row-local index filter over the doc's own token array — no per-token
+    row-local gather of the doc's uncovered positions — no per-token
     rebuild shuffle, no per-doc sort. The r12 shape shuffled every
     (id, pos, tok) row TWICE (an anti-join on (id, pos) plus a
     collect_list groupBy — O(corpus tokens) both ways); this shape moves
@@ -483,11 +483,14 @@ def strip_duplicate_ngrams(
     cov_set = covered.groupBy(id_col).agg(
         F.collect_set("pos").alias("__cov")
     )
+    # surviving positions as one hash-based set difference (array_except
+    # keeps the first array's order): O(tokens + |covered|) per doc, where
+    # a per-token membership test against __cov is O(tokens × |covered|)
+    keep_pos = F.array_except(
+        F.sequence(F.lit(0), F.size("__toks") - 1), F.col("__cov")
+    )
     kept = F.when(F.col("__cov").isNull(), F.col("__toks")).otherwise(
-        F.filter(
-            F.col("__toks"),
-            lambda _t, i: ~F.array_contains(F.col("__cov"), i),
-        )
+        F.transform(keep_pos, lambda i: F.col("__toks")[i])
     )
     return (
         base.join(cov_set, id_col, "left")

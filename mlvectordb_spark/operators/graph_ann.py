@@ -196,10 +196,9 @@ def _select_diverse(
     Tight clusters then contribute ONE kept neighbor each and the
     remaining slots go to other regions — the long-range shortcuts that
     plain nearest-M selection prunes away on clustered data (measured:
-    bounded-beam recall 0.35 → ≥0.9 on the 32-center probe corpus,
-    tools/graph_probe.py); alpha>1 keeps a few more mid-range links,
-    which the same probe shows is what beam navigation on near-uniform
-    noise needs. Backfills with the nearest rejected candidates if
+    bounded-beam recall 0.35 → ≥0.9 on a 32-center clustered corpus);
+    alpha>1 keeps a few more mid-range links, which the same measurement
+    shows is what beam navigation on near-uniform noise needs. Backfills with the nearest rejected candidates if
     diversity leaves slots."""
     kept: list[int] = []
     for d, p in cands:
@@ -310,9 +309,8 @@ def _exact_pool(
     """Exact k-NN candidate pool via chunked float32 BLAS — for blocks up
     to _EXACT_POOL_MAX the full n² distance matrix in row chunks is
     cheaper (and better) than any iterative refinement: 12.5k×64d pools
-    in ~6 s where the insert-at-a-time NSW loop took 24 s
-    (tools/graph_probe.py). Distances are used for ORDERING only, so
-    float32 matmul precision is fine."""
+    in ~6 s where the insert-at-a-time NSW loop took 24 s. Distances
+    are used for ORDERING only, so float32 matmul precision is fine."""
     n = len(X)
     Xf = X.astype(np.float32, copy=False)
     sq = (Xf * Xf).sum(axis=1)
@@ -362,7 +360,7 @@ def _descent_pool(
 
     `delta` is Dong et al.'s convergence threshold: stop when a round
     changes fewer than δ·n·k pool entries. Default 0 = disabled, which
-    matches the measurement (SCALING.md r10, tools/descent_probe.py):
+    matches the measurement (SCALING.md r10):
     on clustered 50k blocks δ=0.001 NEVER fires before the round cap —
     pool-tail churn stays ~2-5% at round 8 while recall saturates by
     round 6 — so δ is an opt-in safety valve for genuinely
@@ -526,11 +524,11 @@ def _entry_points(X: np.ndarray, metric: str) -> list[int]:
     inside the entry's tight cluster every node sits at near-identical
     distance to a far-away query, so the stop rule (`closest candidate
     worse than the beam's worst`) fires before any cross-cluster edge is
-    found (measured recall 0.36 on the 32-center probe corpus). HNSW
+    found (measured recall 0.36 on a 32-center clustered corpus). HNSW
     solves this with hierarchy (upper-level long links land the beam in
     the right region); the flat-graph equivalent is seeding every region:
     one seed lands near the query's cluster and the nearest-first
-    expansion proceeds from there (recall ≥ 0.9, tools/graph_probe.py).
+    expansion proceeds from there (recall ≥ 0.9 on the same corpus).
     Cost: _ENTRY_FANOUT extra rows in the initial beam — O(E·n) distance
     evaluations at build, one matmul per seed step."""
     # seeding is GEOMETRIC diversity — always squared-L2, even for the ip

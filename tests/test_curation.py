@@ -342,6 +342,24 @@ def test_strip_duplicate_ngrams_removes_covered_tokens(spark):
     assert out[4].clean_text == "xy" and out[4].n_kept == 1
 
 
+def test_strip_duplicate_ngrams_long_fully_covered_doc(spark):
+    """A long boilerplate doc duplicated verbatim is stripped to nothing,
+    and the rebuild is a set difference over positions, not a per-token
+    membership test against the covered set (quadratic in doc length)."""
+    from mlvectordb_spark.operators.curation import strip_duplicate_ngrams
+
+    text = " ".join(f"w{i}" for i in range(3000))
+    docs = spark.createDataFrame(
+        [(1, text), (2, text)], "doc_id long, text string"
+    )
+    out = strip_duplicate_ngrams(docs, k=3)
+    rows = sorted(out.collect())
+    assert [tuple(r) for r in rows] == [(1, 3000, 0, ""), (2, 3000, 0, "")]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_except" in plan
+    assert "array_contains" not in plan
+
+
 def test_gopher_rules_flags_each_rule(spark):
     from mlvectordb_spark.operators.curation import gopher_rules
 

@@ -226,7 +226,7 @@ def test_bucketed_join_needs_no_exchange_or_sort(spark, sf_dir):
     the 100 TB regime, where neither fact table fits an executor — the
     orderkey join over the pre-bucketed+sorted tables must plan as a
     sort-merge join with ZERO Exchange and ZERO Sort on either branch."""
-    from mlvectordb_spark.queries import session_bucketed
+    from mlvectordb_spark.queries.lakehouse import session_bucketed
 
     li, od = session_bucketed(spark, sf_dir)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -331,7 +331,7 @@ def test_tpch_q18_no_forced_broadcast_of_aggregate(spark, sf_dir):
     """The HAVING survivor set is data-dependent: the plan must not carry
     a planner-forced broadcast of the lineitem aggregate (AQE may still
     choose one at runtime from observed sizes)."""
-    from mlvectordb_spark.queries import q_tpch_q18
+    from mlvectordb_spark.queries.tpch import q_tpch_q18
     import inspect
 
     src = inspect.getsource(q_tpch_q18)
@@ -489,7 +489,7 @@ def test_heavy_bigrams_constructs_with_one_job_and_no_distinct(spark, sf_dir):
     # gate the source directly: the threshold must be the shared literal.
     import inspect
 
-    from mlvectordb_spark.queries import q_heavy_bigrams
+    from mlvectordb_spark.queries.text import q_heavy_bigrams
 
     src = inspect.getsource(q_heavy_bigrams)
     assert "HEAVY_MIN_COUNT" in src and "countDistinct" not in src, src

@@ -92,7 +92,7 @@ def test_doc_repetition_hand_computed(spark, tmp_path):
     """Gopher repetition metrics on a crafted corpus: 'a a a b' has
     ttr 0.5, top-token 3/4, bigrams [a a, a a, a b] -> top 2/3; a
     single-token doc gets top_bigram_frac 0 (no bigrams)."""
-    from mlvectordb_spark.queries import q_doc_repetition
+    from mlvectordb_spark.queries.text import q_doc_repetition
 
     spark.createDataFrame(
         [(1, "a a a b"), (2, "x"), (3, "p q p q")],

@@ -6,8 +6,8 @@ decoders — NOT the repo's codecs) and print the SQL VALUES literals of
 (media_id, height, width, channels, pixel_sum, sample_crc) /
 (media_id, n_samples, sample_rate, sample_sum, sample_crc).
 
-Provenance contract: the constants committed in
-mlvectordb_spark/queries.py ORACLE_SQL["media_pixel_checksums"] come
+Provenance contract: the constants committed in the
+`q_media_pixel_checksums` oracle (mlvectordb_spark/queries/media.py) come
 from THIS script, so the driver gate cross-checks the repo's pure-numpy
 PNG/BMP decoders against an independent implementation every round —
 the pixel-hash oracle mode the r10 verdict asked for, realized inside
