@@ -33,7 +33,7 @@ references or SQL-text columns (`vector_lit`, `F.expr`).
 from __future__ import annotations
 
 import math
-from typing import Iterable
+from collections.abc import Iterable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -66,6 +66,26 @@ def vector_lit(values: Iterable[float]) -> Column:
         return f"{x!r}D"
 
     return F.expr(f"array({', '.join(lit(float(x)) for x in values)})")
+
+
+def id_lit(value: str | int) -> str:
+    """SQL literal text of one id: an integer, or a quoted string with
+    backslash and quote escaped (Spark's default string-literal parsing).
+    The one place id values become SQL text."""
+    if isinstance(value, int) and not isinstance(value, bool):
+        return str(value)
+    if not isinstance(value, str):
+        raise TypeError(f"no SQL literal for id {value!r}")
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def id_in(col: str, ids: Iterable[str | int], negate: bool = False) -> Column:
+    """`col IN (ids)` (`NOT IN` when `negate`) from SQL text — 3 py4j
+    calls for any list length, where `Column.isin` pays per element."""
+    lits = ", ".join(id_lit(i) for i in ids)
+    if not lits:
+        return F.lit(negate)
+    return F.expr(f"{_sql(col)} {'NOT IN' if negate else 'IN'} ({lits})")
 
 
 _DOT, _L2_SQ = "__l * __r", "(__l - __r) * (__l - __r)"

@@ -251,16 +251,23 @@ def _probe_join(
     )
 
 
+# columns an IVF-family table derives from its rows; every other column
+# (the id, the vector and any payload such as a store's metadata) is data
+_DERIVED = ("cluster_id", "pq_codes", "pq_err", "__dhat", "__tau_sq")
+
+
 def _rank_per_query(
     cand: DataFrame, qv: DataFrame, k: int, query_id: str, vec_col: str,
     id_col: str, score_decimals: int,
 ) -> DataFrame:
     """Exact rounded l2 of every (query, candidate) row — the bounded
     query side `qv` (query_id, __qvec) broadcasts — then the per-query
-    top-k in `rank_order`."""
+    top-k in `rank_order`. Rows keep their data columns, so a table that
+    carries payload answers a batch with whole rows."""
+    data = [c for c in cand.columns if c not in _DERIVED and c != query_id]
     scored = cand.join(F.broadcast(qv), query_id).select(
         F.col(query_id),
-        F.col(id_col),
+        *data,
         F.round(
             metric_expr(vec_col, "__qvec", "l2"), score_decimals
         ).alias("score"),
@@ -530,16 +537,27 @@ class IVFIndex:
             changes, id_col, enter, keys=["cluster_id"],
             aggs=[F.max("__cdist").alias("radius")],
         )
+        if self._counts is not None:
+            # a certified LOWER bound per cluster: each retired id left at
+            # most one cluster, and every upsert entered the one it was
+            # assigned to. Understating a count only widens tau (more
+            # probes, same answer); overstating could break certification.
+            self._counts = np.maximum(self._counts - self.cdc.last_events, 0)
         for r in stats:
             j = int(r.cluster_id)
             if self._radii is not None and float(r.radius) > self._radii[j]:
                 self._radii[j] = float(r.radius)
+            if self._counts is not None:
+                self._counts[j] += int(r.n)
         self._added_count += self.cdc.last_upserts
-        self._counts = None
         (self.indexed,) = self.cdc.fold(
             self._built_count + self._added_count,
             self.cdc.roll(self.indexed, feed, id_col),
         )
+        if self.cdc.syncs == 0 and self._counts is not None:
+            # the fold fired: exact counts from the materialized table
+            self._counts = None
+            self.cluster_stats(vec_col)
         return self.indexed
 
     def _radius_rows(self, df: DataFrame, vec_col: str):
@@ -566,7 +584,8 @@ class IVFIndex:
                 )
 
         return (
-            df.mapInPandas(dist_batches, schema="cluster_id long, cdist double")
+            df.select(vec_col, "cluster_id")
+            .mapInPandas(dist_batches, schema="cluster_id long, cdist double")
             .groupBy("cluster_id")
             .agg(F.max("cdist").alias("radius"), F.count("*").alias("n"))
             .collect()
@@ -612,10 +631,12 @@ class IVFIndex:
         matmul shape as _assign) + a k-row aggregate — k scalars on the
         driver, same class of state as the centroids themselves. Cached on
         the object. After add()/apply_changes() the radii stay warm via the
-        grow-only update; only the COUNTS go stale and refresh here with a
-        column-pruned cluster_id aggregate (no vector decode, no Python) —
-        counts must be exact because tau's coverage argument needs them
-        (overstating could under-cover k and break certification)."""
+        grow-only update. apply_changes keeps certified lower-bound counts
+        (exact again at each fold); after add() the COUNTS refresh here
+        with a column-pruned cluster_id aggregate (no vector decode, no
+        Python) — counts must never overstate, because tau's coverage
+        argument needs them (overstating could under-cover k and break
+        certification)."""
         assert self.indexed is not None and self.centroids is not None
         if self._radii is not None and self._counts is not None:
             return self._radii, self._counts
@@ -658,32 +679,29 @@ class IVFIndex:
         - the bound is padded by the score-rounding granularity so the
           rounded+id tie-break ordering matches the brute-force oracle.
 
-        If fewer than k members exist, every nonempty cluster is returned
-        (tau degrades to the max upper bound — prune-nothing, still exact).
+        Counts may be lower bounds (`apply_changes`), so a zero count does
+        not prove a cluster empty and none is skipped for it; if the counts
+        cover fewer than k rows, every cluster is probed (prune-nothing,
+        still exact).
         """
         dq = np.sqrt(((self.centroids - q) ** 2).sum(axis=1))
         ub = dq + radii
-        nonempty = counts > 0
         cum = 0
-        tau = None
+        tau = 0.0
         for j in np.argsort(ub):
-            if not nonempty[j]:
+            if counts[j] <= 0:
                 continue
             cum += int(counts[j])
             tau = float(ub[j])
             if cum >= k:
                 break
-        if tau is None:  # empty (after filtering) index
-            return []
+        if cum < k:
+            return list(range(len(radii)))
         lb = np.maximum(0.0, dq - radii)
         # pad in SQUARED space: scores round to 4 decimals, so a point up
         # to 1e-3 (squared) past tau² can still tie into the rounded order
         tau_sq = tau * tau + 1e-3
-        return [
-            int(j)
-            for j in range(len(radii))
-            if nonempty[j] and lb[j] * lb[j] <= tau_sq
-        ]
+        return [int(j) for j in range(len(radii)) if lb[j] * lb[j] <= tau_sq]
 
     def _filtered_counts(self, pre_filter) -> np.ndarray:
         """Per-cluster member counts under a pre-filter. Required for
@@ -1657,8 +1675,8 @@ class IVFPQIndex:
         )
         if pre_filter is not None:
             cand = cand.filter(pre_filter)
-        sel = cand.join(F.broadcast(probe_df), "cluster_id").select(
-            query_id, id_col, vec_col, "pq_codes", "pq_err"
+        sel = cand.join(F.broadcast(probe_df), "cluster_id").drop(
+            "cluster_id"
         )
         out_schema = T.StructType(
             [f for f in sel.schema.fields if f.name != "pq_codes"]
@@ -1785,7 +1803,10 @@ def resync_index_from_snapshot(
             F.lit(wv).cast("long").alias("write_version"),
         )
     )
-    index.apply_changes(snap.unionByName(stale), vec_col=vec_col, id_col=id_col)
+    index.apply_changes(
+        snap.unionByName(stale, allowMissingColumns=True),
+        vec_col=vec_col, id_col=id_col,
+    )
     note = getattr(index, "note_full_resync", None)
     if note is not None:
         note(index.cdc.last_upserts)

@@ -16,7 +16,10 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mlvectordb_spark.functions.vector import id_in
+
 _UPSERT = "__upsert"
+_RETIRED = "__retired"
 
 
 def latest_per_key(df: DataFrame, keys: Sequence[str], *order: Column) -> DataFrame:
@@ -40,9 +43,13 @@ class PendingTail:
       built from them (re-entered upserts ∪ delete ids) are lazy
       localCheckpoints, both materialized by the stats aggregate in
       `absorb`, which yields the counts and any family statistics.
-    - Bounded broadcast: the retire anti-join broadcasts the feed's ids
-      only up to `BROADCAST_FEED_ROWS`; a catch-up or resync feed above
-      that takes the AQE-sized join.
+    - Retire without a job: the stats job also returns the ids of the
+      first `INLINE_IDS` + 1 deduped events of the first partition. When
+      that covers the whole feed, the retire step is an SQL-text
+      `NOT IN` list on the driver, so a read of the index launches no
+      broadcast job. Larger feeds anti-join the feed's ids, broadcast up
+      to `BROADCAST_FEED_ROWS`; a catch-up or resync feed above that
+      takes the AQE-sized join.
     - Fold rule: each sync appends one anti-join + union to the index
       plan, so per-sync cost is O(feed), not O(index). The chain is
       localCheckpointed once `FOLD_SYNCS` syncs or `FOLD_SHARE` of the
@@ -53,6 +60,7 @@ class PendingTail:
       compaction can rewrite them at any time.
     """
 
+    INLINE_IDS = 1024
     BROADCAST_FEED_ROWS = 2_000_000
     FOLD_SYNCS = 8
     FOLD_SHARE = 0.2
@@ -63,6 +71,7 @@ class PendingTail:
         self.rows = 0
         self.last_upserts = 0
         self.last_events = 0
+        self.retired_ids: list | None = None
 
     def absorb(
         self,
@@ -86,18 +95,36 @@ class PendingTail:
         feed = ups.withColumn(_UPSERT, F.lit(True)).unionByName(
             dels.withColumn(_UPSERT, F.lit(False)), allowMissingColumns=True
         ).localCheckpoint(eager=False)
-        stats = (
+        # the retired-id branch reads the first partition's leading rows
+        # only (monotonically_increasing_id is the row number there), so it
+        # returns at most INLINE_IDS + 1 ids; it is the whole feed exactly
+        # when that count equals the event count
+        inline = latest.filter(
+            F.monotonically_increasing_id() <= self.INLINE_IDS
+        ).select(F.col(id_col).alias(_RETIRED))
+        rows = (
             feed.groupBy(_UPSERT, *keys)
             .agg(F.count(F.lit(1)).alias("n"), *aggs)
+            .unionByName(inline, allowMissingColumns=True)
             .collect()
         )
+        stats = [r for r in rows if r[_UPSERT] is not None]
+        retired = [r[_RETIRED] for r in rows if r[_UPSERT] is None]
         up_rows = [r for r in stats if r[_UPSERT]]
         self.last_upserts = sum(int(r.n) for r in up_rows)
         self.last_events = sum(int(r.n) for r in stats)
+        self.retired_ids = (
+            retired
+            if len(retired) == self.last_events <= self.INLINE_IDS
+            and all(isinstance(i, (str, int)) for i in retired)
+            else None
+        )
         return feed, up_rows
 
     def retire(self, df: DataFrame, feed: DataFrame, id_col: str) -> DataFrame:
         """`df` without the ids the feed touches."""
+        if self.retired_ids is not None:
+            return df.filter(id_in(id_col, self.retired_ids, negate=True))
         ids = feed.select(id_col)
         if self.last_events <= self.BROADCAST_FEED_ROWS:
             ids = F.broadcast(ids)

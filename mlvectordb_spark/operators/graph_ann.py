@@ -67,7 +67,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mlvectordb_spark.functions.localdf import local_rows_df
-from mlvectordb_spark.functions.vector import metric_expr, vector_lit
+from mlvectordb_spark.functions.vector import (
+    metric_ascending,
+    metric_expr,
+    vector_lit,
+)
 from mlvectordb_spark.operators.ann import IVFIndex, per_key_topk
 from mlvectordb_spark.operators.cdc import PendingTail
 from mlvectordb_spark.operators.knn import knn, rank_order
@@ -1003,9 +1007,10 @@ class GraphANNIndex:
         routed to it (the query batch rides in the task closure — bounded
         like IVF's knn_join batch surface); the pending tail joins
         exactly; a salted per-query top-k merges. Returns
-        (query_id, id, score). `result_filter` (a Column over those three
-        output columns) drops rows AFTER traversal but BEFORE the top-k —
-        with `ef=None` the traversal is exhaustive, so the filtered
+        (query_id, id, the other data columns, score). `result_filter` (a
+        Column over the output columns) drops rows AFTER traversal but
+        BEFORE the top-k — with `ef=None` the traversal is exhaustive, so
+        the filtered
         result is exactly the brute-force filtered top-k; with a bounded
         `ef` it filters the beam's survivors (best-effort, like any
         post-filtered ANN). `target_recall` replaces the raw dials with
@@ -1033,21 +1038,33 @@ class GraphANNIndex:
         probed = sorted(routed)
         cand = self.indexed.filter(F.col("block_id").isin(probed))
         icol, vcol, metric = self._id_col, self._vec_col, self.metric
-        id_type = dict(
-            zip(self.indexed.schema.names, self.indexed.schema.fields)
-        )[icol].dataType
+        fields = {f.name: f for f in self.indexed.schema.fields}
+        # every data column but the id rides along, so a graph that carries
+        # payload answers the batch with whole rows
+        payload = [
+            fields[c] for c in (self._data_cols or fields)
+            if c in fields and c != icol
+            and c not in ("block_id", "neighbors", "is_entry")
+        ]
+        keep = [f.name for f in payload]
         qid_type = dict(
             zip(queries.schema.names, queries.schema.fields)
         )[query_id].dataType
         out_schema = T.StructType(
             [
                 T.StructField(query_id, qid_type),
-                T.StructField("id_out", id_type),
+                T.StructField("id_out", fields[icol].dataType),
+                *payload,
                 T.StructField("score", T.DoubleType()),
             ]
         )
         norm = metric == "cosine"
         need = k
+        # without a result filter only each block's own top-k per query can
+        # reach the global top-k (same rounded-score, id order), so blocks
+        # emit those rows instead of their whole beam
+        trim = result_filter is None
+        sign = 1.0 if metric_ascending(metric) else -1.0
 
         def search_block(pdf):
             import pandas as pd
@@ -1075,7 +1092,7 @@ class GraphANNIndex:
                 if len(entry_rows)
                 else [int(ids.argmin())]
             )
-            out_q, out_i, out_s = [], [], []
+            out_q, out_p, out_s = [], [], []
             width = None if ef is None else max(ef, need)
             # exhaustive mode selects EVERY row for EVERY query, so the
             # float64 rescore matrix is built once per block, not
@@ -1098,16 +1115,24 @@ class GraphANNIndex:
                     d64 = _pair_dists(V64[sel], qv64, metric)
                 else:
                     d64 = _rescore64(pdf, vcol, sel, qv64, norm, metric)
-                out_q.extend([qid] * len(take))
-                out_i.extend(ids[p] for _, p in take)
-                out_s.extend(
-                    np.round(
-                        _score_from_dist(d64, metric), _SCORE_DECIMALS
-                    ).tolist()
-                )
-            return pd.DataFrame(
-                {query_id: out_q, "id_out": out_i, "score": out_s}
-            )
+                s = np.round(_score_from_dist(d64, metric), _SCORE_DECIMALS)
+                if trim and len(sel) > need:
+                    key = sign * s
+                    kth = np.partition(key, need - 1)[need - 1]
+                    near = np.flatnonzero(key <= kth)
+                    near = sorted(near, key=lambda j: (key[j], ids[sel[j]]))
+                    sel = [sel[j] for j in near[:need]]
+                    s = s[near[:need]]
+                out_q.extend([qid] * len(sel))
+                out_p.extend(sel)
+                out_s.extend(s.tolist())
+            rows = pdf.iloc[out_p]
+            return pd.DataFrame({
+                query_id: out_q,
+                "id_out": rows[icol].to_numpy(),
+                **{c: rows[c].to_numpy() for c in keep},
+                "score": out_s,
+            })
 
         scored = cand.groupBy("block_id").applyInPandas(
             search_block, schema=out_schema
@@ -1121,6 +1146,7 @@ class GraphANNIndex:
                 .select(
                     F.col(query_id),
                     F.col(icol),
+                    *keep,
                     F.round(
                         metric_expr(vcol, "__qvec", metric),
                         _SCORE_DECIMALS,

@@ -325,7 +325,14 @@ class PQIndex:
         standalone PQ search and the IVF+PQ composition (where `bounded`
         is already cluster-pruned; tau within the certified probes still
         bounds the GLOBAL kth distance because the probes provably contain
-        the true top-k)."""
+        the true top-k).
+
+        A search through here runs two 1-task jobs over the bounded scan:
+        this tau collect, then the caller's rescore of the pool. The pool
+        filter needs tau as a literal; computing it inside the rescore's
+        plan instead would need a global aggregate or window, i.e. a
+        shuffle, which adaptive execution runs as a job of its own, plus
+        a broadcast of the result — no fewer jobs and a larger plan."""
         ub_rows = (
             bounded.select((F.col("__dhat") + F.col("pq_err")).alias("ub"))
             .orderBy(F.col("ub").asc())

@@ -49,12 +49,15 @@ from pyspark.sql import functions as F
 
 from mlvectordb_spark.functions.localdf import local_rows_df
 
-from mlvectordb_spark.functions.vector import metric_expr
+from mlvectordb_spark.functions.vector import id_in, id_lit, metric_expr
 from mlvectordb_spark.operators.cdc import latest_per_key
 from mlvectordb_spark.operators.knn import knn, knn_join, top_per_key
 from mlvectordb_spark.schema import STORAGE_SCHEMA, VECTOR_SCHEMA
 
 DEFAULT_NAMESPACE = "default"
+# the raw stored vector, carried by a cosine-space index next to its
+# normalized `values` so the index can answer a read by itself
+RAW_VALUES = "raw_values"
 REBUILD_THRESHOLD = 0.2  # tombstone ratio triggering compaction (ref index.py:18)
 
 
@@ -364,28 +367,15 @@ class VectorStore:
         )
         return raw.filter(~is_dirty).unionByName(deduped)
 
-    def _probe_tombstones(self, tomb: DataFrame, keys: DataFrame) -> int:
-        """READ-ONLY half of tombstone retirement: does any upserted key
-        collide with a live tombstone? Steady-state serving upserts rarely
-        resurrect a deleted id, and the no-overlap case previously paid
-        two counts plus a full tombstone rewrite on EVERY upsert batch
-        (measured ~0.5 s/probe on the bench store entries — guide §1.2:
-        don't compute things you throw away). One bounded semi-join probe
-        replaces all three jobs when nothing matches. Split from the
-        rewrite so the probe can run CONCURRENTLY with the (also
-        read-only) compaction-stats job (guide §2.6)."""
-        return (
-            tomb.join(keys, ["id", "namespace"], "left_semi")
-            .limit(1)
-            .count()
-        )
-
-    def _retire_tombstones(self, tomb: DataFrame, keys: DataFrame) -> None:
-        """WRITE half: resurrect upserted ids — a tombstone matches every
-        version of (id, namespace), so an upsert over a previously-deleted
-        id must retire the tombstone or the new version stays invisible.
-        The tombstone table is bounded between compactions, so the rewrite
-        is metadata-scale."""
+    def _retire_tombstones(
+        self, tomb: DataFrame, keys: DataFrame, namespaces: Sequence[str]
+    ) -> None:
+        """Resurrect upserted ids — a tombstone matches every version of
+        (id, namespace), so an upsert over a previously-deleted id must
+        retire the tombstone or the new version stays invisible. The
+        tombstone table is bounded between compactions, so the rewrite is
+        metadata-scale. `namespaces` are the upserted ones: only their
+        history floors move."""
         remaining = tomb.join(keys, ["id", "namespace"], "left_anti")
         tmp = os.path.join(self.path, ".tomb_upsert_tmp")
         remaining.write.mode("overwrite").parquet(tmp)
@@ -394,17 +384,7 @@ class VectorStore:
         # hit > 0 ⟺ a delete EVENT was physically erased (the resurrecting
         # upsert supersedes it in the live view) — history before this
         # point can no longer be reconstructed exactly
-        self._bump_history_floor()
-
-    def _clear_tombstones_for(self, keys: DataFrame) -> None:
-        """Probe-then-retire, sequential form (upsert_by_id and other
-        bounded callers; upsert_df overlaps the probe with the compaction
-        stats instead)."""
-        tomb = self._tombstones()
-        if tomb is None:
-            return
-        if self._probe_tombstones(tomb, keys):
-            self._retire_tombstones(tomb, keys)
+        self._bump_history_floor(namespaces)
 
     def _tombstones(self) -> DataFrame | None:
         return self._cached_plan("tomb", self._build_tombstones)
@@ -467,23 +447,47 @@ class VectorStore:
         except (OSError, ValueError, KeyError):
             return 0
 
-    def history_floor(self) -> int:
-        """Oldest version `df_as_of`/`changes_since` can answer exactly."""
+    def _load_floors(self) -> dict:
+        """{"floor": store-wide, "base": floor of namespaces with no own
+        entry, "ns": {namespace: floor}}. A file written before the
+        per-namespace entries existed has only "floor", which then bounds
+        every namespace."""
         try:
             with open(self._floor_path, encoding="utf-8") as fh:
-                return int(json.load(fh)["floor"])
+                raw = json.load(fh)
+            floor = int(raw["floor"])
         except (OSError, ValueError, KeyError):
-            return 0
+            return {"floor": 0, "base": 0, "ns": {}}
+        return {
+            "floor": floor,
+            "base": int(raw.get("base", floor if "ns" not in raw else 0)),
+            "ns": {k: int(v) for k, v in raw.get("ns", {}).items()},
+        }
 
-    def _bump_history_floor(self) -> None:
+    def history_floor(self, namespace: str | None = None) -> int:
+        """Oldest version `df_as_of`/`changes_since` can answer exactly —
+        for the whole store, or for one namespace. Every event-erasing
+        rewrite (compaction, optimize, tombstone retirement,
+        delete_namespace) touches named namespaces only, so another
+        namespace's history stays exact across it."""
+        floors = self._load_floors()
+        if namespace is None:
+            return floors["floor"]
+        return max(floors["base"], floors["ns"].get(namespace, 0))
+
+    def _bump_history_floor(self, namespaces: Iterable[str]) -> None:
+        floors = self._load_floors()
+        v = self.current_version()
+        floors["floor"] = v
+        floors["ns"].update({ns: v for ns in namespaces})
         with open(self._floor_path, "w", encoding="utf-8") as fh:
-            json.dump({"floor": self.current_version()}, fh)
+            json.dump(floors, fh, sort_keys=True)
         # every event-erasing rewrite moves the floor — the single
         # chokepoint the plan cache needs for compaction/retirement
         self._bump_plan_epoch()
 
-    def _check_floor(self, version: int) -> None:
-        floor = self.history_floor()
+    def _check_floor(self, version: int, namespace: str | None = None) -> None:
+        floor = self.history_floor(namespace)
         if version < floor:
             raise ValueError(
                 f"history below version {floor} was physically rewritten "
@@ -491,16 +495,18 @@ class VectorStore:
                 f"version {version}"
             )
 
-    def df_as_of(self, version: int) -> DataFrame:
+    def df_as_of(self, version: int, namespace: str | None = None) -> DataFrame:
         """The live view as it stood after write `version`: per
         (id, namespace), the latest event at or below `version` wins — a
         row version is visible unless superseded, a tombstone hides the
-        id. Raises if `version` predates the history floor.
+        id. Raises if `version` predates the history floor — the
+        namespace's own floor when `namespace` is given (the view is then
+        that namespace only).
 
         Plan shape: one window over the versioned union — heavier than the
         current-state `df()` (which skips the window for clean namespaces)
         and intended for audit/repro reads, not the serving path."""
-        self._check_floor(version)
+        self._check_floor(version, namespace)
         raw = self._raw()
         if raw is None:
             return local_rows_df(self.spark, [], VECTOR_SCHEMA)
@@ -523,6 +529,8 @@ class VectorStore:
                     F.lit(0).alias("__kind"),
                 )
             )
+        if namespace is not None:
+            events = events.filter(F.col("namespace") == namespace)
         return (
             latest_per_key(
                 events.filter(wv <= version),
@@ -534,7 +542,9 @@ class VectorStore:
             .drop("__kind", "write_version")
         )
 
-    def changes_since(self, version: int) -> DataFrame:
+    def changes_since(
+        self, version: int, namespace: str | None = None
+    ) -> DataFrame:
         """CDC feed: the events needed to roll a replica of state(version)
         forward to the current state — appended row versions as `upsert`,
         tombstones as `delete`, each stamped with its write_version (apply
@@ -542,13 +552,18 @@ class VectorStore:
         earlier one). Raises if `version` predates the history floor —
         events before it were physically erased, and a replica that old
         must re-sync from a full snapshot instead (the Delta/Iceberg CDC
-        contract across VACUUM)."""
-        self._check_floor(version)
+        contract across VACUUM). With `namespace`, the feed is that
+        namespace's events and only its own floor applies."""
+        self._check_floor(version, namespace)
         raw = self._raw()
         wv = F.coalesce(F.col("write_version"), F.lit(0))
+        ns_only = (
+            F.lit(True) if namespace is None
+            else F.col("namespace") == namespace
+        )
         out = None
         if raw is not None:
-            out = raw.filter(wv > version).select(
+            out = raw.filter(ns_only & (wv > version)).select(
                 "id",
                 "namespace",
                 "values",
@@ -559,7 +574,7 @@ class VectorStore:
             )
         tomb = self._tombstones()
         if tomb is not None:
-            dels = tomb.filter(wv > version).select(
+            dels = tomb.filter(ns_only & (wv > version)).select(
                 "id",
                 "namespace",
                 F.lit(None).cast("array<float>").alias("values"),
@@ -690,12 +705,11 @@ class VectorStore:
         had_data = self._raw() is not None
         self._append(rows)
         if had_data:
-            keys = local_rows_df(self.spark, 
-                [(r.id, namespace) for r in rows], "id string, namespace string"
+            keys = local_rows_df(
+                self.spark, [(r.id, namespace) for r in rows],
+                "id string, namespace string",
             )
-            self._clear_tombstones_for(keys)
-            self._mark_dirty([namespace])
-            self._maybe_compact(namespace)
+            self._after_upsert([namespace], keys)
         return [r.id for r in rows]
 
     # -- DataFrame-native bulk writes (W3/W4 at scale) ----------------------
@@ -828,30 +842,35 @@ class VectorStore:
             .parquet(self.data_path)
         )
         if had_data and affected:
-            self._mark_dirty(affected)
-            keys = shaped.select("id", "namespace")
-            tomb = self._tombstones()
-            if tomb is None:
-                self._maybe_compact_many(affected)
-            else:
-                # ONE post-write bookkeeping job: the tombstone overlap
-                # probe rides the compaction-stats aggregate as a union
-                # branch (see _collect_compact_stats). Any rewrite
-                # (tombstone retirement, compaction) happens strictly
-                # AFTER the read completes. The stats are collected
-                # before a retirement rather than after; at the trigger
-                # boundary that can only start a compaction earlier —
-                # the live view is unchanged and the history floor was
-                # already moved by the retirement itself.
-                rows = self._collect_compact_stats(affected, probe_keys=keys)
-                if any(int(r.dead) < 0 for r in rows):
-                    self._retire_tombstones(tomb, keys)
-                self._apply_compact_policy(
-                    affected, [r for r in rows if int(r.dead) >= 0]
-                )
+            self._after_upsert(affected, shaped.select("id", "namespace"))
         self._record_dims(dims)
         self._note_ns_write(affected)
         return n
+
+    def _after_upsert(self, affected: Sequence[str], keys: DataFrame) -> None:
+        """Post-write bookkeeping of both upsert paths over the upserted
+        (id, namespace) `keys`: mark the namespaces upsert-dirty, retire
+        any tombstone an upsert resurrects, apply the compaction policy.
+
+        ONE Spark job when tombstones exist: the tombstone overlap probe
+        rides the compaction-stats aggregate as a union branch (see
+        _collect_compact_stats). Any rewrite (tombstone retirement,
+        compaction) happens strictly AFTER the read completes. The stats
+        are collected before a retirement rather than after; at the
+        trigger boundary that can only start a compaction earlier — the
+        live view is unchanged and the history floor was already moved by
+        the retirement itself."""
+        self._mark_dirty(affected)
+        tomb = self._tombstones()
+        if tomb is None:
+            self._maybe_compact_many(affected)
+            return
+        rows = self._collect_compact_stats(affected, probe_keys=keys)
+        if any(int(r.dead) < 0 for r in rows):
+            self._retire_tombstones(tomb, keys, affected)
+        self._apply_compact_policy(
+            affected, [r for r in rows if int(r.dead) >= 0]
+        )
 
     def delete_df(self, keys: DataFrame) -> int:
         """W5 bulk: tombstone a (id, namespace) key DataFrame. Only keys
@@ -1005,7 +1024,7 @@ class VectorStore:
         self._clear_dirty(namespace)
         self._forget_dims(namespace)
         if existed:
-            self._bump_history_floor()
+            self._bump_history_floor([namespace])
         self._note_ns_write([namespace])
         return existed
 
@@ -1098,7 +1117,7 @@ class VectorStore:
         self._drop_namespace_tombstones(namespace)
         self._clear_dirty(namespace)
         # versions collapsed + tombstones folded: exact history now starts here
-        self._bump_history_floor()
+        self._bump_history_floor([namespace])
 
     def optimize(
         self, namespace: str | None = None, target_file_bytes: int = 128 << 20
@@ -1156,7 +1175,7 @@ class VectorStore:
             rewritten[ns] = len(files) - want
         if rewritten:
             # the bin-packed rewrite is a compaction: history floor moves
-            self._bump_history_floor()
+            self._bump_history_floor(rewritten)
         return rewritten
 
     # -- point reads (Q5-Q8) -----------------------------------------------
@@ -1489,8 +1508,8 @@ class VectorStore:
         built over UNIT-NORMALIZED vectors (hnswlib's cosine-space recipe)
         and serves metric="cosine" queries exactly — ranking by L2 over
         normalized vectors IS ranking by cosine (||q̂−x̂||² = 2−2·cos),
-        and the enrichment step recomputes the true cosine score against
-        the stored vectors. Unlike the reference, a query whose metric
+        and the final rank recomputes the true cosine score against the
+        raw vectors. Unlike the reference, a query whose metric
         doesn't match the attached space falls back to the honest exact
         scan instead of silently mis-scoring (SURVEY.md fact #2).
 
@@ -1499,7 +1518,11 @@ class VectorStore:
         SAVED/loaded index or a checkpointed one. `build_index` checkpoints
         automatically and every family's `apply_changes` detaches its feed
         (`operators/cdc.PendingTail`); only a hand-built index derived from
-        `store.df()` needs the caller's care.
+        `store.df()` needs the caller's care. An index whose rows carry
+        the store's `metadata` (and, in cosine space, the raw vector as
+        `raw_values`) — as `build_index` and every sync and resync supply
+        them — answers fresh reads from its own rows; any other index is
+        served through the enrichment join (`_serving_route`).
 
         `as_of_version` is the store version the supplied index actually
         reflects (default: the current version — right when the index was
@@ -1554,6 +1577,18 @@ class VectorStore:
             return F.transform(_norm(F.col("values")), lambda x: x.cast("float"))
         return F.col("values")
 
+    @staticmethod
+    def _payload(space: str) -> list:
+        """The columns the store hands an index next to (id, vector) at
+        build, CDC sync and resync: `metadata`, plus the raw vector in
+        cosine space (the index vector is normalized there). With them the
+        index rows of a fresh index are the namespace's live rows, and a
+        read can be answered from the index alone (`_serving_route`)."""
+        cols = [F.col("metadata")]
+        if space == "cosine":
+            cols.append(F.col("values").alias(RAW_VALUES))
+        return cols
+
     def build_index(self, namespace: str, factory=None, space: str = "l2") -> Any:
         """Build an index over the namespace's CURRENT live rows and attach
         it (W8/W10 + attach in one step). Default family: IVF sized at
@@ -1566,7 +1601,10 @@ class VectorStore:
         slice_df = (
             self.df()
             .filter(F.col("namespace") == namespace)
-            .select("id", self._space_vec(space).alias("values"))
+            .select(
+                "id", self._space_vec(space).alias("values"),
+                *self._payload(space),
+            )
         )
         if factory is None:
             n = slice_df.count()
@@ -1630,19 +1668,19 @@ class VectorStore:
             self._serving_synced_at[ns] = v1
             return
         try:
-            if self.history_floor() > v0:
+            # the namespace's own floor: compacting another namespace
+            # erases none of this one's events
+            if self.history_floor(ns) > v0:
                 raise ValueError("floor moved")
             feed = (
-                self.changes_since(v0)
-                .filter(
-                    (F.col("namespace") == ns)
-                    & (F.col("write_version") <= v1)
-                )
+                self.changes_since(v0, ns)
+                .filter(F.col("write_version") <= v1)
                 .select(
                     F.col("id").alias(id_col),
                     F.when(
                         F.col("values").isNotNull(), self._space_vec(space)
                     ).alias(vec_col),
+                    *self._payload(space),
                     "change_type",
                     "write_version",
                 )
@@ -1684,6 +1722,7 @@ class VectorStore:
             .select(
                 F.col("id").alias(id_col),
                 self._space_vec(space).alias(vec_col),
+                *self._payload(space),
                 F.lit("upsert").alias("change_type"),
                 F.lit(v).cast("long").alias("write_version"),
             )
@@ -1722,10 +1761,12 @@ class VectorStore:
 
         `mode`: "auto" routes through the namespace's attached index when
         one exists and can serve the query exactly (query metric matches
-        the attached space — l2 or cosine — and no metadata filter, since
-        the index carries no metadata columns), else brute force;
-        "indexed" requires the index and raises when it can't serve;
-        "exact" always scans. Indexed serving is still EXACT (certified
+        the attached space — l2 or cosine — and no metadata filter: the
+        index is searched unfiltered), else brute force; "indexed"
+        requires the index and raises when it can't serve; "exact"
+        always scans. A fresh index answers from its own rows in one
+        Spark job; a stale one (explicit modes only) goes through the
+        store's enrichment join (`_serving_route`). Indexed serving is still EXACT (certified
         pruning; cosine space ranks by L2 over normalized vectors, an
         exact monotone equivalent), scores rounded to the index's
         4-decimal granularity.
@@ -1747,11 +1788,11 @@ class VectorStore:
             # before routing: the roll-forward can only make the index
             # fresher, and routing does not depend on sync state
             self._sync_namespace(namespace)
-        indexable = self._serving_route(
+        route = self._serving_route(
             namespace, metric, metadata_filter, mode, target_recall
         )
         entry = self._serving.get(namespace)
-        if indexable and mode != "exact":
+        if route != "exact":
             dial = None
             if mode == "approx" and target_recall is not None:
                 if hasattr(entry[0], "ef_for_recall"):
@@ -1770,6 +1811,7 @@ class VectorStore:
                     nprobe if mode == "approx" and dial is None else None
                 ),
                 dial=dial,
+                cover=route == "cover",
             )
             return _matches(df)
         df = self.df().filter(F.col("namespace") == namespace)
@@ -1857,11 +1899,13 @@ class VectorStore:
         same mode semantics): when the namespace's attached index can
         serve, the corpus side reads ONLY the union of certified probe
         clusters (`knn_join_exact` — one pruned scan for the whole
-        batch) instead of paying |queries| full scans; reported scores
-        are always recomputed against the STORE's vectors. Cosine space
-        selects in normalized-L2 with the single-path's +32 over-fetch,
-        then final-ranks by true cosine. `sync=True` rolls the queried
-        namespace's index forward first (see `find_similar`)."""
+        batch) instead of paying |queries| full scans. A fresh index
+        answers with its own rows; a stale one (explicit modes) has its
+        hits rescored against the STORE's vectors
+        (`_indexed_batch_df`). Cosine space selects in normalized-L2
+        with the single-path's +32 over-fetch, then final-ranks by true
+        cosine. `sync=True` rolls the queried namespace's index forward
+        first (see `find_similar`)."""
         if sync:
             self._sync_namespace(namespace)
         if isinstance(queries, DataFrame):
@@ -1889,16 +1933,12 @@ class VectorStore:
                         f"query {qid!r} dimension {len(vec)} != namespace "
                         f"{namespace!r} dimension {ns_dim}"
                     )
-        # a metadata filter forces the exact path (the index carries no
-        # metadata columns) — the same rule as single-query serving
-        indexable = self._serving_route(
+        # a metadata filter forces the exact path — the same rule as
+        # single-query serving
+        route = self._serving_route(
             namespace, metric, metadata_filter, mode, target_recall
         )
-        ns_df = self.df().filter(F.col("namespace") == namespace)
-        if metadata_filter:
-            for mk, mv in metadata_filter.items():
-                ns_df = ns_df.filter(F.col("metadata")[mk] == str(mv))
-        if indexable and mode != "exact":
+        if route != "exact":
             index, vec_col, id_col, space = self._serving[namespace]
             if mode == "approx":
                 # approximate BATCH serving: one pruned scan over the
@@ -1938,53 +1978,13 @@ class VectorStore:
             else:
                 batch_join = getattr(index, "knn_join_exact", None)
             if batch_join is not None:
-                fetch_k = top_k
-                if space == "cosine":
-                    import math
-
-                    fetch_k = top_k + 32  # see _indexed_search_df
-
-                    def _norm(v):
-                        n = math.sqrt(sum(x * x for x in v)) or 1.0
-                        return [x / n for x in v]
-
-                    qprep = [
-                        (i, qid, _norm(v))
-                        for i, (qid, v) in enumerate(qrows)
-                    ]
-                else:
-                    qprep = [
-                        (i, qid, v) for i, (qid, v) in enumerate(qrows)
-                    ]
-                qdf = local_rows_df(self.spark, 
-                    [(i, q) for i, _, q in qprep],
-                    "__qid long, __qvec array<float>",
+                return self._indexed_batch_df(
+                    batch_join, namespace, qrows, top_k, metric,
+                    route == "enrich",
                 )
-                hits = batch_join(
-                    qdf, fetch_k, query_vec="__qvec", query_id="__qid",
-                    vec_col=vec_col, id_col=id_col,
-                ).select(
-                    F.col("__qid"),
-                    F.col(id_col).cast("string").alias("id"),
-                )
-                qmap = local_rows_df(self.spark, 
-                    [(i, qid, v) for i, (qid, v) in enumerate(qrows)],
-                    "__qid long, query_id string, __qraw array<double>",
-                )
-                # enrichment: the hit set is ≤ |queries|×fetch_k rows —
-                # broadcast it into the namespace scan (the batch analog
-                # of the single-path IN-list), then rescore against the
-                # STORE's vectors and cut to the final per-query top-k
-                cand = (
-                    ns_df.join(F.broadcast(hits), "id")
-                    .join(F.broadcast(qmap), "__qid")
-                )
-                scored = cand.withColumn(
-                    "score", F.round(metric_expr("values", "__qraw", metric), 4)
-                )
-                return top_per_key(scored, "query_id", top_k, "id", metric).select(
-                    "query_id", "id", "score", "values", "metadata"
-                )
+        ns_df = self.df().filter(F.col("namespace") == namespace)
+        for mk, mv in (metadata_filter or {}).items():
+            ns_df = ns_df.filter(F.col("metadata")[mk] == str(mv))
         # brute-force fallback: ONE broadcast of the bounded query set
         # against the namespace scan (operators/knn.knn_join), then one
         # id-join to re-attach values/metadata
@@ -2001,6 +2001,72 @@ class VectorStore:
             .select("query_id", "id", "score", "values", "metadata")
         )
 
+    def _indexed_batch_df(
+        self, batch_join, namespace: str, qrows: list, top_k: int,
+        metric: str, enrich: bool,
+    ) -> DataFrame:
+        """The indexed batch plan: the index's batch join selects each
+        query's top-k with the float64 query — the precision the single
+        path selects with. Covering route (`enrich` False): the join's
+        rows carry values and metadata, and in l2 space its ranking and
+        scores are the answer; cosine space re-ranks the over-fetched
+        rows by true cosine on the raw vectors. `enrich` (a stale index):
+        the hit ids join back into the store scan, which rescores them
+        and drops ids deleted since the sync."""
+        _index, vec_col, id_col, space = self._serving[namespace]
+        fetch_k = top_k
+        qprep = [v for _, v in qrows]
+        if space == "cosine":
+            import math
+
+            fetch_k = top_k + 32  # see _indexed_search_df
+            norms = [math.sqrt(sum(x * x for x in v)) or 1.0 for v in qprep]
+            qprep = [[x / n for x in v] for v, n in zip(qprep, norms)]
+        qdf = local_rows_df(
+            self.spark, list(enumerate(qprep)),
+            "__qid long, __qvec array<double>",
+        )
+        hits = batch_join(
+            qdf, fetch_k, query_vec="__qvec", query_id="__qid",
+            vec_col=vec_col, id_col=id_col,
+        )
+        if not enrich and space == "l2":
+            # the literal array maps the position back to the caller's
+            # query id without a join
+            qids = ", ".join(id_lit(qid) for qid, _ in qrows)
+            return hits.select(
+                F.expr(f"element_at(array({qids}), CAST(__qid AS INT) + 1)")
+                .alias("query_id"),
+                F.col(id_col).alias("id"), "score",
+                F.col(vec_col).alias("values"), "metadata",
+            )
+        if not enrich:
+            cand = hits.select(
+                "__qid", F.col(id_col).alias("id"),
+                F.col(RAW_VALUES).alias("values"), "metadata",
+            )
+        else:
+            # enrichment: the hit set is ≤ |queries|×fetch_k rows —
+            # broadcast it into the namespace scan (the batch analog of
+            # the single-path IN-list)
+            cand = self.df().filter(F.col("namespace") == namespace).join(
+                F.broadcast(hits.select(
+                    "__qid", F.col(id_col).cast("string").alias("id")
+                )),
+                "id",
+            )
+        qmap = local_rows_df(
+            self.spark,
+            [(i, qid, v) for i, (qid, v) in enumerate(qrows)],
+            "__qid long, query_id string, __qraw array<double>",
+        )
+        scored = cand.join(F.broadcast(qmap), "__qid").withColumn(
+            "score", F.round(metric_expr("values", "__qraw", metric), 4)
+        )
+        return top_per_key(scored, "query_id", top_k, "id", metric).select(
+            "query_id", "id", "score", "values", "metadata"
+        )
+
     def _serving_route(
         self,
         namespace: str,
@@ -2008,23 +2074,26 @@ class VectorStore:
         metadata_filter: Mapping[str, str] | None,
         mode: str,
         target_recall: float | None = None,
-    ) -> bool:
+    ) -> str:
         """The shared serving router of `find_similar` and
-        `find_similar_batch`: validate mode/target_recall, then decide
-        whether the read routes through the attached index.
+        `find_similar_batch`: validate mode/target_recall, then pick the
+        read's route.
 
-        Read-your-writes: auto NEVER serves a stale index — if the
-        namespace was written past the index's last sync, fall back to
-        the exact scan (call sync_indexes() to restore routed serving).
-        Staleness is judged PER NAMESPACE from the write paths' tracker,
-        so a THIS-SESSION write to another namespace does not knock this
-        one off its fresh index — but the tracker is a lower bound
-        (blind to other writers), so every version since the sync must
-        also be accounted for by this object's own writes; any
-        unaccounted version means an external process may have touched
-        this namespace and only `synced == cur` proves freshness
-        (round-6 ADVICE medium). Explicit mode="indexed"/"approx" serves
-        the index as-synced, raising when it cannot serve at all."""
+        - "exact": scan the namespace. Taken by mode="exact", by any read
+          the attached index cannot serve (no index, a metric other than
+          its space, a metadata filter), and by auto over a stale index.
+        - "cover": the index is fresh and carries the store's payload
+          (`_payload`), so its rows are the namespace's live rows: the
+          index plan ranks, scores and returns whole rows in one collect.
+        - "enrich": explicit mode="indexed"/"approx" over a stale index
+          (or one without payload) — the index selects, then the
+          reference's enrichment join re-reads and rescores the hits from
+          the store, dropping ids deleted since the sync.
+
+        Read-your-writes: auto NEVER serves a stale index (call
+        sync_indexes() to restore routed serving). Explicit
+        mode="indexed"/"approx" serves the index as-synced, raising when
+        it cannot serve at all."""
         if mode not in ("auto", "exact", "indexed", "approx"):
             raise ValueError(f"unknown mode {mode!r}")
         if target_recall is not None:
@@ -2046,26 +2115,6 @@ class VectorStore:
             and metric == entry[3]
             and not metadata_filter
         )
-        if indexable and mode == "auto":
-            synced = self._serving_synced_at.get(namespace, -1)
-            cur = self.current_version()
-            last_write = self._ns_mutated_at.get(namespace)
-            if synced == cur:
-                # also catches a version RESET (clear_all/restore):
-                # synced > cur means the index predates a wipe
-                fresh = True
-            elif last_write is None:
-                fresh = False
-            else:
-                fresh = (
-                    last_write <= synced <= cur
-                    and all(
-                        v in self._session_versions
-                        for v in range(synced + 1, cur + 1)
-                    )
-                )
-            if not fresh:
-                indexable = False
         if mode in ("indexed", "approx"):
             if entry is None:
                 raise ValueError(
@@ -2076,7 +2125,39 @@ class VectorStore:
                     f"indexed serving requires metric={entry[3]!r} (the "
                     "attached space) and no metadata_filter"
                 )
-        return indexable
+        if not indexable or mode == "exact":
+            return "exact"
+        if not self._index_fresh(namespace):
+            return "exact" if mode == "auto" else "enrich"
+        rows = getattr(entry[0], "indexed", None)
+        need = {"metadata"} | ({RAW_VALUES} if entry[3] == "cosine" else set())
+        if rows is not None and need <= set(rows.columns):
+            return "cover"
+        return "enrich"
+
+    def _index_fresh(self, namespace: str) -> bool:
+        """Whether the namespace's index reflects every write to it:
+        synced at the current version, or every later version was written
+        by THIS object to other namespaces. Staleness is judged PER
+        NAMESPACE from the write paths' tracker, so a this-session write
+        to another namespace does not knock this one off its index — but
+        the tracker is a lower bound (blind to other writers), so every
+        version since the sync must also be accounted for by this
+        object's own writes; any unaccounted version means an external
+        process may have touched this namespace and only `synced == cur`
+        proves freshness."""
+        synced = self._serving_synced_at.get(namespace, -1)
+        cur = self.current_version()
+        if synced == cur:
+            # also catches a version RESET (clear_all/restore): synced >
+            # cur means the index predates a wipe
+            return True
+        last_write = self._ns_mutated_at.get(namespace)
+        if last_write is None:
+            return False
+        return last_write <= synced <= cur and all(
+            v in self._session_versions for v in range(synced + 1, cur + 1)
+        )
 
     def _indexed_search_df(
         self,
@@ -2085,19 +2166,26 @@ class VectorStore:
         top_k: int,
         nprobe: int | None = None,
         dial: dict | None = None,
+        cover: bool = False,
     ) -> DataFrame:
         """The indexed serving plan: certified pruned top-k from the
-        attached index, then the reference's two-step enrichment
-        (query_processor.py:37-49) — the ≤k hit ids push into the store
-        scan as an IN-list predicate (parquet row-group skipping) to
-        re-attach values/metadata, silently dropping ids missing from
-        storage, ranking preserved.
+        attached index, then the final rank and score with the same
+        `knn()` kernel as the brute path.
+
+        `cover` (a fresh index carrying the store's payload, see
+        `_serving_route`): the index's own hit rows carry values and
+        metadata, so the final rank runs on top of the index plan and the
+        whole read is one collect. Otherwise the reference's two-step
+        enrichment (query_processor.py:37-49): the ≤k hit ids push into
+        the store scan as an IN-list predicate (parquet row-group
+        skipping) to re-attach values/metadata, silently dropping ids
+        missing from storage, and the store rescores them.
 
         Cosine space: the query normalizes like the indexed vectors, the
         index ranks by L2 over the normalized pair (monotone-equivalent
-        to cosine: ||q̂−x̂||² = 2−2·cos), and the enrichment recomputes
-        the TRUE cosine against the stored raw vectors with the same
-        kernel as the brute path — so the reported score is identical to
+        to cosine: ||q̂−x̂||² = 2−2·cos), and the final rank recomputes
+        the TRUE cosine against the raw vectors with the same kernel as
+        the brute path — so the reported score is identical to
         metric="cosine" brute force, ordered descending."""
         index, vec_col, id_col, space = self._serving[namespace]
         q = [float(x) for x in query_values]
@@ -2151,6 +2239,18 @@ class VectorStore:
             hits = index.search_exact(
                 q, fetch_k, vec_col=vec_col, id_col=id_col
             )
+        out_metric = "cosine" if space == "cosine" else "l2"
+        if cover:
+            # no job before this one: the final knn stacks on the index's
+            # own top-k, a second bounded sort inside the same collect
+            vals = RAW_VALUES if space == "cosine" else vec_col
+            return knn(
+                hits, query_values, top_k, vec_col=vals, id_col=id_col,
+                metric=out_metric,
+            ).select(
+                F.col(id_col).alias("id"), F.col(vals).alias("values"),
+                "metadata", "score",
+            )
         # the hit list is bounded (≤k rows): for serving-scale k, collect
         # the ids and push an IN-list predicate into the store scan so
         # parquet row-group stats skip everything but the hit rows —
@@ -2170,7 +2270,7 @@ class VectorStore:
             )
         ns_df = self.df().filter(F.col("namespace") == namespace)
         if len(hit_ids) <= 1024:
-            joined = ns_df.filter(F.col("id").isin(hit_ids))
+            joined = ns_df.filter(id_in("id", hit_ids))
         else:
             id_frame = local_rows_df(self.spark, 
                 [(i,) for i in hit_ids], "id string"
@@ -2180,7 +2280,6 @@ class VectorStore:
         # vectors (the index selected; the store scores) — so even a
         # deliberately as-synced indexed read never pairs a row with a
         # score computed from a superseded vector version
-        out_metric = "cosine" if space == "cosine" else "l2"
         return knn(
             joined, query_values, top_k, vec_col="values", id_col="id",
             metric=out_metric,
@@ -2210,7 +2309,7 @@ class VectorStore:
                 f"query dimension {len(query_values)} != namespace "
                 f"{namespace!r} dimension {ns_dim}"
             )
-        df = self.df_as_of(version).filter(F.col("namespace") == namespace)
+        df = self.df_as_of(version, namespace)
         return self._search_frame(
             df, query_values, top_k, metric, metadata_filter
         )

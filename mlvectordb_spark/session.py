@@ -57,5 +57,9 @@ def get_spark(
         # this knob sizes executors instead.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        # generated-class cache (default 100 entries): a serving round or
+        # a registry pass plans more distinct stages than that, so the
+        # default evicts and recompiles the same classes on every repeat
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     return builder.getOrCreate()

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from mlvectordb_spark.session import get_spark
@@ -15,3 +17,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """`spark_jobs(fn)` -> (Spark jobs `fn` launched, its result): `fn`
+    runs under a fresh job group, counted from the status tracker."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"test-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

@@ -92,6 +92,25 @@ def test_vector_lit_round_trips(spark):
         assert struct.pack(">d", g) == struct.pack(">d", r)
 
 
+def test_id_in_round_trips_awkward_ids(spark):
+    """`id_in` (SQL text) matches exactly the ids it lists — quotes,
+    backslashes, escape-like sequences, non-ASCII and newlines included —
+    and `negate` keeps exactly the others."""
+    ids = ["plain", "it's", "back\\slash", "\\'", "''", "\\n", "tab\there",
+           "new\nline", "ünï", "%_", "", "a\\"]
+    df = spark.createDataFrame([(i,) for i in ids + ["other"]], "id string")
+    picked = ids[::2]
+    got = {r.id for r in df.filter(V.id_in("id", picked)).collect()}
+    assert got == set(picked)
+    rest = {r.id for r in df.filter(V.id_in("id", picked, negate=True)).collect()}
+    assert rest == set(ids + ["other"]) - set(picked)
+    nums = spark.range(5).filter(V.id_in("id", [1, 3])).collect()
+    assert [r.id for r in nums] == [1, 3]
+    assert df.filter(V.id_in("id", [])).count() == 0
+    with pytest.raises(TypeError):
+        V.id_lit(1.5)
+
+
 def test_normalize_unit_norm(spark, vec_df):
     df, _ = vec_df
     out = df.select(V.normalize("v").alias("u")).collect()

@@ -449,7 +449,9 @@ def test_scan_count_budgets(spark, sf_dir):
     assert not over, f"entries over scan budget: {over}"
 
 
-def test_heavy_bigrams_constructs_with_one_job_and_no_distinct(spark, sf_dir):
+def test_heavy_bigrams_constructs_with_one_job_and_no_distinct(
+    spark, sf_dir, spark_jobs
+):
     """The r7 entry derived its threshold as a corpus-wide exact
     countDistinct over every bigram occurrence — the very
     distinct-cardinality shuffle the CMS prefilter exists to avoid
@@ -461,7 +463,6 @@ def test_heavy_bigrams_constructs_with_one_job_and_no_distinct(spark, sf_dir):
     in the returned plan — hence the job-count gate."""
     import re
 
-    sc = spark.sparkContext
     # The cold construction pays a schema-inference job whose presence
     # (and AQE split) depends on what earlier tests left cached — the r8
     # budget of 5 was loose enough to readmit a 1-2 job eager action
@@ -473,16 +474,10 @@ def test_heavy_bigrams_constructs_with_one_job_and_no_distinct(spark, sf_dir):
     # corpus-scale action (the r7 countDistinct cost 2+) trips the gate.
     QUERIES["heavy_bigrams"](spark, sf_dir)  # warmup: schema inference
     spark.catalog.clearCache()
-    group = "hb-construct-gate"
-    sc.setJobGroup(group, "heavy_bigrams construction")
-    try:
-        df = QUERIES["heavy_bigrams"](spark, sf_dir)
-    finally:
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 3, (
-        f"warm entry construction ran {len(jobs)} jobs (measured floor 2 "
-        f"= the AQE-split CMS matrix collect, budget 3): {jobs}"
+    jobs, df = spark_jobs(lambda: QUERIES["heavy_bigrams"](spark, sf_dir))
+    assert jobs <= 3, (
+        f"warm entry construction ran {jobs} jobs (measured floor 2 "
+        f"= the AQE-split CMS matrix collect, budget 3)"
     )
     # the r7 derivation was an eager corpus-wide countDistinct — invisible
     # in both the returned plan and (at sf0.01) the job byte counts, so
@@ -703,3 +698,26 @@ def test_bigram_logprob_no_single_partition_of_lm_table(spark, sf_dir):
     assert raw.count("Arguments: SinglePartition") == 1, raw
     assert "windowspecdefinition(specifiedwindowframe" not in raw, raw
     assert plan["uses_broadcast"]  # the 1-row T/V totals
+
+
+def test_codegen_cache_keeps_classes_across_a_pass(spark, sf_dir):
+    """Re-running a registry entry after a pass over others compiles no
+    new classes: the generated-code cache (`spark.sql.codegen.cache.
+    maxEntries` in session.py) holds a pass's classes, where Spark's
+    default of 100 evicts and recompiles them on every repeat."""
+    counter = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def run(name):
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    for name in ("merge_evolve", "tpch_q5", "tpch_q18", "events_sessionize",
+                 "curation_pipeline", "bm25_topk", "join_mv"):
+        run(name)
+    before = counter.getCount()
+    run("merge_evolve")
+    assert counter.getCount() == before

@@ -64,8 +64,9 @@ def test_score_column_calls_independent_of_dim(spark, monkeypatch, metric):
 DIM = 64
 N_PER_NS = 600
 # upper bounds on py4j calls for one warm EngineService.search, the
-# minimum of 3 calls. Measured with this corpus: see CHANGES.md.
-_BUDGET = {"ivf": 450, "ivfpq": 800, "graph": 400, "exact": 200}
+# minimum of 3 calls, about 10% above the counts measured with this corpus
+# (ivf 257, ivfpq 460, graph 220, exact 103; see CHANGES.md).
+_BUDGET = {"ivf": 285, "ivfpq": 505, "graph": 245, "exact": 115}
 
 
 @pytest.fixture(scope="module")

@@ -989,14 +989,15 @@ def test_incremental_sync_survives_compaction(spark, tmp_path, family):
 # Spark jobs per `_sync_namespace` over 9 sync cycles. Each family rolls
 # forward through the shared PendingTail: 3 jobs per sync (the feed window's
 # shuffle, then the shuffle and result of the one stats aggregate that
-# materializes the feed); the 8th sync folds the chain (one job per
-# broadcast retire in it + the checkpoint). Graph folds two chains: the
-# graph table and its pending tail.
-_FOLD = {"ivf": 12, "ivfpq": 12, "lsh": 12, "graph": 20}
+# materializes the feed and returns its ids); the 8th sync folds the chain:
+# one checkpoint per folded table (graph: its graph table and its pending
+# tail), and for IVF and IVF+PQ the 2-job exact count refresh. Small feeds
+# retire through NOT IN lists, so the chain holds no broadcast to re-run.
+_FOLD = {"ivf": 6, "ivfpq": 6, "lsh": 4, "graph": 5}
 
 
 @pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph"])
-def test_jobs_per_sync_pinned(spark, tmp_path, family):
+def test_jobs_per_sync_pinned(spark, tmp_path, family, spark_jobs):
     rng = np.random.default_rng(0)
     X = rng.normal(size=(2000, 16))
     store = VectorStore(spark, str(tmp_path / "jobs"))
@@ -1008,23 +1009,347 @@ def test_jobs_per_sync_pinned(spark, tmp_path, family):
         assume_unique_ids=True,
     )
     store.build_index("default", factory=_serving_families()[family])
-    sc = spark.sparkContext
     counts = []
-    for cycle in range(9):
+    for _cycle in range(9):
         store.upsert_by_id(
             [
                 {"id": f"k{i}", "values": [float(x) for x in rng.normal(size=16)]}
                 for i in rng.choice(2000, 8, replace=False)
             ]
         )
-        group = f"sync-jobs-{family}-{cycle}"
-        sc.setJobGroup(group, group)
-        try:
-            store._sync_namespace("default")
-        finally:
-            sc._jsc.clearJobGroup()
-        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        counts.append(spark_jobs(lambda: store._sync_namespace("default"))[0])
     assert counts == [3] * 7 + [_FOLD[family], 3], counts
+
+
+def _metadata_store(spark, path, factories, space="l2", n=400, dim=16):
+    """One namespace per factory, rows carrying metadata (with a quote and
+    a backslash), each namespace with a built index in `space`."""
+    rng = np.random.default_rng(5)
+    centers = rng.normal(0.0, 4.0, (8, dim))
+    rows = []
+    for ns in factories:
+        X = centers[rng.integers(0, 8, n)] + rng.normal(0.0, 1.0, (n, dim))
+        rows += [
+            (f"{ns}-{i}", [float(x) for x in X[i]], ns,
+             {"i": str(i), "tag": "it's \\ ok"})
+            for i in range(n)
+        ]
+    store = VectorStore(spark, path, rebuild_threshold=0.95)
+    store.upsert_df(
+        spark.createDataFrame(
+            rows,
+            "id string, values array<float>, namespace string, "
+            "metadata map<string,string>",
+        ),
+        assume_unique_ids=True,
+    )
+    for ns, factory in factories.items():
+        store.build_index(ns, factory=factory, space=space)
+    return store, centers, rng
+
+
+def _read_families():
+    from mlvectordb_spark.operators.ann import IVFIndex, IVFPQIndex, LSHIndex
+    from mlvectordb_spark.operators.graph_ann import GraphANNIndex
+
+    return {
+        "ivf": lambda: IVFIndex(n_clusters=8, seed=1),
+        "ivfpq": lambda: IVFPQIndex(n_clusters=8, m=4, k_sub=8, seed=1),
+        "lsh": lambda: LSHIndex(bucket_length=4.0, num_hash_tables=3, seed=1),
+        "graph": lambda: GraphANNIndex(
+            n_blocks=2, m=4, ef_construction=16, seed=1
+        ),
+    }
+
+
+# Spark jobs per fresh indexed read: IVF and graph answer in the index's
+# one collect; IVF+PQ's tau collect precedes its pool rescore
+# (`quantize.certified_pool`), and LSH's probe collect precedes its
+# certified bucket window (`LSHIndex.search_exact`).
+_READ_JOBS = {"ivf": 1, "ivfpq": 2, "lsh": 2, "graph": 1}
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph"])
+def test_fresh_indexed_read_jobs_pinned(spark, tmp_path, family, spark_jobs):
+    """A fresh index answers from its own rows: a warm search is one job
+    (IVF+PQ and LSH: two), and so is the first search right after a CDC
+    sync — no retire broadcast, no count refresh, no store scan."""
+    store, centers, rng = _metadata_store(
+        spark, str(tmp_path / "jobs"), {family: _read_families()[family]}
+    )
+    q = (centers[0] + rng.normal(0.0, 1.0, 16)).tolist()
+
+    def search():
+        out = store.find_similar(q, 5, family, metric="l2")
+        assert len(out) == 5 and all(h["metadata"] for h in out)
+        return out
+
+    search()  # warm
+    assert spark_jobs(search)[0] == _READ_JOBS[family]
+    store.upsert_by_id(
+        [{"id": f"{family}-{i}", "values": rng.normal(size=16).tolist(),
+          "metadata": {"i": "new"}} for i in range(6)],
+        family,
+    )
+    store.delete([f"{family}-{i}" for i in range(10, 14)], family)
+    store.sync_indexes()
+    jobs, got = spark_jobs(search)
+    assert jobs == _READ_JOBS[family]
+    assert got == store.find_similar(q, 5, family, metric="l2", mode="exact")
+
+
+@pytest.mark.parametrize(
+    "family,space",
+    [("ivf", "l2"), ("ivfpq", "l2"), ("graph", "l2"), ("ivf", "cosine"),
+     ("graph", "cosine")],
+)
+def test_covering_reads_match_exact_scan(spark, tmp_path, family, space):
+    """Single and batch reads in every mode over a fresh index equal the
+    exact scan — ids, scores, values and metadata — before and after a
+    sync that leaves a pending tail. A batch selects and ranks with the
+    float64 query, so each of its queries equals the single exact read."""
+    store, centers, rng = _metadata_store(
+        spark, str(tmp_path / "cover"), {family: _read_families()[family]},
+        space=space,
+    )
+
+    def check():
+        qs = {
+            f"q{j}": (centers[j % 8] + rng.normal(0.0, 1.0, 16)).tolist()
+            for j in range(4)
+        }
+        truth = {
+            qid: store.find_similar(q, 5, family, metric=space, mode="exact")
+            for qid, q in qs.items()
+        }
+        # graph's approx dial is a bounded beam: not exact by contract
+        modes = ("auto", "indexed") + (("approx",) if family != "graph" else ())
+        for mode in modes:
+            kw = {"nprobe": 8} if mode == "approx" else {}
+            for qid, q in qs.items():
+                got = store.find_similar(
+                    q, 5, family, metric=space, mode=mode, **kw
+                )
+                assert got == truth[qid], (mode, qid)
+            rows = store.find_similar_batch(
+                qs, 5, family, metric=space, mode=mode, **kw
+            ).collect()
+            for qid in qs:
+                got = sorted(
+                    (r for r in rows if r.query_id == qid),
+                    key=lambda r: [h["id"] for h in truth[qid]].index(r.id),
+                )
+                assert [
+                    {"id": r.id, "values": list(r.values),
+                     "metadata": dict(r.metadata), "score": r.score}
+                    for r in got
+                ] == truth[qid], (mode, qid)
+
+    check()
+    store.upsert_by_id(
+        [{"id": f"{family}-{i}", "values": rng.normal(size=16).tolist(),
+          "metadata": {"i": "moved"}} for i in range(0, 40, 4)],
+        family,
+    )
+    store.delete([f"{family}-{i}" for i in range(1, 40, 4)], family)
+    store.sync_indexes()
+    check()
+
+
+@pytest.mark.parametrize("family", ["ivf", "graph"])
+def test_payload_survives_save_load(spark, tmp_path, family):
+    """The metadata payload is part of the saved layout: a reloaded index
+    attached to the store still answers fresh reads from its own rows."""
+    store, centers, rng = _metadata_store(
+        spark, str(tmp_path / "persist"), {family: _read_families()[family]}
+    )
+    idx = store.attached_index(family)
+    idx.save(str(tmp_path / "idx"))
+    loaded = type(idx).load(spark, str(tmp_path / "idx"))
+    assert "metadata" in loaded.indexed.columns
+    store.attach_index(family, loaded, vec_col="values", id_col="id")
+    assert store._serving_route(family, "l2", None, "auto") == "cover"
+    q = (centers[3] + rng.normal(0.0, 1.0, 16)).tolist()
+    assert store.find_similar(q, 5, family, metric="l2") == store.find_similar(
+        q, 5, family, metric="l2", mode="exact"
+    )
+
+
+def test_stale_explicit_reads_keep_two_step(spark, tmp_path):
+    """An explicit indexed/approx read of a STALE index still goes through
+    the store: ids deleted since the sync drop out, and a row upserted
+    since the sync is reported with its current vector and metadata."""
+    store, centers, rng = _metadata_store(
+        spark, str(tmp_path / "stale2"), {"ivf": _read_families()["ivf"]}
+    )
+    q = (centers[2] + rng.normal(0.0, 1.0, 16)).tolist()
+    top = store.find_similar(q, 5, "ivf", metric="l2", mode="indexed")
+    gone, moved = top[0]["id"], top[1]["id"]
+    store.delete([gone], "ivf")
+    new_vec = [float(x) + 0.01 for x in top[1]["values"]]
+    store.upsert_by_id(
+        [{"id": moved, "values": new_vec, "metadata": {"i": "moved"}}], "ivf"
+    )
+    for mode in ("indexed", "approx"):
+        got = store.find_similar(q, 5, "ivf", metric="l2", mode=mode)
+        assert gone not in {h["id"] for h in got}
+        hit = {h["id"]: h for h in got}[moved]
+        assert hit["metadata"] == {"i": "moved"}
+        assert hit["values"] == [float(np.float32(x)) for x in new_vec]
+        rows = store.find_similar_batch(
+            {"a": q}, 5, "ivf", metric="l2", mode=mode
+        ).collect()
+        assert gone not in {r.id for r in rows}
+        assert {r.id: dict(r.metadata) for r in rows}[moved] == {"i": "moved"}
+
+
+def test_retire_inline_ids_then_join_above_bound(spark, tmp_path):
+    """A small feed retires through a driver-side NOT IN list (no join in
+    the served plan, so a read launches no broadcast job); a feed above
+    `PendingTail.INLINE_IDS` events keeps the anti-join."""
+    from mlvectordb_spark.operators.ann import IVFIndex
+    from mlvectordb_spark.operators.cdc import PendingTail
+
+    store = VectorStore(spark, str(tmp_path / "inline"), rebuild_threshold=0.95)
+    n = 1500
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k'{i}", [float(i % 37), float(i % 11)], "A") for i in range(n)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    idx = store.build_index("A", factory=lambda: IVFIndex(n_clusters=4, seed=1))
+
+    def plan():
+        return idx.indexed._jdf.queryExecution().optimizedPlan().toString()
+
+    store.delete(["k'3", "k'4"], "A")
+    store.sync_indexes()
+    assert idx.cdc.retired_ids is not None and sorted(idx.cdc.retired_ids) == [
+        "k'3", "k'4"
+    ]
+    assert "Join" not in plan(), plan()
+    assert {r.id for r in idx.indexed.collect()} == {
+        f"k'{i}" for i in range(n)
+    } - {"k'3", "k'4"}
+    big = PendingTail.INLINE_IDS + 10
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k'{i}", [1.0, float(i % 5)], "A") for i in range(big)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    idx.cdc.FOLD_SYNCS = 100  # keep the chain unfolded to see the join
+    idx.cdc.FOLD_SHARE = 10.0
+    store.sync_indexes()
+    assert idx.cdc.retired_ids is None
+    assert "LeftAnti" in plan(), plan()
+    got = store.find_similar([1.0, 2.0], 3, "A", metric="l2")
+    assert got == store.find_similar([1.0, 2.0], 3, "A", metric="l2",
+                                     mode="exact")
+
+
+def test_ivf_counts_stay_lower_bounds_until_fold(spark, tmp_path):
+    """After apply_changes the cached per-cluster counts are certified
+    lower bounds (count − retired + entered): no count job on the next
+    search, never above the true counts; the fold restores exact ones."""
+    from mlvectordb_spark.operators.ann import IVFIndex
+
+    store, centers, rng = _metadata_store(
+        spark, str(tmp_path / "counts"),
+        {"ivf": lambda: IVFIndex(n_clusters=8, seed=1)},
+    )
+    idx = store.attached_index("ivf")
+
+    def exact():
+        counts = np.zeros(8, dtype=np.int64)
+        for r in idx.indexed.groupBy("cluster_id").count().collect():
+            counts[int(r.cluster_id)] = int(r["count"])
+        return counts
+
+    for cycle in range(idx.cdc.FOLD_SYNCS):
+        store.upsert_by_id(
+            [{"id": f"ivf-{(cycle * 7 + i) % 400}",
+              "values": rng.normal(size=16).tolist()} for i in range(5)],
+            "ivf",
+        )
+        store.sync_indexes()
+        assert idx._counts is not None
+        if idx.cdc.syncs:
+            assert (idx._counts <= exact()).all()
+            assert (idx._counts < exact()).any()
+    assert idx.cdc.syncs == 0, "the last sync folds"
+    assert (idx._counts == exact()).all()
+
+
+def test_floor_is_per_namespace(spark, tmp_path):
+    """Compacting namespace A erases only A's history: B's index keeps
+    rolling forward incrementally while A's index resyncs."""
+    from mlvectordb_spark.operators.ann import IVFIndex
+
+    store, _centers, rng = _metadata_store(
+        spark, str(tmp_path / "floor"),
+        {ns: (lambda: IVFIndex(n_clusters=4, seed=1)) for ns in "AB"},
+        n=60,
+    )
+    v0 = store.current_version()
+    for ns in "AB":
+        store.upsert_by_id(
+            [{"id": f"{ns}-1", "values": rng.normal(size=16).tolist()}], ns
+        )
+    store.compact("A")
+    assert store.history_floor("A") > v0 >= store.history_floor("B")
+    assert store.history_floor() == store.history_floor("A")
+    with pytest.raises(ValueError):
+        store.changes_since(v0, "A")
+    assert store.changes_since(v0, "B").count() == 1
+    store.upsert_by_id(
+        [{"id": "B-2", "values": rng.normal(size=16).tolist()}], "B"
+    )
+    resynced = []
+    resync = store._resync_index
+
+    def spy(ns, *args, **kwargs):
+        resynced.append(ns)
+        return resync(ns, *args, **kwargs)
+
+    store._resync_index = spy
+    store.sync_indexes()
+    assert resynced == ["A"]
+    for ns in "AB":
+        q = rng.normal(size=16).tolist()
+        assert store.find_similar(q, 3, ns, metric="l2") == store.find_similar(
+            q, 3, ns, metric="l2", mode="exact"
+        )
+
+
+# append (1) + the bookkeeping aggregate: live/tombstone stats and the
+# overlap probe as union branches (map stages + result)
+_UPSERT_BY_ID_JOBS = 7
+
+
+def test_upsert_by_id_bookkeeping_jobs_pinned(spark, tmp_path, spark_jobs):
+    """With tombstones present, an upsert_by_id pays the append and ONE
+    bookkeeping job (overlap probe + compaction stats), like upsert_df —
+    and still resurrects a deleted id."""
+    store = VectorStore(spark, str(tmp_path / "ubi"), rebuild_threshold=0.95)
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k{i}", [float(i), 1.0], "A") for i in range(40)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    store.delete(["k1", "k2"], "A")
+    store.upsert_by_id([{"id": "k3", "values": [3.0, 2.0]}], "A")  # warm
+    jobs, _ = spark_jobs(
+        lambda: store.upsert_by_id([{"id": "k4", "values": [4.0, 2.0]}], "A")
+    )
+    assert jobs == _UPSERT_BY_ID_JOBS, jobs
+    store.upsert_by_id([{"id": "k1", "values": [1.0, 5.0]}], "A")
+    assert store.read("k1", "A").values == [1.0, 5.0]
 
 
 def test_family_lazy_create_collapses_feed(spark, tmp_path):
