@@ -163,6 +163,16 @@ def _matches(ranked: DataFrame) -> list[dict[str, Any]]:
     ]
 
 
+def _probe_rows(df: DataFrame, dead: int) -> DataFrame:
+    """Per-id rows of a store-side probe in the shape of the compaction
+    stats aggregate (null namespace marks them): `dead` = 1 for a
+    tombstone hit, 0 for a stored row."""
+    return df.selectExpr(
+        "CAST(NULL AS STRING) AS namespace", "id", "0L AS n", "0L AS n_ids",
+        f"{int(dead)}L AS dead",
+    )
+
+
 class VectorStore:
     """Namespaced vector storage over a partitioned parquet table."""
 
@@ -195,15 +205,21 @@ class VectorStore:
         # external write into any namespace, so auto-mode must not trust
         # the per-namespace tracker across it (round-6 ADVICE medium).
         self._session_versions: set[int] = set()
-        # epoch-keyed reader-plan cache (r12 verdict, next-round #1): every
-        # df()/_raw()/_tombstones() call used to rebuild the reader plan —
+        # exact per-namespace garbage ledger, the compaction trigger's
+        # three inputs carried forward by this object's write paths:
+        # {ns: (rows, ids, tombstones, version, floor)}, where (version,
+        # floor) is the store state after this object's last write to the
+        # namespace (see _ledger_get). Session-scoped like _ns_mutated_at.
+        self._ledger: dict[str, tuple[int, int, int, int, int]] = {}
+        # epoch-keyed reader-plan cache: without it every
+        # df()/_raw()/_tombstones() call rebuilds the reader plan —
         # driver-side file listing + analysis per call, ~10 sequential
         # rebuilds per serving probe. The cache key is a metadata-scale
         # signature of everything the plan depends on: the version/floor/
         # dirty manifests plus the data and tombstone directory mtimes
-        # (_SUCCESS is rewritten by every Spark commit, so appends that
-        # mint no version — insert_df — still invalidate), plus a local
-        # epoch bumped at every file-mutation site of THIS object.
+        # (_SUCCESS is rewritten by every Spark commit, so an append that
+        # mints no version still invalidates), plus a local epoch bumped
+        # at every file-mutation site of THIS object.
         self._plan_epoch = 0
         self._plan_cache: dict[str, DataFrame | None] = {}
         self._plan_cache_sig: tuple | None = None
@@ -250,9 +266,9 @@ class VectorStore:
         """Metadata-scale invalidation signature for the reader-plan cache:
         json manifests (version / history floor / dirty set) cover every
         store-API mutation that minted a version or moved the floor; the
-        directory + _SUCCESS mtimes cover appends that mint neither
-        (insert_df) and any same-path writer in another process; the local
-        epoch covers this object's own rewrites belt-and-braces."""
+        directory + _SUCCESS mtimes cover appends that mint neither (a
+        restore's copy) and any same-path writer in another process; the
+        local epoch covers this object's own rewrites belt-and-braces."""
 
         def _mt(p: str) -> int:
             try:
@@ -641,8 +657,12 @@ class VectorStore:
         for ns in targets:
             self._ns_mutated_at[ns] = v
 
-    def _append(self, rows: list[Row]) -> None:
+    def _append(self, rows: list[Row], seen: int = 0) -> None:
+        """Append one namespace's rows at a fresh version. `seen` of them
+        carry ids the namespace already holds (any version); the rest are
+        new ids — the garbage ledger's delta."""
         self._check_dims(rows)
+        empty = self._raw() is None
         (
             local_rows_df(self.spark, rows, VECTOR_SCHEMA)
             .withColumn("write_version", F.lit(self._next_version()))
@@ -650,8 +670,13 @@ class VectorStore:
             .partitionBy("namespace")
             .parquet(self.data_path)
         )
-        self._record_dims({r.namespace: len(r.values) for r in rows})
-        self._note_ns_write({r.namespace for r in rows})
+        ns, n = rows[0].namespace, len(rows)
+        if empty:
+            self._ledger_put(ns, n, n, 0)
+        else:
+            self._ledger_add(ns, rows=n, ids=n - seen)
+        self._record_dims({ns: len(rows[0].values)})
+        self._note_ns_write([ns])
 
     def insert(
         self,
@@ -689,35 +714,75 @@ class VectorStore:
         merge-on-read shape (Delta deletion-vector MERGE / Iceberg v2).
         Physical collapse is deferred to the existing 20% compaction
         trigger, which counts superseded versions as garbage — so a point
-        upsert costs one small append, not a namespace rewrite (the
-        round-3 formulation amplified every call into copy-on-write).
+        upsert costs one small append, not a namespace rewrite.
 
         A tombstone-based delete of the old version cannot work here:
         tombstones match on (id, namespace), so the anti-join would filter
         the NEW versions too. Instead, upserting an id RETIRES any existing
-        tombstone for it (resurrect semantics)."""
+        tombstone for it (resurrect semantics).
+
+        Bookkeeping is ONE probe job before the append (`_id_probe`): the
+        batch's ids the namespace already holds (any version) and its
+        tombstone hits. They are the garbage ledger's delta, so the
+        compaction decision reads no data; only a namespace without an
+        exact ledger entry adds the stats aggregate, as branches of the
+        same job. The decision uses the pre-retirement tombstone count:
+        at the trigger boundary that can only start a compaction earlier —
+        the live view is unchanged and the retirement already moved the
+        history floor."""
         last: dict[str, Mapping[str, Any]] = {}
         for rec in records:  # in-batch last-wins, matching MERGE semantics
             last[str(rec["id"])] = rec
         rows = self._to_rows(last.values(), namespace, with_ids=True)
         if not rows:
             return []
-        had_data = self._raw() is not None
-        self._append(rows)
-        if had_data:
+        if self._raw() is None:
+            self._append(rows)
+            return [r.id for r in rows]
+        ids = [r.id for r in rows]
+        tomb = self._tombstones()
+        probe = self._id_probe(namespace, ids)
+        if self._ledger_get(namespace) is None:
+            found = self._collect_compact_stats([namespace], probe)[1]
+        else:
+            found = probe.collect()
+        present = {r.id for r in found if not r.dead}
+        hits = sum(1 for r in found if r.dead)
+        self._append(rows, seen=len(present))
+        self._mark_dirty([namespace])
+        stats = self._garbage(namespace)
+        if hits:
             keys = local_rows_df(
-                self.spark, [(r.id, namespace) for r in rows],
+                self.spark, [(i, namespace) for i in ids],
                 "id string, namespace string",
             )
-            self._after_upsert([namespace], keys)
-        return [r.id for r in rows]
+            self._retire_tombstones(tomb, keys, [namespace])
+            self._ledger_put(namespace, stats[0], stats[1], stats[2] - hits)
+        self._apply_compact_policy({namespace: stats})
+        return ids
+
+    def _id_probe(self, namespace: str, ids: Sequence[str]) -> DataFrame:
+        """Which of `ids` the namespace holds, in `_probe_rows` shape: a
+        row per stored version (dead = 0) and per tombstone (dead = 1).
+        The live view holds an id iff it has a stored row and no
+        tombstone. The SQL-text IN list is pushed into both scans; the
+        plan has no window and no join, so its collect is one job."""
+        in_batch = F.expr(f"namespace = {id_lit(namespace)}") & id_in("id", ids)
+        probe = _probe_rows(self._raw().filter(in_batch), dead=0)
+        tomb = self._tombstones()
+        if tomb is not None:
+            probe = probe.unionByName(_probe_rows(tomb.filter(in_batch), dead=1))
+        return probe
 
     # -- DataFrame-native bulk writes (W3/W4 at scale) ----------------------
 
-    def _check_dims_df(self, shaped: DataFrame) -> tuple[int, dict[str, int]]:
+    def _check_dims_df(
+        self, shaped: DataFrame
+    ) -> tuple[dict[str, int], dict[str, int]]:
         """Distributed twin of `_check_dims`: ONE aggregation over the batch
         (namespace count is metadata-scale, so the collect is tiny), checked
-        against the dims manifest — no per-namespace data scans."""
+        against the dims manifest — no per-namespace data scans. Returns
+        ({namespace: dim}, {namespace: rows in the batch})."""
         stats = (
             shaped.groupBy("namespace")
             .agg(
@@ -743,7 +808,10 @@ class VectorStore:
                     f"dimension mismatch for namespace {r.namespace!r}: "
                     f"got {r.dim}, namespace holds {existing}-dim vectors"
                 )
-        return int(sum(r.n for r in stats)), {r.namespace: r.dim for r in stats}
+        return (
+            {r.namespace: r.dim for r in stats},
+            {r.namespace: int(r.n) for r in stats},
+        )
 
     def insert_df(
         self,
@@ -751,22 +819,33 @@ class VectorStore:
         namespace: str | None = None,
         check_dims: bool = True,
     ) -> int | None:
-        """W2/W4 bulk ingest, DataFrame-native: one distributed append —
-        shaping (uuid, casts, metadata_json) runs on executors; nothing
-        crosses the driver. Returns the inserted count (None when
-        `check_dims=False`, which skips the extra aggregation pass — the
-        streaming ingest path's choice)."""
+        """W2/W4 bulk ingest, DataFrame-native: one distributed append at a
+        fresh write version — shaping (uuid, casts, metadata_json) runs on
+        executors; nothing crosses the driver. Returns the inserted count
+        (None when `check_dims=False`, which skips the extra aggregation
+        pass — the streaming ingest path's choice; the per-namespace row
+        counts are then unknown, so the garbage ledger forgets the
+        namespaces written)."""
         shaped = shape_ingest_df(df, namespace, with_ids=False)
-        n, dims = self._check_dims_df(shaped) if check_dims else (None, {})
+        dims, counts = self._check_dims_df(shaped) if check_dims else ({}, {})
+        empty = self._raw() is None
         (
-            shaped.write.mode("append")
+            shaped.withColumn("write_version", F.lit(self._next_version()))
+            .write.mode("append")
             .partitionBy("namespace")
             .parquet(self.data_path)
         )
+        if not check_dims:
+            self._ledger_drop(None if namespace is None else [str(namespace)])
+        for ns, n in counts.items():  # fresh uuids: every row is a new id
+            if empty:
+                self._ledger_put(ns, n, n, 0)
+            else:
+                self._ledger_add(ns, rows=n, ids=n)
         if dims:
             self._record_dims(dims)
         self._note_ns_write(list(dims) if dims else None)
-        return n
+        return sum(counts.values()) if check_dims else None
 
     def upsert_df(
         self, df: DataFrame, namespace: str | None = None,
@@ -779,16 +858,16 @@ class VectorStore:
         appending write of the shaped batch stamped with a monotone
         write_version; the read path takes latest-wins for the affected
         namespaces until compaction physically collapses versions. No
-        existing byte is rewritten on the write path (the round-3
-        copy-on-write rewrite re-wrote every affected partition per batch —
-        write amplification a 100 TB ingest can't afford); the garbage this
+        existing byte is rewritten on the write path (a copy-on-write
+        rewrite of every affected partition per batch is write
+        amplification a 100 TB ingest can't afford); the garbage this
         defers is exactly what the 20% compaction trigger bounds.
 
         Duplicate ids WITHIN one batch share a single write_version, so
         they are collapsed here before the append; otherwise the
         latest-wins window would pick a nondeterministic winner, and a
-        first batch into an empty store would keep both rows visible
-        (round-4 advice). The collapse is one window shuffle over the
+        first batch into an empty store would keep both rows visible.
+        The collapse is one window shuffle over the
         batch; callers that guarantee unique ids per batch (the common
         bulk-ingest contract) can skip it with `assume_unique_ids=True`.
 
@@ -808,7 +887,12 @@ class VectorStore:
         allows. It requires an explicit `namespace` (without the
         validation pass the affected-namespace set for tombstone/
         compaction bookkeeping is otherwise unknowable without another
-        job)."""
+        job).
+
+        Into an empty store the validation pass's per-namespace counts
+        seed the garbage ledger (rows = ids = n). Into existing data the
+        batch's overlap with stored ids is a DataFrame join away, so the
+        bookkeeping runs the stats aggregate (`_after_upsert`)."""
         if not check_dims and namespace is None:
             raise ValueError(
                 "upsert_df(check_dims=False) requires an explicit "
@@ -829,10 +913,10 @@ class VectorStore:
         if order_col:
             shaped = shaped.drop(order_col)
         if check_dims:
-            n, dims = self._check_dims_df(shaped)
+            dims, counts = self._check_dims_df(shaped)
             affected = list(dims)
         else:
-            n, dims = None, {}
+            dims, counts = {}, {}
             affected = [str(namespace)]
         had_data = self._raw() is not None
         (
@@ -843,40 +927,49 @@ class VectorStore:
         )
         if had_data and affected:
             self._after_upsert(affected, shaped.select("id", "namespace"))
+        elif check_dims:
+            for ns, n in counts.items():
+                self._ledger_put(ns, n, n, 0)
+        else:
+            self._ledger_drop(affected)
         self._record_dims(dims)
         self._note_ns_write(affected)
-        return n
+        return sum(counts.values()) if check_dims else None
 
     def _after_upsert(self, affected: Sequence[str], keys: DataFrame) -> None:
-        """Post-write bookkeeping of both upsert paths over the upserted
+        """Post-write bookkeeping of the bulk upsert over the upserted
         (id, namespace) `keys`: mark the namespaces upsert-dirty, retire
         any tombstone an upsert resurrects, apply the compaction policy.
 
-        ONE Spark job when tombstones exist: the tombstone overlap probe
-        rides the compaction-stats aggregate as a union branch (see
-        _collect_compact_stats). Any rewrite (tombstone retirement,
-        compaction) happens strictly AFTER the read completes. The stats
-        are collected before a retirement rather than after; at the
-        trigger boundary that can only start a compaction earlier — the
-        live view is unchanged and the history floor was already moved by
-        the retirement itself."""
+        The batch's overlap with stored ids is unknown here, so this path
+        always runs the stats aggregate, which re-seeds the ledger; with
+        tombstones present, the overlap probe rides it as a union branch —
+        ONE collect. Any rewrite (tombstone retirement, compaction)
+        happens strictly AFTER the read completes. How many tombstones a
+        retirement erased is unknown too, so it drops the seeded entries;
+        the decision uses the pre-retirement stats, as `upsert_by_id`
+        does."""
         self._mark_dirty(affected)
         tomb = self._tombstones()
-        if tomb is None:
-            self._maybe_compact_many(affected)
-            return
-        rows = self._collect_compact_stats(affected, probe_keys=keys)
-        if any(int(r.dead) < 0 for r in rows):
+        probe = None
+        if tomb is not None:
+            probe = _probe_rows(
+                tomb.join(keys, ["id", "namespace"], "left_semi").limit(1),
+                dead=1,
+            )
+        stats, hit = self._collect_compact_stats(affected, probe)
+        if hit:
             self._retire_tombstones(tomb, keys, affected)
-        self._apply_compact_policy(
-            affected, [r for r in rows if int(r.dead) >= 0]
-        )
+            self._ledger_drop(affected)
+        self._apply_compact_policy(stats)
 
     def delete_df(self, keys: DataFrame) -> int:
         """W5 bulk: tombstone a (id, namespace) key DataFrame. Only keys
         that are currently live are tombstoned (W5's returns-deleted
         contract, kept as a count here). No broadcast hint on the key join —
-        a delete batch can be arbitrarily large; AQE picks the strategy."""
+        a delete batch can be arbitrarily large; AQE picks the strategy.
+        The per-namespace split of the count is unknown, so the compaction
+        decision runs the stats aggregate, which re-seeds the ledger."""
         if self._raw() is None:
             return 0
         keys = keys.select(
@@ -894,111 +987,160 @@ class VectorStore:
         affected = [
             r.namespace for r in keys.select("namespace").distinct().collect()
         ]
-        self._maybe_compact_many(affected)
+        if affected:
+            self._apply_compact_policy(self._collect_compact_stats(affected)[0])
         self._note_ns_write(affected)
         return n
 
-    def _collect_compact_stats(
-        self, ns_list: Sequence[str], probe_keys: DataFrame | None = None
-    ) -> list:
-        """READ-ONLY half of the compaction trigger: ONE partition-pruned
-        aggregate for all affected namespaces — the live-rows aggregate
-        and the tombstone count union into a single collect (they were
-        two back-to-back jobs on every upsert/delete — pure scheduling
-        overhead on the steady-state serving path, guide §2.4's "two
-        operations keyed the same way can share one pass" applied to the
-        maintenance bookkeeping).
+    # -- garbage ledger ------------------------------------------------------
+    # The compaction trigger decides on three numbers per namespace: rows,
+    # distinct ids and tombstones. Aggregating them is a count_distinct
+    # over the whole namespace (several Spark jobs at 6k rows, a full
+    # shuffle at 100 TB), which a point write must not pay. So every write
+    # path of this object carries the numbers forward from what its own
+    # batch knows, and the aggregate runs only to seed an entry that is
+    # missing or no longer exact.
 
-        `probe_keys` additionally folds the upsert path's tombstone
-        OVERLAP PROBE into the same job as a third union branch (dead=-1
-        marker rows, emitted only on a hit): the steady-state upsert's
-        entire post-write bookkeeping — overlap probe + live/tombstone
-        stats — is then ONE Spark job instead of the two sequential jobs
-        of r12 (guide §1.2/§2.4: the r12 verdict suggested overlapping
-        them, guide §2.6; sharing one pass beats overlapping two)."""
-        raw = self._raw()
-        raw_agg = (
-            raw.filter(F.col("namespace").isin(list(ns_list)))
+    def _ledger_get(self, namespace: str) -> tuple[int, int, int] | None:
+        """(rows, ids, tombstones) of `namespace` while its entry is
+        exact: every version minted since the entry was recorded is this
+        object's (its writes to the namespace update the entry; its
+        writes elsewhere leave it exact) and the namespace's history floor
+        has not moved. Another writer mints a version or moves the floor,
+        and the entry is dropped."""
+        entry = self._ledger.get(namespace)
+        if entry is None:
+            return None
+        rows, ids, tomb, v0, floor = entry
+        v1 = self.current_version()
+        if (
+            v0 <= v1 <= v0 + len(self._session_versions)
+            and all(v in self._session_versions for v in range(v0 + 1, v1 + 1))
+            and self.history_floor(namespace) == floor
+        ):
+            return rows, ids, tomb
+        del self._ledger[namespace]
+        return None
+
+    def _ledger_put(
+        self, namespace: str, rows: int, ids: int, tombstones: int
+    ) -> None:
+        """Record exact counts as of the store's current state."""
+        self._ledger[namespace] = (
+            rows, ids, tombstones,
+            self.current_version(), self.history_floor(namespace),
+        )
+
+    def _ledger_add(
+        self, namespace: str, rows: int = 0, ids: int = 0, tombstones: int = 0
+    ) -> None:
+        """Apply one write's delta to an exact entry (no entry: nothing to
+        carry forward — the next decision seeds one)."""
+        cur = self._ledger_get(namespace)
+        if cur is not None:
+            self._ledger_put(
+                namespace, cur[0] + rows, cur[1] + ids, cur[2] + tombstones
+            )
+
+    def _ledger_drop(self, namespaces: Iterable[str] | None = None) -> None:
+        """Forget the entries (all when None) a write's unknown delta
+        made inexact."""
+        if namespaces is None:
+            self._ledger.clear()
+        for ns in namespaces or ():
+            self._ledger.pop(ns, None)
+
+    def _garbage(self, namespace: str) -> tuple[int, int, int]:
+        """The compaction decision's input: the exact ledger entry, or one
+        stats aggregate that seeds it."""
+        stats = self._ledger_get(namespace)
+        if stats is None:
+            stats = self._collect_compact_stats([namespace])[0][namespace]
+        return stats
+
+    def _collect_compact_stats(
+        self, ns_list: Sequence[str], probe: DataFrame | None = None
+    ) -> tuple[dict[str, tuple[int, int, int]], list]:
+        """The stats aggregate that seeds the ledger: ONE
+        partition-pruned collect of every listed namespace's rows,
+        distinct ids and tombstones — the live-rows and the tombstone
+        aggregates as union branches — plus the caller's `probe` rows
+        (`_probe_rows` shape) as a further branch of the same job.
+        Returns ({namespace: (rows, ids, tombstones)}, probe rows) and
+        records each namespace's counts in the ledger."""
+        in_ns = id_in("namespace", ns_list)
+        out = (
+            self._raw()
+            .filter(in_ns)
             .groupBy("namespace")
             .agg(
                 F.count("*").alias("n"),
                 F.count_distinct("id").alias("n_ids"),
             )
-            .select("namespace", "n", "n_ids", F.lit(0).cast("long").alias("dead"))
+            .selectExpr(
+                "namespace", "CAST(NULL AS STRING) AS id", "n", "n_ids",
+                "0L AS dead",
+            )
         )
         tomb = self._tombstones()
         if tomb is not None:
-            tomb_agg = (
-                tomb.filter(F.col("namespace").isin(list(ns_list)))
+            out = out.unionByName(
+                tomb.filter(in_ns)
                 .groupBy("namespace")
                 .agg(F.count("*").alias("dead"))
-                .select(
-                    "namespace",
-                    F.lit(0).cast("long").alias("n"),
-                    F.lit(0).cast("long").alias("n_ids"),
-                    "dead",
+                .selectExpr(
+                    "namespace", "CAST(NULL AS STRING) AS id", "0L AS n",
+                    "0L AS n_ids", "dead",
                 )
             )
-            raw_agg = raw_agg.unionByName(tomb_agg)
-            if probe_keys is not None:
-                hit_row = (
-                    tomb.join(probe_keys, ["id", "namespace"], "left_semi")
-                    .limit(1)
-                    .select(
-                        F.lit(None).cast("string").alias("namespace"),
-                        F.lit(0).cast("long").alias("n"),
-                        F.lit(0).cast("long").alias("n_ids"),
-                        F.lit(-1).cast("long").alias("dead"),
-                    )
+        if probe is not None:
+            out = out.unionByName(probe)
+        stats = {ns: (0, 0, 0) for ns in ns_list}
+        found = []
+        for r in out.collect():
+            if r.namespace is None:
+                found.append(r)
+            else:
+                rows, ids, tomb_n = stats[r.namespace]
+                stats[r.namespace] = (
+                    rows + r.n, ids + r.n_ids, tomb_n + r.dead
                 )
-                raw_agg = raw_agg.unionByName(hit_row)
-        return raw_agg.collect()
+        for ns, s in stats.items():
+            self._ledger_put(ns, *s)
+        return stats, found
 
     def _apply_compact_policy(
-        self, ns_list: Sequence[str], rows: list
+        self, stats: Mapping[str, tuple[int, int, int]]
     ) -> None:
-        """Threshold policy over `_collect_compact_stats` rows: garbage =
-        tombstoned rows + superseded versions (total - distinct ids,
-        nonzero only for upsert-dirty namespaces) — so merge-on-read debt
-        hits the same 20% threshold that tombstones always did."""
+        """Threshold policy over per-namespace (rows, ids, tombstones):
+        garbage = tombstoned rows + superseded versions (rows - distinct
+        ids, counted only for upsert-dirty namespaces) — so merge-on-read
+        debt hits the same 20% threshold that tombstones always did."""
         dirty = self._dirty_namespaces()
-        stats: dict[str, tuple[int, int]] = {}
-        dead: dict[str, int] = {}
-        for r in rows:
-            if r.dead:
-                dead[r.namespace] = dead.get(r.namespace, 0) + int(r.dead)
-            else:
-                stats[r.namespace] = (int(r.n), int(r.n_ids))
-        for ns in ns_list:
-            total, n_ids = stats.get(ns, (0, 0))
-            superseded = (total - n_ids) if ns in dirty else 0
-            garbage = dead.get(ns, 0) + superseded
-            if total and garbage / total >= self.rebuild_threshold:
+        for ns, (rows, ids, tomb) in stats.items():
+            garbage = tomb + ((rows - ids) if ns in dirty else 0)
+            if rows and garbage / rows >= self.rebuild_threshold:
                 self.compact(ns)
-
-    def _maybe_compact_many(self, namespaces: Sequence[str]) -> None:
-        raw = self._raw()
-        if raw is None or not namespaces:
-            return
-        ns_list = list(namespaces)
-        self._apply_compact_policy(ns_list, self._collect_compact_stats(ns_list))
 
     # -- deletes (W5-W7, P5/P6) --------------------------------------------
 
     def delete(
         self, ids: Sequence[str], namespace: str = DEFAULT_NAMESPACE
     ) -> list[str]:
-        """W5: tombstone ids, returning only ids that actually existed
-        (reference returns deleted ids, query_processor.py:53-55). Triggers
-        per-namespace compaction at the tombstone threshold."""
+        """W5: tombstone ids, returning only ids that actually existed, in
+        request order (reference returns deleted ids,
+        query_processor.py:53-55). Presence is one `_id_probe` job.
+        Triggers per-namespace compaction at the tombstone threshold,
+        decided from the garbage ledger (tombstones += the ids
+        tombstoned)."""
         ids = [str(i) for i in ids]
         if not ids or self._raw() is None:
             return []
-        live = self.df().filter(F.col("namespace") == namespace)
-        present = [
-            r.id
-            for r in live.filter(F.col("id").isin(ids)).select("id").collect()
-        ]
+        found = self._id_probe(namespace, ids).collect()
+        live = {r.id for r in found if not r.dead} - {
+            r.id for r in found if r.dead
+        }
+        present = [i for i in dict.fromkeys(ids) if i in live]
         if not present:
             return []
         v = self._next_version()
@@ -1010,7 +1152,8 @@ class VectorStore:
             .write.mode("append")
             .parquet(self.tomb_path)
         )
-        self._maybe_compact(namespace)
+        self._ledger_add(namespace, tombstones=len(present))
+        self._apply_compact_policy({namespace: self._garbage(namespace)})
         self._note_ns_write([namespace])
         return present
 
@@ -1023,6 +1166,7 @@ class VectorStore:
         self._drop_namespace_tombstones(namespace)
         self._clear_dirty(namespace)
         self._forget_dims(namespace)
+        self._ledger_drop([namespace])
         if existed:
             self._bump_history_floor([namespace])
         self._note_ns_write([namespace])
@@ -1051,6 +1195,7 @@ class VectorStore:
         self._serving.clear()
         self._serving_synced_at.clear()
         self._ns_mutated_at.clear()
+        self._ledger_drop()
         self._forget_dims()
         self._bump_plan_epoch()
         return True
@@ -1083,9 +1228,6 @@ class VectorStore:
         )
         return dead / total
 
-    def _maybe_compact(self, namespace: str) -> None:
-        self._maybe_compact_many([namespace])
-
     def compact(
         self, namespace: str, exclude_ids: Sequence[str] | None = None
     ) -> None:
@@ -1100,10 +1242,15 @@ class VectorStore:
         a scratch dir, then swapped into the partition directory — nothing
         is collected to the driver, so a namespace can be arbitrarily large.
         (Writing in place is impossible: Spark cannot overwrite a path it
-        is reading.)"""
+        is reading.) An exact ledger entry carries over as rows = ids =
+        ids - tombstones, tombstones = 0; with `exclude_ids` the count of
+        rows removed is unknown and the entry is dropped."""
+        prior = None if exclude_ids else self._ledger_get(namespace)
         live = self.df().filter(F.col("namespace") == namespace).drop("namespace")
         if exclude_ids:
-            live = live.filter(~F.col("id").isin([str(i) for i in exclude_ids]))
+            live = live.filter(
+                id_in("id", [str(i) for i in exclude_ids], negate=True)
+            )
         tmp_dir = os.path.join(self.path, f".compact_tmp_{namespace}")
         live.write.mode("overwrite").parquet(tmp_dir)
         part_dir = os.path.join(self.data_path, f"namespace={namespace}")
@@ -1118,6 +1265,11 @@ class VectorStore:
         self._clear_dirty(namespace)
         # versions collapsed + tombstones folded: exact history now starts here
         self._bump_history_floor([namespace])
+        if prior is None:
+            self._ledger_drop([namespace])
+        else:
+            live_n = prior[1] - prior[2]
+            self._ledger_put(namespace, live_n, live_n, 0)
 
     def optimize(
         self, namespace: str | None = None, target_file_bytes: int = 128 << 20
@@ -1176,6 +1328,7 @@ class VectorStore:
         if rewritten:
             # the bin-packed rewrite is a compaction: history floor moves
             self._bump_history_floor(rewritten)
+            self._ledger_drop(rewritten)
         return rewritten
 
     # -- point reads (Q5-Q8) -----------------------------------------------
@@ -1267,10 +1420,10 @@ class VectorStore:
 
     def storage_info(self) -> dict[str, Any]:
         """Q11: the reference's get_storage_info shape
-        (`storage_engine_in_memory.py:61-69`)."""
-        per_ns = {
-            r.namespace: r.n
-            for r in self.df()
+        (`storage_engine_in_memory.py:61-69`): one per-namespace aggregate;
+        the total size is summed on the driver."""
+        stats = (
+            self.df()
             .groupBy("namespace")
             .agg(
                 F.count("*").alias("n"),
@@ -1279,21 +1432,12 @@ class VectorStore:
                 ),
             )
             .collect()
-        }
-        size_rows = (
-            self.df()
-            .agg(
-                F.coalesce(
-                    F.sum(F.size("values") * 4 + F.length("metadata_json")),
-                    F.lit(0),
-                ).alias("b")
-            )
-            .collect()
         )
+        per_ns = {r.namespace: r.n for r in stats}
         return {
             "storage_type": "parquet",
             "total_vectors": sum(per_ns.values()),
-            "storage_size_bytes": int(size_rows[0].b),
+            "storage_size_bytes": sum(int(r.bytes or 0) for r in stats),
             "namespaces": sorted(per_ns),
             "vectors_per_namespace": per_ns,
             "namespace_count": len(per_ns),
@@ -1989,7 +2133,7 @@ class VectorStore:
         # against the namespace scan (operators/knn.knn_join), then one
         # id-join to re-attach values/metadata
         qdf_raw = local_rows_df(self.spark, 
-            qrows, "query_id string, __qvec array<float>"
+            qrows, "query_id string, __qvec array<double>"
         )
         hits = knn_join(
             ns_df, qdf_raw, top_k,

@@ -1325,31 +1325,286 @@ def test_floor_is_per_namespace(spark, tmp_path):
         )
 
 
-# append (1) + the bookkeeping aggregate: live/tombstone stats and the
-# overlap probe as union branches (map stages + result)
-_UPSERT_BY_ID_JOBS = 7
+# Spark jobs per point write with an exact garbage ledger. Both point
+# writes start with the id probe (stored ids + tombstone hits, one
+# collect). upsert_by_id then appends; a resurrecting upsert adds the
+# tombstone retirement rewrite. delete appends its tombstones; a
+# compacting delete adds the partition rewrite (tombstone broadcast,
+# latest-wins stage, write) and the tombstone drop. No write runs the
+# stats aggregate.
+_UPSERT_BY_ID_JOBS = 2
+_WRITE_JOBS = {
+    "upsert": _UPSERT_BY_ID_JOBS,
+    "upsert_with_tombstones": _UPSERT_BY_ID_JOBS,
+    "upsert_resurrect": 4,
+    "delete": 2,
+    "delete_compacting": 6,
+}
 
 
-def test_upsert_by_id_bookkeeping_jobs_pinned(spark, tmp_path, spark_jobs):
-    """With tombstones present, an upsert_by_id pays the append and ONE
-    bookkeeping job (overlap probe + compaction stats), like upsert_df —
-    and still resurrects a deleted id."""
-    store = VectorStore(spark, str(tmp_path / "ubi"), rebuild_threshold=0.95)
+def _keyed_store(spark, path, n=40, threshold=0.95):
+    store = VectorStore(spark, path, rebuild_threshold=threshold)
     store.upsert_df(
         spark.createDataFrame(
-            [(f"k{i}", [float(i), 1.0], "A") for i in range(40)],
+            [(f"k{i}", [float(i), 1.0], "A") for i in range(n)],
             "id string, values array<float>, namespace string",
         ),
         assume_unique_ids=True,
     )
-    store.delete(["k1", "k2"], "A")
-    store.upsert_by_id([{"id": "k3", "values": [3.0, 2.0]}], "A")  # warm
-    jobs, _ = spark_jobs(
-        lambda: store.upsert_by_id([{"id": "k4", "values": [4.0, 2.0]}], "A")
-    )
-    assert jobs == _UPSERT_BY_ID_JOBS, jobs
-    store.upsert_by_id([{"id": "k1", "values": [1.0, 5.0]}], "A")
+    return store
+
+
+def test_upsert_by_id_bookkeeping_jobs_pinned(spark, tmp_path, spark_jobs):
+    """Jobs per point write: upsert_by_id without and with tombstones, a
+    resurrecting upsert, a delete below the compaction threshold and a
+    compacting one — none pays the per-namespace stats aggregate, and the
+    resurrected id is visible."""
+    store = _keyed_store(spark, str(tmp_path / "pw"), threshold=0.2)
+    compacted = []
+    compact = store.compact
+    store.compact = lambda ns, **kw: (compacted.append(ns), compact(ns, **kw))
+    store.upsert_by_id([{"id": "k0", "values": [0.0, 2.0]}], "A")  # warm
+    got = {
+        "upsert": spark_jobs(lambda: store.upsert_by_id(
+            [{"id": "k4", "values": [4.0, 2.0]},
+             {"id": "new", "values": [4.0, 3.0]}], "A"))[0],
+        "delete": spark_jobs(lambda: store.delete(["k1", "k2"], "A"))[0],
+    }
+    store.upsert_by_id([{"id": "k3", "values": [3.0, 2.0]}], "A")
+    got["upsert_with_tombstones"] = spark_jobs(
+        lambda: store.upsert_by_id([{"id": "k5", "values": [5.0, 2.0]}], "A")
+    )[0]
+    got["upsert_resurrect"] = spark_jobs(
+        lambda: store.upsert_by_id([{"id": "k1", "values": [1.0, 5.0]}], "A")
+    )[0]
+    assert compacted == []
+    # garbage: 5 superseded versions + 1 tombstone of 46 rows; four more
+    # tombstones lift it to 10/46 >= 0.2
+    got["delete_compacting"] = spark_jobs(
+        lambda: store.delete(["k6", "k7", "k8", "k9"], "A")
+    )[0]
+    assert compacted == ["A"]
+    assert got == _WRITE_JOBS, got
+    assert store._raw().count() == store.count("A") == 36
     assert store.read("k1", "A").values == [1.0, 5.0]
+
+
+# one per-namespace aggregate over the live view (count + bytes)
+_STORAGE_INFO_JOBS = 5
+
+
+def test_storage_info_one_aggregate(spark, tmp_path, spark_jobs):
+    store = _keyed_store(spark, str(tmp_path / "si"), n=12)
+    store.upsert_by_id([{"id": "b0", "values": [1.0], "metadata": {"m": "x"}}],
+                       "B")
+    store.delete(["k0"], "A")
+    jobs, info = spark_jobs(store.storage_info)
+    assert jobs == _STORAGE_INFO_JOBS, jobs
+    assert info["vectors_per_namespace"] == {"A": 11, "B": 1}
+    # 11 rows of 2 floats + '{}', 1 row of 1 float + '{"m": "x"}'
+    assert info["storage_size_bytes"] == 11 * (8 + 2) + (4 + 10)
+
+
+def test_insert_df_mints_a_write_version(spark, tmp_path):
+    """insert_df stamps its rows with a fresh write version, so a synced
+    index sees them in the CDC feed and auto reads serve them."""
+    from mlvectordb_spark.operators.ann import IVFIndex
+
+    store = VectorStore(spark, str(tmp_path / "idf"), rebuild_threshold=0.95)
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k{i}", [float(i), 0.0], "A") for i in range(40)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    store.build_index("A", factory=lambda: IVFIndex(n_clusters=4, seed=1))
+    v = store.current_version()
+    store.insert_df(
+        spark.createDataFrame([([100.0, 0.0],)], "values array<float>"),
+        namespace="A",
+    )
+    assert store.current_version() == v + 1
+    store.sync_indexes()
+    got = store.find_similar([100.0, 0.0], 2, "A", metric="l2")
+    assert got[0]["values"] == [100.0, 0.0]
+    assert got == store.find_similar(
+        [100.0, 0.0], 2, "A", metric="l2", mode="exact"
+    )
+
+
+def test_exact_batch_scores_equal_single_exact_reads(spark, tmp_path):
+    """The exact batch route selects and scores with float64 queries, like
+    the single exact read: the same ids and scores for every query."""
+    rng = np.random.default_rng(3)
+    store = VectorStore(spark, str(tmp_path / "b64"))
+    X = rng.normal(size=(300, 64))
+    store.upsert_df(
+        spark.createDataFrame(
+            [(f"k{i}", [float(x) for x in X[i]], "A") for i in range(300)],
+            "id string, values array<float>, namespace string",
+        ),
+        assume_unique_ids=True,
+    )
+    queries = {f"q{j}": rng.normal(size=64).tolist() for j in range(60)}
+    batch: dict[str, list] = {}
+    for r in store.find_similar_batch(queries, 5, "A", metric="l2").collect():
+        batch.setdefault(r.query_id, []).append((r.score, r.id))
+    for qid, q in queries.items():
+        single = store.find_similar(q, 5, "A", metric="l2", mode="exact")
+        assert sorted(batch[qid]) == sorted(
+            (h["score"], h["id"]) for h in single
+        ), qid
+
+
+def _fresh_garbage(store, ns):
+    """(rows, distinct ids, tombstones) of `ns` straight from the data —
+    the stats aggregate's answer, computed without touching the ledger."""
+    from pyspark.sql import functions as F
+
+    raw, tomb = store._raw(), store._tombstones()
+    if raw is None:
+        return 0, 0, 0
+    r = raw.filter(F.col("namespace") == ns).agg(
+        F.count("*").alias("n"), F.count_distinct("id").alias("d")
+    ).first()
+    dead = 0 if tomb is None else tomb.filter(F.col("namespace") == ns).count()
+    return int(r.n), int(r.d), int(dead)
+
+
+class _AggregateOnlyStore(VectorStore):
+    """Decides every compaction from the stats aggregate, as before the
+    ledger existed: the differential reference."""
+
+    def _ledger_get(self, namespace):
+        return None
+
+
+def _live_state(store):
+    """df() as comparable data: rows keyed by caller ids, and the multiset
+    of (namespace, values) of rows with store-minted uuids."""
+    keyed, minted = {}, []
+    for r in store.df().collect():
+        if r.id.startswith("k"):
+            keyed[(r.namespace, r.id)] = (list(r.values), dict(r.metadata))
+        else:
+            minted.append((r.namespace, tuple(r.values)))
+    return keyed, sorted(minted)
+
+
+def test_garbage_ledger_differential(spark, tmp_path):
+    """A seeded random write sequence over two namespaces — by-id
+    overwrites, new and resurrecting ids, deletes, bulk upsert/delete,
+    insert_df with and without check_dims, compact, optimize, and a second
+    store object writing the same path. After every write the ledger entry
+    the next decision would use equals the data's own counts, and the
+    compactions and the live view equal those of a store that decides
+    every compaction from the stats aggregate."""
+    import random
+
+    rnd = random.Random(11)
+    spaces = ("A", "B")
+
+    def build(cls, name):
+        path = str(tmp_path / name)
+        main, other = cls(spark, path, 0.2), cls(spark, path, 0.2)
+        log = []
+        for who, st in (("main", main), ("other", other)):
+            compact = st.compact
+
+            def spy(ns, _who=who, _compact=compact, **kw):
+                log.append((_who, ns))
+                return _compact(ns, **kw)
+
+            st.compact = spy
+        return main, other, log
+
+    ledger = build(VectorStore, "ledger")
+    reference = build(_AggregateOnlyStore, "reference")
+    live = {ns: set() for ns in spaces}
+    dead = {ns: set() for ns in spaces}
+    serial = iter(range(10_000))
+
+    def vec():
+        return [round(rnd.uniform(-5, 5), 3) for _ in range(3)]
+
+    def frame(rows, schema):
+        return spark.createDataFrame(rows, schema)
+
+    seed_rows = [
+        (f"k{ns}{next(serial)}", vec(), ns) for ns in spaces for _ in range(24)
+    ]
+    steps = [("upsert_df", lambda st, _o, rows=seed_rows: st.upsert_df(
+        frame(rows, "id string, values array<float>, namespace string"),
+        assume_unique_ids=True))]
+    for _id, _v, ns in seed_rows:
+        live[ns].add(_id)
+    kinds = (
+        ["upsert_by_id"] * 6 + ["delete"] * 5 + ["upsert_df", "delete_df",
+         "insert_df", "insert_df_unchecked", "compact", "optimize",
+         "other_upsert", "other_delete"]
+    )
+    rnd.shuffle(kinds)
+    for kind in kinds:
+        ns = rnd.choice(spaces)
+        if kind in ("upsert_by_id", "other_upsert", "upsert_df"):
+            ids = rnd.sample(sorted(live[ns]), 2) + [
+                f"k{ns}{next(serial)}" for _ in range(rnd.randint(0, 2))
+            ]
+            if dead[ns]:
+                ids.append(rnd.choice(sorted(dead[ns])))
+            recs = [{"id": i, "values": vec(), "metadata": {"s": str(len(steps))}}
+                    for i in ids]
+            live[ns] |= set(ids)
+            dead[ns] -= set(ids)
+            if kind == "upsert_df":
+                rows = [(r["id"], r["values"], ns, r["metadata"]) for r in recs]
+                step = lambda st, _o, rows=rows: st.upsert_df(frame(
+                    rows, "id string, values array<float>, namespace string, "
+                    "metadata map<string,string>"))
+            elif kind == "other_upsert":
+                step = lambda _s, o, recs=recs, ns=ns: o.upsert_by_id(recs, ns)
+            else:
+                step = lambda st, _o, recs=recs, ns=ns: st.upsert_by_id(recs, ns)
+        elif kind in ("delete", "other_delete", "delete_df"):
+            ids = rnd.sample(sorted(live[ns]), rnd.randint(1, 3)) + ["kmissing"]
+            live[ns] -= set(ids)
+            dead[ns] |= set(ids) - {"kmissing"}
+            if kind == "delete_df":
+                rows = [(i, ns) for i in ids]
+                step = lambda st, _o, rows=rows: st.delete_df(
+                    frame(rows, "id string, namespace string"))
+            elif kind == "other_delete":
+                step = lambda _s, o, ids=ids, ns=ns: o.delete(ids, ns)
+            else:
+                step = lambda st, _o, ids=ids, ns=ns: st.delete(ids, ns)
+        elif kind.startswith("insert_df"):
+            rows = [(vec(), ns) for _ in range(2)]
+            check = kind == "insert_df"
+            step = lambda st, _o, rows=rows, check=check: st.insert_df(
+                frame(rows, "values array<float>, namespace string"),
+                check_dims=check)
+        elif kind == "compact":
+            step = lambda st, _o, ns=ns: st.compact(ns)
+        else:
+            step = lambda st, _o, ns=ns: st.optimize(ns)
+        steps.append((kind, step))
+
+    kept = 0
+    for i, (kind, step) in enumerate(steps):
+        for main, other, log in (ledger, reference):
+            log.append(("step", i))
+            step(main, other)
+        for st in ledger[:2]:
+            for ns in spaces:
+                got = st._ledger_get(ns)
+                if got is not None:
+                    kept += 1
+                    assert got == _fresh_garbage(st, ns), (i, kind, ns)
+        assert _live_state(ledger[0]) == _live_state(reference[0]), (i, kind)
+    assert ledger[2] == reference[2]
+    assert any(who != "step" for who, _ns in ledger[2]), "no compaction ran"
+    assert kept >= len(steps), kept
 
 
 def test_family_lazy_create_collapses_feed(spark, tmp_path):
