@@ -57,12 +57,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mlvectordb_spark.commit import ConcurrentWriteError, publish
 from mlvectordb_spark.operators.expectations import _FAILED
 from mlvectordb_spark.operators.merge import dedup_source, merge_into
 
@@ -70,22 +70,6 @@ _PTR = "_LATEST"
 _META = "_TABLE_META"
 _BUCKET = "__bucket"
 _COMMIT = "_v_commit.json"
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed this version first.
-
-    Raised by `MergedTable.write_version` (and everything above it:
-    `apply_merge_batch`, `optimize`, a running `start_table_merge`
-    stream) when the optimistic-concurrency check fails: the version
-    number this writer allocated against its base snapshot was committed
-    by someone else between the base read and the publish. The losing
-    writer's work is discarded (its staging directory is removed; an
-    orphan change recording it wrote is cleared unless the winner
-    recorded its own feed over it) and the table is left exactly as the
-    winner published it — the classic lost-update is turned into an
-    explicit retryable error, the analog of Delta's commit conflict
-    check. Retry by re-reading the table and re-applying."""
 
 
 def _bucket_expr(keys: list[str], n_buckets: int) -> Column:
@@ -221,13 +205,8 @@ class MergedTable:
             "zorder_cols": self.zorder_cols,
             "zorder_cuts": self.zorder_cuts,
         }
-        on_disk = self._read_meta()
-        if on_disk == want:
-            return
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix=".meta_")
-        with os.fdopen(fd, "w") as f:
-            json.dump(want, f)
-        os.replace(tmp, p)
+        if self._read_meta() != want:
+            publish(p, json.dumps(want))
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v{version:012d}")
@@ -244,10 +223,7 @@ class MergedTable:
         columns with NULL instead of inferring from whichever footer it
         samples first. The underscore prefix keeps Spark's file discovery
         off it."""
-        fd, tmp = tempfile.mkstemp(dir=dirpath, prefix=".sch_")
-        with os.fdopen(fd, "w") as f:
-            f.write(df.schema.json())
-        os.replace(tmp, os.path.join(dirpath, "_v_schema.json"))
+        publish(os.path.join(dirpath, "_v_schema.json"), df.schema.json())
 
     def _commit_info(self, version: int) -> dict | None:
         """The commit sidecar a committed version carries: its batch id
@@ -396,10 +372,8 @@ class MergedTable:
         return zorder_key(df, self.zorder_cols, self.zorder_cuts)
 
     def _write_pointer(self, version: int, batch_id: int | None) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix=".ptr_")
-        with os.fdopen(fd, "w") as f:
-            f.write(f"{version} {'-' if batch_id is None else batch_id}")
-        os.replace(tmp, os.path.join(self.path, _PTR))
+        bid = "-" if batch_id is None else batch_id
+        publish(os.path.join(self.path, _PTR), f"{version} {bid}")
 
     def _repair_pointer(self, version: int) -> None:
         """Roll the pointer FORWARD to an already-committed version whose
@@ -531,7 +505,8 @@ class MergedTable:
         pointer repair and the activation would publish the version (so
         every later replay short-circuits on the batch-id watermark)
         with its feed permanently stranded in the staged dir. A
-        different writer's commit raises via _on_commit_conflict."""
+        different writer's commit repairs the pointer forward, then
+        raises."""
         info = self._commit_info(version)
         if (
             batch_id is not None
@@ -539,23 +514,6 @@ class MergedTable:
             and info.get("batch_id") == batch_id
         ):
             self._activate_recording(version, recorded_token, replay=True)
-            self._repair_pointer(version)
-            return
-        self._on_commit_conflict(version, batch_id)
-
-    def _on_commit_conflict(self, version: int, batch_id: int | None) -> None:
-        """The version directory already exists: either our own earlier
-        commit replaying (return idempotently) or a concurrent writer's
-        (repair the pointer forward, then raise)."""
-        info = self._commit_info(version)
-        if (
-            batch_id is not None
-            and info is not None
-            and info.get("batch_id") == batch_id
-        ):
-            # our own commit from a run that crashed between the rename
-            # and the checkpoint/pointer update — finishing the pointer
-            # repair makes the replay a no-op success
             self._repair_pointer(version)
             return
         self._repair_pointer(version)

@@ -8,6 +8,7 @@ test the reference left commented out)."""
 from __future__ import annotations
 
 import json
+import os
 
 import numpy as np
 import pytest
@@ -1476,7 +1477,7 @@ class _AggregateOnlyStore(VectorStore):
     """Decides every compaction from the stats aggregate, as before the
     ledger existed: the differential reference."""
 
-    def _ledger_get(self, namespace):
+    def _ledger_get(self, namespace, state=None):
         return None
 
 
@@ -1499,7 +1500,9 @@ def test_garbage_ledger_differential(spark, tmp_path):
     store object writing the same path. After every write the ledger entry
     the next decision would use equals the data's own counts, and the
     compactions and the live view equal those of a store that decides
-    every compaction from the stats aggregate."""
+    every compaction from the stats aggregate. The two objects share one
+    state record, so the other object's point writes leave an exact entry
+    that both read."""
     import random
 
     rnd = random.Random(11)
@@ -1536,7 +1539,7 @@ def test_garbage_ledger_differential(spark, tmp_path):
     ]
     steps = [("upsert_df", lambda st, _o, rows=seed_rows: st.upsert_df(
         frame(rows, "id string, values array<float>, namespace string"),
-        assume_unique_ids=True))]
+        assume_unique_ids=True), None)]
     for _id, _v, ns in seed_rows:
         live[ns].add(_id)
     kinds = (
@@ -1588,13 +1591,17 @@ def test_garbage_ledger_differential(spark, tmp_path):
             step = lambda st, _o, ns=ns: st.compact(ns)
         else:
             step = lambda st, _o, ns=ns: st.optimize(ns)
-        steps.append((kind, step))
+        steps.append((kind, step, ns))
 
     kept = 0
-    for i, (kind, step) in enumerate(steps):
+    for i, (kind, step, ns) in enumerate(steps):
         for main, other, log in (ledger, reference):
             log.append(("step", i))
             step(main, other)
+        if kind.startswith("other_"):
+            # the other object's point write carried the ledger forward
+            # in the shared state record: both objects hold it exact
+            assert ledger[0]._ledger_get(ns) is not None, (i, kind)
         for st in ledger[:2]:
             for ns in spaces:
                 got = st._ledger_get(ns)
@@ -1605,6 +1612,246 @@ def test_garbage_ledger_differential(spark, tmp_path):
     assert ledger[2] == reference[2]
     assert any(who != "step" for who, _ns in ledger[2]), "no compaction ran"
     assert kept >= len(steps), kept
+
+
+def _commits(store):
+    return store._head_number()[0]
+
+
+@pytest.mark.parametrize("damage", ["empty", "stale"])
+def test_damaged_hint_keeps_versions_monotone(spark, tmp_path, damage):
+    """An empty or stale `_LATEST` hint (a crash mid-write, a truncated
+    copy) is repaired by probing forward: the next upsert mints a fresh
+    version and every reader sees the latest vector."""
+    path = str(tmp_path / "hint")
+    store = VectorStore(spark, path, rebuild_threshold=1.0)
+    store.upsert_by_id([{"id": "a", "values": [1.0, 0.0]}])
+    store.upsert_by_id([{"id": "a", "values": [2.0, 0.0]}])
+    with open(os.path.join(store.state_path, "_LATEST"), "w") as fh:
+        fh.write("" if damage == "empty" else "1")
+    store.upsert_by_id([{"id": "a", "values": [3.0, 0.0]}])
+    assert store.current_version() == 3
+    assert store.read("a").values == [3.0, 0.0]
+    assert VectorStore(spark, path).read("a").values == [3.0, 0.0]
+
+
+def test_new_store_keeps_one_state_log(spark, tmp_path):
+    """A new store writes no JSON manifest: every mutating call makes
+    one commit, and a compaction triggered inside a write makes its own.
+    Bulk writes into existing data add one commit recording their
+    post-write stats aggregate."""
+    store = VectorStore(spark, str(tmp_path / "log"), rebuild_threshold=0.3)
+    ids = [f"k{i}" for i in range(6)]
+    calls = [
+        ("insert", lambda: store.insert([1.0, 0.0], namespace="A"), 1),
+        ("upsert_many", lambda: store.upsert_many(
+            [{"values": [1.0, 1.0]}], "A"), 1),
+        ("upsert_by_id", lambda: store.upsert_by_id(
+            [{"id": i, "values": [2.0, 0.0]} for i in ids], "A"), 1),
+        ("delete", lambda: store.delete(["k0"], "A"), 1),
+        ("upsert_resurrect", lambda: store.upsert_by_id(
+            [{"id": "k0", "values": [3.0, 0.0]}], "A"), 1),
+        ("insert_df", lambda: store.insert_df(spark.createDataFrame(
+            [([1.0, 2.0],)], "values array<float>"), "A"), 1),
+        ("upsert_df", lambda: store.upsert_df(spark.createDataFrame(
+            [("k1", [4.0, 0.0])], "id string, values array<float>"), "A"), 2),
+        ("delete_df", lambda: store.delete_df(spark.createDataFrame(
+            [("k2", "A")], "id string, namespace string")), 2),
+        ("delete_compacting", lambda: store.delete(["k3", "k4"], "A"), 2),
+        ("delete_namespace", lambda: store.delete_namespace("A"), 1),
+        ("clear_all", store.clear_all, 1),
+    ]
+    got = {}
+    for name, call, _want in calls:
+        before = _commits(store)
+        call()
+        got[name] = _commits(store) - before
+    assert got == {name: want for name, _c, want in calls}, got
+    assert sorted(os.listdir(store.path)) == ["_state"]
+
+
+def test_second_writer_raises_before_writing(spark, tmp_path):
+    """Two store objects on one path: a writer that read the head before
+    the other's commit raises ConcurrentWriteError and leaves no rows
+    behind; sequential writes from both objects all land."""
+    from mlvectordb_spark.commit import ConcurrentWriteError
+
+    path = str(tmp_path / "two")
+    a = VectorStore(spark, path, rebuild_threshold=0.95)
+    b = VectorStore(spark, path, rebuild_threshold=0.95)
+    a.upsert_by_id([{"id": f"k{i}", "values": [float(i), 0.0]}
+                    for i in range(5)], "A")
+    for lose in (
+        lambda: b.upsert_by_id([{"id": "k2", "values": [20.0, 0.0]},
+                                {"id": "new", "values": [9.0, 9.0]}], "A"),
+        lambda: b.delete(["k3"], "A"),
+    ):
+        probe = b._id_probe
+
+        def interleaved(ns, ids, _probe=probe):
+            # b already read the head: a commits in between
+            a.upsert_by_id([{"id": "k1", "values": [10.0, 0.0]}], "A")
+            return _probe(ns, ids)
+
+        b._id_probe = interleaved
+        with pytest.raises(ConcurrentWriteError):
+            lose()
+        del b._id_probe
+    assert a.current_version() == 3
+    assert a._raw().count() == 7  # 5 rows + two k1 versions, none of b's
+    assert a._tombstones() is None  # b's delete wrote no tombstone
+    assert b.read("k2", "A").values == [2.0, 0.0]
+    assert b.read("new", "A") is None
+    b.upsert_by_id([{"id": "k2", "values": [22.0, 0.0]}], "A")
+    a.delete(["k3"], "A")
+    b.insert([7.0, 7.0], namespace="A")
+    a.upsert_by_id([{"id": "k4", "values": [44.0, 0.0]}], "A")
+    for st in (a, b):
+        assert st.current_version() == 7
+        got = {r.id: list(r.values) for r in st.df().collect()}
+        assert len(got) == 5 and "k3" not in got
+        assert [got[k] for k in ("k1", "k2", "k4")] == [
+            [10.0, 0.0], [22.0, 0.0], [44.0, 0.0]
+        ]
+        assert st._ledger_get("A") == _fresh_garbage(st, "A")
+
+
+def test_concurrent_commits_lose_no_update(spark, tmp_path):
+    """Threads committing through separate store objects on one path:
+    the exclusive publish lets exactly one writer take each commit
+    number, so every read-modify-write lands once."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "race")
+    stores = [VectorStore(spark, path) for _ in range(8)]
+
+    def bump(st):
+        for _ in range(25):
+            st._record(lambda s: s.update(version=s["version"] + 1))
+
+    threads = [threading.Thread(target=bump, args=(st,)) for st in stores]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert stores[0]._head_number()[0] == 200
+    assert VectorStore(spark, path).current_version() == 200
+
+
+def test_ledger_exact_across_objects_jobs_pinned(spark, tmp_path, spark_jobs):
+    """Object B's point writes after object A's run the pinned point-write
+    jobs: the ledger A carried forward is in the state record, so B runs
+    no stats aggregate."""
+    path = str(tmp_path / "xo")
+    a = _keyed_store(spark, path)
+    a.upsert_by_id([{"id": "k0", "values": [0.0, 2.0]}], "A")
+    a.delete(["k9"], "A")
+    b = VectorStore(spark, path, rebuild_threshold=0.95)
+    b.upsert_by_id([{"id": "k8", "values": [8.0, 2.0]}], "A")  # warm
+    aggregates = []
+    collect = b._collect_compact_stats
+    b._collect_compact_stats = lambda *a_, **k: (
+        aggregates.append(a_), collect(*a_, **k)
+    )[1]
+    got = {
+        "upsert_with_tombstones": spark_jobs(lambda: b.upsert_by_id(
+            [{"id": "k4", "values": [4.0, 2.0]},
+             {"id": "new", "values": [4.0, 3.0]}], "A"))[0],
+        "delete": spark_jobs(lambda: b.delete(["k1", "k2"], "A"))[0],
+    }
+    assert got == {k: _WRITE_JOBS[k] for k in got}, got
+    assert aggregates == []
+    assert a._ledger_get("A") == b._ledger_get("A") == _fresh_garbage(a, "A")
+
+
+def test_plan_cache_invalidated_with_frozen_mtimes(spark, tmp_path):
+    """The reader-plan cache keys on the head commit, not on directory
+    mtimes (object stores have none): another object's truncate and
+    rewrite back to the same version still invalidates it, with every
+    data mtime restored."""
+    path = str(tmp_path / "pc")
+    a = VectorStore(spark, path)
+    a.upsert_by_id([{"id": f"k{i}", "values": [float(i), 0.0]}
+                    for i in range(4)], "A")
+    assert a.count("A") == 4  # caches the plans
+    watched = [a.data_path, os.path.join(a.data_path, "_SUCCESS"),
+               os.path.join(a.data_path, "namespace=A")]
+    frozen = {p: os.stat(p) for p in watched}
+    b = VectorStore(spark, path)
+    b.clear_all()
+    b.upsert_by_id([{"id": "z", "values": [9.0, 0.0]}], "A")
+    for p, st in frozen.items():
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert a.current_version() == 1
+    assert a.count("A") == 1
+    assert a.read("z", "A").values == [9.0, 0.0]
+
+
+_LEGACY = {
+    "write_version.json": {"v": 7},
+    "history_floor.json": {"floor": 5, "base": 2, "ns": {"A": 5}},
+    "dirty_namespaces.json": ["A"],
+    "dims.json": {"A": 2, "B": 3},
+}
+
+
+def test_legacy_manifests_migrate_once(spark, tmp_path):
+    """A store directory holding the four JSON manifests older stores
+    kept opens with the same version, per-namespace floors, dims and
+    dirty set; the migration is one commit and runs once."""
+    path = str(tmp_path / "legacy")
+    os.makedirs(path)
+    for name, body in _LEGACY.items():
+        with open(os.path.join(path, name), "w") as fh:
+            json.dump(body, fh)
+    store = VectorStore(spark, path)
+    assert store.current_version() == 7
+    assert (store.history_floor(), store.history_floor("A"),
+            store.history_floor("B")) == (5, 5, 2)
+    assert store._dirty_namespaces() == {"A"}
+    assert (store.dimension("A"), store.dimension("B")) == (2, 3)
+    assert sorted(os.listdir(path)) == ["_state"]
+    assert _commits(store) == 1
+    assert _commits(VectorStore(spark, path)) == 1
+    store.upsert_by_id([{"id": "x", "values": [1.0, 1.0]}], "A")
+    assert store.current_version() == 8
+    # a floor manifest from before per-namespace floors bounds every one
+    old = str(tmp_path / "older")
+    os.makedirs(old)
+    with open(os.path.join(old, "history_floor.json"), "w") as fh:
+        json.dump({"floor": 4}, fh)
+    assert VectorStore(spark, old).history_floor("any") == 4
+
+
+def test_store_state_writes_only_through_commits():
+    """No state write in operators/store.py can bypass the commit: the
+    module opens no file for writing and never calls json.dump."""
+    import ast
+
+    import mlvectordb_spark.operators.store as store_mod
+
+    with open(store_mod.__file__, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = ast.unparse(node.func)
+        assert name != "json.dump", node.lineno
+        if name in ("open", "os.fdopen", "io.open"):
+            mode = node.args[1] if len(node.args) > 1 else next(
+                (k.value for k in node.keywords if k.arg == "mode"), None
+            )
+            assert mode is None or (
+                isinstance(mode, ast.Constant)
+                and not set(mode.value) & set("wax+")
+            ), f"write-mode open at line {node.lineno}"
 
 
 def test_family_lazy_create_collapses_feed(spark, tmp_path):
@@ -1761,10 +2008,10 @@ def test_family_load_takes_factory_for_lazy_creation(spark, tmp_path):
 
 
 def test_external_writer_detected_by_auto_and_sync(spark, tmp_path):
-    """Round-6 ADVICE (medium): the per-namespace staleness tracker is a
-    lower bound — a write by ANOTHER store object into a namespace this
-    object already wrote must still (a) knock auto-mode back to the exact
-    scan and (b) be applied (not skipped) by sync_indexes."""
+    """A write by ANOTHER store object into a namespace this object
+    already wrote is in the state record's per-namespace last write, so
+    it must still (a) knock auto-mode back to the exact scan and (b) be
+    applied (not skipped) by sync_indexes."""
     from pyspark.sql import functions as F
 
     from mlvectordb_spark.operators.ann import IVFIndex
@@ -1786,7 +2033,7 @@ def test_external_writer_detected_by_auto_and_sync(spark, tmp_path):
         "id"
     ] != "k5", "fresh A must route through the (poisoned) index"
 
-    # ANOTHER process/object writes into A: invisible to store's tracker
+    # ANOTHER process/object writes into A
     other = VectorStore(spark, path, rebuild_threshold=0.95)
     other.upsert_df(
         spark.createDataFrame(
@@ -2236,29 +2483,6 @@ def test_find_similar_batch_metadata_filter(spark, tmp_path):
             {"q": [7.0]}, 3, namespace="A", metric="l2",
             metadata_filter={"cat": "a"}, mode="indexed",
         )
-
-
-def test_session_version_set_is_bounded(spark, tmp_path):
-    """A long-lived writer (streaming ingest mints one version per
-    micro-batch) must not grow the session-version set unboundedly: once
-    past the cap, versions at or below the lowest serving bookmark — or
-    the current version when nothing is attached — are pruned (the
-    freshness check never consults them again)."""
-    import json
-
-    store = VectorStore(spark, str(tmp_path / "svb"), rebuild_threshold=0.95)
-    with open(store._version_path, "w", encoding="utf-8") as fh:
-        json.dump({"v": 5000}, fh)
-    store._session_versions = set(range(1, 5001))
-    store.upsert_df(
-        spark.createDataFrame(
-            [("k1", [1.0], "A")],
-            "id string, values array<float>, namespace string",
-        )
-    )
-    # nothing attached → everything at/below current prunes; only the
-    # fresh version survives
-    assert len(store._session_versions) <= 1, len(store._session_versions)
 
 
 def test_upsert_check_dims_false_skips_count_and_requires_namespace(
