@@ -1,7 +1,7 @@
 """Commit primitives shared by `VectorStore` (operators/store.py) and
 `MergedTable` (streaming/merge_sink.py): the optimistic-concurrency error
-and one atomic-publish helper. Each caller keeps its own pointer and
-record formats."""
+and one atomic-publish helper, which `NamespaceIndexFamily` also uses for
+its manifest. Each caller keeps its own pointer and record formats."""
 
 from __future__ import annotations
 

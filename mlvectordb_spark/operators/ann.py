@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mlvectordb_spark.commit import publish
 from mlvectordb_spark.functions.localdf import local_rows_df
 from mlvectordb_spark.functions.vector import metric_expr
 from mlvectordb_spark.operators.cdc import PendingTail, latest_per_key
@@ -55,7 +56,7 @@ def staged_index_save(path: str, write_into) -> None:
     plans at the committed files afterwards (the swap replaced the files
     the old plans reference).
 
-    Crash-debris handling (r8 verdict #5): a crash mid-`write_into`
+    Crash-debris handling: a crash mid-`write_into`
     strands `<path>.staging-<uuid>`; a crash between the two renames
     strands the previous save in `<path>.old-<uuid>` with nothing at
     `path`. On entry: if `path` is missing but `.old-*` siblings
@@ -128,7 +129,7 @@ def staged_index_save(path: str, write_into) -> None:
                 # and the rollback source is gone. `path` holding a
                 # committed layout means the store is healed — degrade to
                 # a clean "save lost the race" error instead of a
-                # confusing secondary rename failure (r10 ADVICE).
+                # confusing secondary rename failure.
                 if _os.path.isdir(path):
                     raise OSError(
                         f"save lost a recovery race: {path} was restored "
@@ -313,7 +314,7 @@ class IVFIndex:
         self._built_count = 0
         self._added_count = 0
         # per-cluster (radius, count) for exact-search pruning — k scalars,
-        # driver-side, lazily computed and invalidated by add()
+        # driver-side, lazily computed and kept current by apply_changes
         self._radii: np.ndarray | None = None
         self._counts: np.ndarray | None = None
         self._vec_col = "embedding"
@@ -469,26 +470,6 @@ class IVFIndex:
             self._built_count = self.indexed.count()
         return self.indexed
 
-    def add(
-        self, df_new: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-    ) -> DataFrame:
-        """W8 incremental add: assign new vectors to their nearest EXISTING
-        centroid (no refit) and append — the same Arrow-batched argmin map
-        as build()'s assignment: narrow, NO join, NO window, NO shuffle
-        (the round-2 verdict flagged the old crossJoin+window plan).
-        Quality drifts as data shifts away from the fitted centroids, so
-        adds count toward the W9/W11 rebuild trigger (the reference tracks
-        deleted/total the same way, index.py:85-89)."""
-        assert self.indexed is not None and self.centroids is not None
-        assigned = self._assign(df_new.drop("cluster_id"), vec_col)
-        # one job: count the batch AND grow the cached radii over it (no
-        # full-corpus recompute on next search); counts refresh lazily
-        n_new = self._absorb_batch_stats(assigned, vec_col)
-        self.indexed = self.indexed.unionByName(assigned.select(*self.indexed.columns))
-        self._added_count += n_new
-        self._counts = None
-        return self.indexed
-
     def is_rebuild_required(self) -> bool:
         """W11 (reference index.py:164-165): True once post-build adds reach
         the drift threshold of the fitted corpus size."""
@@ -522,10 +503,13 @@ class IVFIndex:
         """Roll the index forward from a CDC feed without a refit (the
         `PendingTail` contract): upserts assign to their nearest EXISTING
         centroid, then pass through `encode` when given (IVF+PQ's codes),
-        and grow the cached cluster radii. Upserts count toward the W11
-        drift trigger exactly like add(); certified pruning stays exact on
-        any assignment. The feed must carry every non-derived column of
-        the indexed table (the union is by name)."""
+        and grow the cached cluster radii: a new member can extend its
+        cluster's radius, while a delete only shrinks the true radius, so
+        the cached value stays a valid upper bound and no sync forces a
+        full-corpus stats pass. Upserts count toward the W11 drift
+        trigger; certified pruning stays exact on any assignment. This is
+        the only way rows enter a built index. The feed must carry every
+        non-derived column of the indexed table (the union is by name)."""
         vec_col = vec_col or self._vec_col
         assert self.indexed is not None and self.centroids is not None
 
@@ -562,8 +546,7 @@ class IVFIndex:
 
     def _radius_rows(self, df: DataFrame, vec_col: str):
         """Per-cluster (max member-to-centroid distance, count) over `df` —
-        the Arrow matmul kernel shared by the full stats pass and the
-        bounded incremental update."""
+        the Arrow matmul kernel of the full stats pass."""
         cent = self.centroids
 
         def dist_batches(batches):
@@ -591,52 +574,17 @@ class IVFIndex:
             .collect()
         )
 
-    def _absorb_batch_stats(self, batch: DataFrame, vec_col: str) -> int:
-        """ONE job over a BOUNDED assigned batch (add / apply_changes
-        upserts) that both counts it (the W11 drift increment) and grows
-        the cached radii: a new member can extend its cluster's radius; a
-        delete can only shrink the true radius, so the cached value stays
-        a valid UPPER bound and certified pruning stays exact (just
-        marginally less tight until the next full stats pass). This keeps
-        CDC maintenance from forcing a full-corpus radius recompute on
-        the next search — at continuous-ingest scale the stats pass would
-        otherwise re-read the whole corpus every sync cycle (1M×64d
-        measurement: ~12 s per post-churn search repaying the pass).
-        Returns the batch row count. When no radii
-        are cached, falls back to a bare count (no vector decode)."""
-        if self._radii is None:
-            return batch.count()
-        if "__cdist" in batch.columns:
-            # the assignment matmul already emitted the member→centroid
-            # distance: radius growth is a plain JVM aggregate, no second
-            # Python pass over the batch (see _assign with_dist)
-            rows = (
-                batch.groupBy("cluster_id")
-                .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-                .collect()
-            )
-        else:
-            rows = self._radius_rows(batch, vec_col)
-        n = 0
-        for r in rows:
-            j = int(r.cluster_id)
-            n += int(r.n)
-            if float(r.radius) > self._radii[j]:
-                self._radii[j] = float(r.radius)
-        return n
-
     def cluster_stats(self, vec_col: str | None = None) -> tuple[np.ndarray, np.ndarray]:
         """Per-cluster (radius, member count): radius is the max TRUE L2
         distance of any member to its centroid. One Arrow-batched map (same
         matmul shape as _assign) + a k-row aggregate — k scalars on the
         driver, same class of state as the centroids themselves. Cached on
-        the object. After add()/apply_changes() the radii stay warm via the
-        grow-only update. apply_changes keeps certified lower-bound counts
-        (exact again at each fold); after add() the COUNTS refresh here
-        with a column-pruned cluster_id aggregate (no vector decode, no
-        Python) — counts must never overstate, because tau's coverage
-        argument needs them (overstating could under-cover k and break
-        certification)."""
+        the object. After apply_changes() the radii stay warm via the
+        grow-only update and the counts are certified lower bounds; at
+        each fold the COUNTS refresh here with a column-pruned cluster_id
+        aggregate (no vector decode, no Python) — counts must never
+        overstate, because tau's coverage argument needs them
+        (overstating could under-cover k and break certification)."""
         assert self.indexed is not None and self.centroids is not None
         if self._radii is not None and self._counts is not None:
             return self._radii, self._counts
@@ -856,11 +804,10 @@ class IVFIndex:
             ).write.mode("overwrite").parquet(f"{stage}/centroids")
             # drift counters AND the build-time vector column travel with
             # the index — otherwise a reloaded index silently disables the
-            # W11 rebuild trigger (round-2 verdict), and maintenance paths
-            # that default to self._vec_col (refresh_stats / apply_changes
-            # / save) would look for the ctor-default 'embedding' column
-            # in an index built over e.g. the store's 'values' (round-6
-            # ADVICE)
+            # W11 rebuild trigger, and maintenance paths that default to
+            # self._vec_col (refresh_stats / apply_changes / save) would
+            # look for the ctor-default 'embedding' column in an index
+            # built over e.g. the store's 'values'
             local_rows_df(spark, 
                 [(
                     int(self._built_count),
@@ -911,8 +858,8 @@ class IVFIndex:
             meta = spark.read.parquet(f"{path}/meta").head()
             idx._built_count = int(meta.built_count)
             idx._added_count = int(meta.added_count)
-            # vec_col joined the meta layout in round 7; older layouts fall
-            # back to the ctor default ('embedding')
+            # older meta layouts carry no vec_col and fall back to the
+            # ctor default ('embedding')
             if "vec_col" in meta.__fields__ and meta.vec_col:
                 idx._vec_col = str(meta.vec_col)
         except Exception:  # noqa: BLE001 — pre-meta index layout
@@ -987,8 +934,8 @@ class IVFIndex:
         """Smallest measured nprobe whose recall@k meets `target`; falls
         back to probing EVERY cluster (exact coverage, recall 1.0) when no
         measured point reaches it. Raises if the curve was never measured
-        — a serving router must not silently guess (the round-6 verdict's
-        'auto→approx silently eats a 30% recall cliff')."""
+        — a serving router must not silently guess (auto→approx would
+        silently eat a 30% recall cliff)."""
         return _nprobe_for_recall(
             self._recall_curve, target, self.n_clusters
         )
@@ -1366,38 +1313,11 @@ class IVFPQIndex:
         self.ivf.indexed = self.encoded
         return self.encoded
 
-    def add(
-        self, df_new: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-    ) -> DataFrame:
-        """W8 incremental add through the composed layout: assign new
-        vectors to their nearest EXISTING centroid (IVF's no-shuffle Arrow
-        argmin — no refit) and encode them with the EXISTING codebooks
-        (PQ's Arrow map). Neither layer's certification degrades: cluster
-        radii are invalidated and recomputed lazily (a new member can
-        extend one), and the per-vector reconstruction error is computed
-        fresh for each added vector, so exactness is unconditional — only
-        PRUNING quality drifts as data shifts away from the fitted
-        centroids/codebooks, which is what the IVF drift counter tracks
-        toward the W11 rebuild trigger."""
-        assigned = self.ivf._assign(df_new.drop("cluster_id"), vec_col)
-        encoded_new = self.pq.encode(assigned, vec_col=vec_col)
-        # one job: count + grow-only radius update over the bounded batch
-        n_new = self.ivf._absorb_batch_stats(encoded_new, vec_col)
-        assert self.encoded is not None
-        self.encoded = self.encoded.unionByName(
-            encoded_new.select(*self.encoded.columns)
-        )
-        self.ivf.indexed = self.encoded
-        self.pq.encoded = self.encoded
-        self.ivf._added_count += n_new
-        self.ivf._counts = None
-        return self.encoded
-
     @property
     def indexed(self) -> DataFrame | None:
         """Protocol alias for the composed index's one physical dataset
         (the encoded table) — lets maintenance code (NamespaceIndexFamily,
-        streaming ingest resync, store attach) treat every index family
+        the snapshot resync, store attach) treat every index family
         uniformly through `.indexed`."""
         return self.encoded
 
@@ -1424,8 +1344,8 @@ class IVFPQIndex:
     ) -> DataFrame:
         """CDC maintenance through the composed layout: the IVF roll-forward
         with the EXISTING codebooks encoding the upserts. Exactness is
-        unconditional, as with add(): errors are computed fresh per
-        re-encoded vector; only pruning quality drifts (W11 counter)."""
+        unconditional: errors are computed fresh per re-encoded vector;
+        only pruning quality drifts (W11 counter)."""
         self.indexed = self.ivf.apply_changes(
             changes, vec_col=vec_col, id_col=id_col, encode=self.pq.encode
         )
@@ -1946,8 +1866,9 @@ class NamespaceIndexFamily:
             )
             idx.save(_os.path.join(path, sub))
             manifest[ns] = {"dir": sub, "cls": type(idx).__name__}
-        with open(_os.path.join(path, "family.json"), "w", encoding="utf-8") as fh:
-            _json.dump(manifest, fh)
+        # atomic: a crash mid-write leaves the previous manifest, which
+        # still names loadable members (each member save is staged)
+        publish(_os.path.join(path, "family.json"), _json.dumps(manifest))
 
     @classmethod
     def load(cls, spark, path: str, factory=None) -> "NamespaceIndexFamily":

@@ -33,14 +33,16 @@ graph-ANN system does it (DiskANN sharding, Vespa/Lucene HNSW segments):
   (`_sweep_unvisited`) covers anything delete-damage disconnected — so
   `nprobe=None, ef=None` is EXACT unconditionally (not just on a
   delete-free graph) and oracle-checkable against brute-force SQL.
-- **Pending tail for incremental adds** (the Lucene/Vespa segment
-  pattern): `add()`/`apply_changes()` upserts land in a flat tail
-  DataFrame that every search scans EXACTLY and merges with the graph
-  candidates — new vectors are visible immediately at full recall, no
-  distributed graph surgery. Deletes anti-join out of both segments
-  (dangling edges are skipped by id at traversal time). Both count
-  toward the 20% drift trigger (reference `index.py:85-89`); rebuild()
-  folds the tail back into fresh graphs.
+- **Pending tail for incremental maintenance** (the Lucene/Vespa
+  segment pattern): rows enter a built graph only through
+  `apply_changes()`, the CDC roll-forward every family shares
+  (`operators/cdc.PendingTail`). Upserts land in a flat tail DataFrame
+  that every search scans EXACTLY and merges with the graph candidates —
+  new vectors are visible immediately at full recall, no distributed
+  graph surgery. Deletes anti-join out of both segments (dangling edges
+  are skipped by id at traversal time). Both count toward the 20% drift
+  trigger (reference `index.py:85-89`); fold_pending() folds the tail
+  into the blocks it routes to and rebuild() into fresh graphs.
 
 Scale shape: graph build is one shuffle (groupBy block) + per-block CPU;
 driver state is `n_blocks` centroids (same class as hnswlib's graph
@@ -296,8 +298,8 @@ def _reverse_sample(N: np.ndarray, m: int, n: int) -> np.ndarray:
 # way to NN-descent; at the cutoff the exact path is ~10-30 s of matmul
 _EXACT_POOL_MAX = 32_768
 # candidate-pool width per node before diversity selection: recall needs
-# selection from a pool WIDER than the kept degree (r7 probe: 0.775 →
-# 0.925 @ ef=64 going pool=m → 2m on exact pools; r9 probe on 50k
+# selection from a pool WIDER than the kept degree (measured: 0.775 →
+# 0.925 @ ef=64 going pool=m → 2m on exact pools; on 50k
 # DESCENT blocks: 0.883 → 0.938 @ ef=128 going 2m → 3m, while widening
 # only at the END of descent bought nothing — the iterations must refine
 # the wide frontier; 4m adds build cost and no recall)
@@ -354,7 +356,7 @@ def _descent_pool(
 
     `rho` < 1 is Dong et al.'s sampled expansion: each round expands a
     random ρk-subset of every node's list instead of all k, cutting the
-    dominant k² term. Measured on one 50k×64d block (SCALING.md r9):
+    dominant k² term. Measured on one 50k×64d block (SCALING.md):
     ρ=0.5 builds 2.1× faster (346 → 162 s) and holds the ≥0.9 serving
     dial (in-block recall@10 ef=128 0.962 → 0.944) but gives up the
     ef=64 point (0.925 → 0.812); ρ=0.75 saves only 18%. Default stays
@@ -364,7 +366,7 @@ def _descent_pool(
 
     `delta` is Dong et al.'s convergence threshold: stop when a round
     changes fewer than δ·n·k pool entries. Default 0 = disabled, which
-    matches the measurement (SCALING.md r10):
+    matches the measurement (SCALING.md):
     on clustered 50k blocks δ=0.001 NEVER fires before the round cap —
     pool-tail churn stays ~2-5% at round 8 while recall saturates by
     round 6 — so δ is an opt-in safety valve for genuinely
@@ -588,9 +590,9 @@ class GraphANNIndex:
         self.descent_rho = descent_rho
         # NN-descent convergence threshold (Dong et al.'s δ): a round
         # changing fewer than δ·n·k pool entries ends refinement early.
-        # Default 0 = OFF, matching the r10 measurement: δ=0.001 never
-        # fires before the round cap on clustered blocks (SCALING.md
-        # r10 / _descent_pool docstring) — the dial is an opt-in safety
+        # Default 0 = OFF, matching the measurement: δ=0.001 never
+        # fires before the round cap on clustered blocks (SCALING.md /
+        # _descent_pool docstring) — the dial is an opt-in safety
         # valve for fast-converging blocks, not a default saver; the
         # supported cheap-ingest dial is ef_construction=48
         self.descent_delta = descent_delta
@@ -610,9 +612,6 @@ class GraphANNIndex:
         self._data_cols: list[str] | None = None
         self._built_count = 0
         self._added_count = 0
-        # add() batches whose drift contribution hasn't been counted yet
-        # (settled in one job when the ratio is consulted — see add())
-        self._uncounted_adds: DataFrame | None = None
         # measured ef → recall@k curve (measure_recall_curve): driver-side
         # scalars persisted by save(), so a reloaded serving index honors
         # a recall target without re-measuring — the graph's dial is ef
@@ -651,7 +650,6 @@ class GraphANNIndex:
         self.pending = None
         self._built_count = df.count()
         self._added_count = 0
-        self._uncounted_adds = None
         self.cdc = PendingTail()
         return self.indexed
 
@@ -683,7 +681,7 @@ class GraphANNIndex:
             pdf = pdf.sort_values(icol, kind="mergesort").reset_index(
                 drop=True
             )
-            # float32 working set (r9 verdict #4): the stored vectors ARE
+            # float32 working set: the stored vectors ARE
             # float32 (array<float> — reference vector.py:14 semantics),
             # construction distances order candidates only, and at
             # descent-scale blocks (≥50k × high-d rows decoded per task)
@@ -783,7 +781,7 @@ class GraphANNIndex:
 
         def search_block(pdf):
             pdf = pdf.reset_index(drop=True)
-            # the beam's working set is float32 (r9 verdict #4): the
+            # the beam's working set is float32: the
             # stored vectors are float32 already, traversal distances
             # only ORDER candidates, and halving the decoded block
             # matrix halves the dominant per-task memory at descent
@@ -848,7 +846,7 @@ class GraphANNIndex:
             # 0.9 serving class: measured at 1M×64d (32 blocks of 31k),
             # ef=128 saturates at 0.813 regardless of nprobe (4/8/16 all
             # equal — the loss is in-block beam quality, not routing)
-            # while ef=256 → 0.912 and ef=384 → 0.963 (SCALING.md r9).
+            # while ef=256 → 0.912 and ef=384 → 0.963 (SCALING.md).
             # Without these points ef_for_recall(0.9) could only fall
             # back to the exhaustive scan at exactly the block sizes the
             # 100 TB regime implies. Small corpora still pick the first
@@ -1016,7 +1014,7 @@ class GraphANNIndex:
         post-filtered ANN). `target_recall` replaces the raw dials with
         the persisted calibration curve's smallest qualifying ef — the
         same quality contract as the single-query path, applied to the
-        whole batch (r8 verdict #9)."""
+        whole batch."""
         assert self.indexed is not None, "build() first"
         if target_recall is not None:
             ef = self.ef_for_recall(target_recall)
@@ -1212,32 +1210,6 @@ class GraphANNIndex:
 
     # ---------------------------------------------------------- maintenance
 
-    def add(
-        self,
-        df_new: DataFrame,
-        vec_col: str | None = None,
-        id_col: str | None = None,
-    ) -> DataFrame:
-        """W8 incremental add: new vectors land in the flat pending tail —
-        visible to the NEXT search immediately, at FULL recall (the tail
-        is scanned exactly), with zero graph surgery. They count toward
-        the W11 drift trigger — LAZILY: no count job runs here (the r8
-        verdict's job-count trim); uncounted batches accumulate as a plan
-        and settle in one job the first time the drift ratio is actually
-        consulted (`is_rebuild_required` / `save`)."""
-        assert self.indexed is not None, "build() first"
-        cols = self._data_cols or df_new.columns
-        batch = df_new.select(*cols)
-        self.pending = (
-            batch if self.pending is None
-            else self.pending.unionByName(batch)
-        )
-        self._uncounted_adds = (
-            batch if self._uncounted_adds is None
-            else self._uncounted_adds.unionByName(batch)
-        )
-        return self.pending
-
     def apply_changes(
         self,
         changes: DataFrame,
@@ -1267,19 +1239,11 @@ class GraphANNIndex:
         )
         return self.indexed
 
-    def _settle_drift(self) -> None:
-        """Materialize the lazily-accumulated add() drift in ONE count job
-        (only when something is actually pending settlement)."""
-        if self._uncounted_adds is not None:
-            self._added_count += self._uncounted_adds.count()
-            self._uncounted_adds = None
-
     def is_rebuild_required(self) -> bool:
         """W11 (reference index.py:164-165): drift — tail growth + deletes
         — reached 20% of the built corpus."""
         if self._built_count == 0:
             return False
-        self._settle_drift()
         return self._added_count / self._built_count >= self.REBUILD_THRESHOLD
 
     def note_full_resync(self, n_live: int) -> None:
@@ -1293,7 +1257,6 @@ class GraphANNIndex:
             self.rebuild()
         self._built_count = max(1, int(n_live))
         self._added_count = 0
-        self._uncounted_adds = None
 
     def rebuild(self) -> DataFrame:
         """Fold the pending tail and any delete damage back into fresh
@@ -1324,7 +1287,6 @@ class GraphANNIndex:
 
         assert self.indexed is not None
         spark = self.indexed.sparkSession
-        self._settle_drift()  # persisted drift must include lazy adds
         had_pending = self.pending is not None
         meta = {
             "n_blocks": self.n_blocks,

@@ -1757,15 +1757,16 @@ class VectorStore:
         return F.col("values")
 
     @staticmethod
-    def _payload(space: str) -> list:
+    def _payload(space: str) -> dict:
         """The columns the store hands an index next to (id, vector) at
-        build, CDC sync and resync: `metadata`, plus the raw vector in
-        cosine space (the index vector is normalized there). With them the
-        index rows of a fresh index are the namespace's live rows, and a
-        read can be answered from the index alone (`_serving_route`)."""
-        cols = [F.col("metadata")]
+        build, CDC sync and resync, by name: `metadata`, plus the raw
+        vector in cosine space (the index vector is normalized there).
+        With them the index rows of a fresh index are the namespace's live
+        rows, and a read can be answered from the index alone
+        (`_serving_route`)."""
+        cols = {"metadata": F.col("metadata")}
         if space == "cosine":
-            cols.append(F.col("values").alias(RAW_VALUES))
+            cols[RAW_VALUES] = F.col("values").alias(RAW_VALUES)
         return cols
 
     def build_index(self, namespace: str, factory=None, space: str = "l2") -> Any:
@@ -1782,7 +1783,7 @@ class VectorStore:
             .filter(F.col("namespace") == namespace)
             .select(
                 "id", self._space_vec(space).alias("values"),
-                *self._payload(space),
+                *self._payload(space).values(),
             )
         )
         if factory is None:
@@ -1802,13 +1803,12 @@ class VectorStore:
         return idx
 
     def sync_indexes(self) -> None:
-        """Roll every attached index forward from the store's CDC feed
-        (`changes_since` → `apply_changes`), per namespace — the batch
-        twin of `streaming.ingest.start_indexed_ingest`'s per-micro-batch
-        sync. If the floor moved past a namespace's last synced version
-        (compaction erased the events), that namespace falls back to a
-        full resync from current state — same snapshot-then-delta contract
-        as a CDC replica across VACUUM."""
+        """Roll every attached index forward from the store's CDC feed, per
+        namespace (`catch_up_index`). If the floor moved past a
+        namespace's last synced version (compaction erased the events),
+        that namespace falls back to a full resync from current state —
+        same snapshot-then-delta contract as a CDC replica across
+        VACUUM."""
         for ns in list(self._serving):
             self._sync_namespace(ns)
 
@@ -1822,64 +1822,92 @@ class VectorStore:
             return
         index, vec_col, id_col, space = entry
         v0 = self._serving_synced_at.get(ns, 0)
-        # upper bound captured BEFORE the feed is built: events landing
-        # between feed consumption and the bookmark write would
-        # otherwise be skipped forever (changes_since is exclusive of
-        # the bookmark) — the same race the streaming twin closes with
-        # `write_version <= v1` (ingest.py write_batch)
         state = self._head()[1]
-        v1 = state["version"]
-        if _ns_value(state, ns, "written") <= v0 <= v1:
+        if _ns_value(state, ns, "written") <= v0 <= state["version"]:
             # no write to this namespace, by any writer, since the sync
-            self._serving_synced_at[ns] = v1
+            self._serving_synced_at[ns] = state["version"]
             return
+        self._serving_synced_at[ns] = self.catch_up_index(
+            index, v0, vec_col, id_col, namespace=ns, space=space
+        )
+
+    def catch_up_index(
+        self, index, since: int, vec_col: str, id_col: str,
+        namespace: str | None = None, space: str = "l2",
+    ) -> int:
+        """Roll `index` forward from version `since` to the store's current
+        version and return that version, the index's new bookmark. The one
+        catch-up protocol behind `sync_indexes` and
+        `streaming.ingest.start_indexed_ingest`:
+
+        1. the ceiling `v1` is read before the feed, so an event that
+           lands later is above the bookmark and the next catch-up
+           applies it (`changes_since` is exclusive of the bookmark);
+        2. the feed of `namespace` (every namespace when None) up to `v1`
+           goes into `index.apply_changes`;
+        3. if the history floor moved past `since` (compaction erased the
+           events), the index resyncs from a live snapshot stamped `v1`;
+        4. either way the bookmark is `v1`. A snapshot read after `v1` may
+           already hold later writes; re-applying them from `v1` is
+           idempotent.
+
+        `space` is the index's representation (see `attach_index`)."""
+        v1 = self.current_version()
         try:
-            # the namespace's own floor: compacting another namespace
-            # erases none of this one's events
-            if _ns_value(state, ns, "floor") > v0:
-                raise ValueError("floor moved")
-            feed = (
-                self.changes_since(v0, ns)
-                .filter(F.col("write_version") <= v1)
-                .select(
-                    F.col("id").alias(id_col),
-                    F.when(
-                        F.col("values").isNotNull(), self._space_vec(space)
-                    ).alias(vec_col),
-                    *self._payload(space),
-                    "change_type",
-                    "write_version",
-                )
-            )
-            index.apply_changes(feed, vec_col=vec_col, id_col=id_col)
+            feed = self.changes_since(since, namespace)
         except ValueError:
-            self._resync_index(ns, index, vec_col, id_col, space)
-            v1 = self.current_version()
-        self._serving_synced_at[ns] = v1
+            self._resync_index(namespace, index, vec_col, id_col, space, v1)
+            return v1
+        index.apply_changes(
+            self._index_rows(
+                index, feed.filter(F.col("write_version") <= v1),
+                vec_col, id_col, space,
+            ),
+            vec_col=vec_col, id_col=id_col,
+        )
+        return v1
+
+    def _index_rows(
+        self, index, events: DataFrame, vec_col: str, id_col: str,
+        space: str,
+    ) -> DataFrame:
+        """Store events (`changes_since` shape) as the feed of an index
+        in `space`, under the index's column names, with the payload
+        columns the index holds."""
+        held = set(index.indexed.columns)
+        return events.select(
+            F.col("id").alias(id_col),
+            F.when(
+                F.col("values").isNotNull(), self._space_vec(space)
+            ).alias(vec_col),
+            *(c for name, c in self._payload(space).items() if name in held),
+            "change_type",
+            "write_version",
+        )
 
     def _resync_index(
-        self, namespace: str, index, vec_col: str, id_col: str,
-        space: str = "l2",
+        self, namespace: str | None, index, vec_col: str, id_col: str,
+        space: str, version: int,
     ) -> None:
-        """Full per-namespace resync via the shared snapshot kernel
-        (`ann.resync_index_from_snapshot` — catch-up and incremental
-        share the maintenance path), with the namespace slice already in
-        the index's space representation."""
+        """Full resync of `index` from the live rows of `namespace` (every
+        namespace when None), every row an upsert stamped `version`,
+        through the shared snapshot kernel
+        (`ann.resync_index_from_snapshot`)."""
         from mlvectordb_spark.operators.ann import resync_index_from_snapshot
 
-        v = self.current_version()
-        snap = (
-            self.df()
-            .filter(F.col("namespace") == namespace)
-            .select(
-                F.col("id").alias(id_col),
-                self._space_vec(space).alias(vec_col),
-                *self._payload(space),
+        live = self.df()
+        if namespace is not None:
+            live = live.filter(F.col("namespace") == namespace)
+        snap = self._index_rows(
+            index,
+            live.select(
+                "id", "values", "metadata",
                 F.lit("upsert").alias("change_type"),
-                F.lit(v).cast("long").alias("write_version"),
-            )
+                F.lit(version).cast("long").alias("write_version"),
+            ),
+            vec_col, id_col, space,
         )
-        resync_index_from_snapshot(index, snap, vec_col, id_col, v)
+        resync_index_from_snapshot(index, snap, vec_col, id_col, version)
 
     # -- search (Q1, Q3, Q4) -----------------------------------------------
 

@@ -68,29 +68,6 @@ UPSERT_INGEST_SCHEMA = T.StructType(
 )
 
 
-def resync_index(store: VectorStore, index, vec_col: str, id_col: str) -> None:
-    """Full index resync from the store's CURRENT state (all namespaces,
-    raw values — the standalone-index shape `start_indexed_ingest`
-    maintains) — the fallback when the CDC floor moved past the index's
-    synced version. Delegates to the shared snapshot kernel
-    (`operators.ann.resync_index_from_snapshot`), which also restarts the
-    W11 drift counters: catch-up volume is a fresh baseline, not drift.
-    Space-aware per-namespace resync lives in
-    `VectorStore._resync_index` (same kernel, normalized snapshot)."""
-    from pyspark.sql import functions as F
-
-    from mlvectordb_spark.operators.ann import resync_index_from_snapshot
-
-    v = store.current_version()
-    snap = store.df().select(
-        F.col("id").alias(id_col),
-        F.col("values").alias(vec_col),
-        F.lit("upsert").alias("change_type"),
-        F.lit(v).cast("long").alias("write_version"),
-    )
-    resync_index_from_snapshot(index, snap, vec_col, id_col, v)
-
-
 def apply_mutation_batch(store: VectorStore, batch_df: DataFrame) -> None:
     """Apply one UPSERT_INGEST_SCHEMA micro-batch to the store: only the
     LATEST op per (id, namespace) in stream (`seq`) order applies — so
@@ -147,51 +124,27 @@ def start_indexed_ingest(
     Floor safety: routine writes can move the CDC floor past the batch's
     start version — upsert_df retires a tombstone when a deleted id is
     re-upserted, and the 20% auto-compaction trigger fires from both write
-    paths; either would make `changes_since(v0)` raise and kill the
-    stream. When the floor has moved, the batch falls back to a FULL index
-    resync from the store's current state (`resync_index`) instead of the
-    incremental feed — the same snapshot-then-delta contract a CDC replica
-    follows across VACUUM.
+    paths. The sync is `VectorStore.catch_up_index` over every namespace,
+    the same catch-up `sync_indexes` runs: when the floor has moved, the
+    batch falls back to a FULL index resync from the store's current
+    state instead of killing the stream — the snapshot-then-delta
+    contract a CDC replica follows across VACUUM.
 
     Convergence across writers: the sync bookmark starts at
     `since_version` (default: the store version when the stream starts —
     the index must be current as of then) and CARRIES FORWARD batch to
-    batch, so events written by OTHER writers between micro-batches are
-    picked up by the next batch's feed instead of being silently skipped
-    (re-reading current_version at each batch start would step over
-    them)."""
-    from pyspark.sql import functions as F
-
+    batch as the version each catch-up returns, so events written by
+    OTHER writers between micro-batches are picked up by the next batch's
+    feed instead of being silently skipped."""
     bookmark = {
         "v": store.current_version() if since_version is None else int(since_version)
     }
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        v0 = bookmark["v"]
         apply_mutation_batch(store, batch_df)
-        # capture the sync ceiling BEFORE reading the feed: events landing
-        # after this point belong to the NEXT batch's feed (the bookmark
-        # only advances to versions this feed provably covered)
-        v1 = store.current_version()
-        if store.history_floor() > v0:
-            resync_index(store, index, vec_col=vec_col, id_col=id_col)
-        else:
-            try:
-                feed = (
-                    store.changes_since(v0)
-                    .filter(F.col("write_version") <= F.lit(v1))
-                    .select(
-                        F.col("id").alias(id_col),
-                        F.col("values").alias(vec_col),
-                        "change_type",
-                        "write_version",
-                    )
-                )
-                index.apply_changes(feed, vec_col=vec_col, id_col=id_col)
-            except ValueError:
-                # floor raced past v0 between the check and the read
-                resync_index(store, index, vec_col=vec_col, id_col=id_col)
-        bookmark["v"] = v1
+        bookmark["v"] = store.catch_up_index(
+            index, bookmark["v"], vec_col, id_col
+        )
 
     return (
         stream.writeStream.foreachBatch(write_batch)

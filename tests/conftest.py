@@ -3,6 +3,7 @@ from __future__ import annotations
 import itertools
 
 import pytest
+from pyspark.sql import functions as F
 
 from mlvectordb_spark.session import get_spark
 
@@ -36,3 +37,16 @@ def spark_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
     return run
+
+
+@pytest.fixture(scope="session")
+def upsert_feed():
+    """`upsert_feed(df, version=1)` -> `df` as a CDC feed for an index's
+    `apply_changes`: every row an `upsert` event stamped `version`."""
+
+    def feed(df, version=1):
+        return df.withColumn("change_type", F.lit("upsert")).withColumn(
+            "write_version", F.lit(version).cast("long")
+        )
+
+    return feed

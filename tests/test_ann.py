@@ -56,73 +56,60 @@ def test_ivf_search_is_pruned(emb, qvec):
     assert n_candidates < emb.count()
 
 
-def test_ivf_incremental_add_and_rebuild_trigger(spark, emb, qvec):
-    """W8 add + W11 rebuild flag: added vectors become searchable without a
-    refit; the drift counter trips at 20% (reference threshold)."""
+def test_ivf_incremental_add_and_rebuild_trigger(spark, emb, qvec, upsert_feed):
+    """W8 add through apply_changes + W11 rebuild flag: upserted vectors
+    become searchable without a refit; the drift counter trips at 20%
+    (reference threshold)."""
     base = emb.filter(F.col("vec_id") < 400)
     idx = IVFIndex(n_clusters=8, seed=42)
     idx.build(base)
     assert not idx.is_rebuild_required()
     batch1 = emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 450))
-    idx.add(batch1)  # 50/400 = 12.5% — under threshold
+    idx.apply_changes(upsert_feed(batch1))  # 50/400 = 12.5% — under threshold
     assert not idx.is_rebuild_required()
     # an added vector is findable via full probe (exact within clusters)
     probe = emb.filter(F.col("vec_id") == 420).select("embedding").head()[0]
     hits = {r.vec_id for r in idx.search(probe, 3, nprobe=8).collect()}
     assert 420 in hits
     batch2 = emb.filter(F.col("vec_id") >= 450)
-    idx.add(batch2)  # cumulative 100/400 = 25% — trips the flag
+    idx.apply_changes(upsert_feed(batch2, 2))  # cumulative 100/400 = 25%
     assert idx.is_rebuild_required()
     idx.build(emb)  # refit clears the drift counter
     assert not idx.is_rebuild_required()
 
 
 def test_ivf_add_plan_is_shuffle_free(spark, emb):
-    """The incremental-add assignment is a narrow per-row map — no
-    crossJoin, no window, no Exchange (round-2 verdict flagged the old
-    crossJoin+window argmin)."""
+    """The step `apply_changes` re-enters upserts through (`_assign`, the
+    nearest-centroid argmin) is a narrow per-row map — no crossJoin, no
+    window, no Exchange."""
     import io
     from contextlib import redirect_stdout
 
     idx = IVFIndex(n_clusters=8, seed=42)
     idx.build(emb.filter(F.col("vec_id") < 400))
-    # rebuild the assignment expression the way add() does and assert the
-    # physical plan has no Exchange / Window
-    new = emb.filter(F.col("vec_id") >= 400)
-    cent_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in idx.centroids]
-    )
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dists = F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with(vec_d, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    assigned = new.withColumn("__dists", dists).withColumn(
-        "cluster_id",
-        (F.array_position("__dists", F.array_min("__dists")) - 1).cast("int"),
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assigned.explain(mode="simple")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan and "Window" not in plan
+    for with_dist in (False, True):
+        assigned = idx._assign(
+            emb.filter(F.col("vec_id") >= 400), "embedding", with_dist
+        )
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            assigned.explain(mode="simple")
+        plan = buf.getvalue()
+        assert "MapInPandas" in plan
+        assert "Exchange" not in plan and "Window" not in plan
 
 
-def test_ivf_reloaded_index_keeps_drift_trigger(spark, emb, tmp_path):
-    """Round-2 verdict: load() must restore drift counters so
-    is_rebuild_required() stays live across persistence."""
+def test_ivf_reloaded_index_keeps_drift_trigger(spark, emb, tmp_path, upsert_feed):
+    """load() must restore drift counters so is_rebuild_required() stays
+    live across persistence."""
     idx = IVFIndex(n_clusters=8, seed=42)
     idx.build(emb.filter(F.col("vec_id") < 400))
     idx.save(str(tmp_path / "ivf_drift"))
     loaded = IVFIndex.load(spark, str(tmp_path / "ivf_drift"))
     assert loaded._built_count == idx._built_count
     assert not loaded.is_rebuild_required()
-    loaded.add(emb.filter(F.col("vec_id") >= 400))  # 100/400 = 25%
-    assert loaded.is_rebuild_required()
+    loaded.apply_changes(upsert_feed(emb.filter(F.col("vec_id") >= 400)))
+    assert loaded.is_rebuild_required()  # 100/400 = 25%
 
 
 def test_ivf_save_load_roundtrip(spark, emb, qvec, tmp_path):
@@ -516,11 +503,12 @@ def test_ivfpq_batch_knn_equals_brute_force(spark, emb):
         assert [r.score for r in got_q] == [r.score for r in want]
 
 
-def test_ivfpq_incremental_add_stays_exact(spark, emb):
-    """add() assigns to existing centroids and encodes with existing
-    codebooks; search through the grown index must STILL equal brute
-    force over the union (certification is unconditional - only pruning
-    quality drifts, tracked by the rebuild trigger)."""
+def test_ivfpq_incremental_add_stays_exact(spark, emb, upsert_feed):
+    """apply_changes assigns upserts to existing centroids and encodes
+    them with existing codebooks; search through the grown index must
+    STILL equal brute force over the union (certification is
+    unconditional - only pruning quality drifts, tracked by the rebuild
+    trigger)."""
     from mlvectordb_spark.operators.ann import IVFPQIndex
 
     base = emb.filter(F.col("vec_id") < 2500)
@@ -528,7 +516,7 @@ def test_ivfpq_incremental_add_stays_exact(spark, emb):
     idx = IVFPQIndex(n_clusters=8, m=8, k_sub=16, seed=42)
     idx.build(base)
     assert not idx.is_rebuild_required()
-    idx.add(extra)
+    idx.apply_changes(upsert_feed(extra))
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     got = idx.search_exact(qvec, 10).collect()
     want = knn(emb, qvec, 10, metric="l2").collect()
@@ -779,6 +767,47 @@ def test_namespace_family_save_load_roundtrip(spark, tmp_path):
     assert not fam2.member("ns/a").is_rebuild_required()
 
 
+def test_family_manifest_failed_write_keeps_previous(spark, tmp_path, monkeypatch):
+    """A family save that fails while writing `family.json` leaves the
+    previous manifest in place, so the previous family still loads."""
+    import json
+
+    from mlvectordb_spark.operators.ann import IVFIndex, NamespaceIndexFamily
+
+    df = spark.createDataFrame(
+        [(f"a{i}", [float(i), float(i % 3)], "A") for i in range(20)],
+        "id string, values array<float>, namespace string",
+    )
+    fam = NamespaceIndexFamily(factory=lambda: IVFIndex(n_clusters=2, seed=6))
+    fam.build(df, vec_col="values", id_col="id")
+    path = str(tmp_path / "fam")
+    fam.save(path)
+
+    real = json.JSONEncoder.iterencode
+
+    def dying(self, o, _one_shot=False):
+        chunks = real(self, o, _one_shot)
+        if not (isinstance(o, dict) and o and all(
+            isinstance(v, dict) and "cls" in v for v in o.values()
+        )):
+            return chunks
+
+        def partial():
+            # the first piece is written, then the disk fills
+            yield next(iter(chunks))
+            raise OSError("no space left on device")
+
+        return partial()
+
+    monkeypatch.setattr(json.JSONEncoder, "iterencode", dying)
+    with pytest.raises(OSError):
+        fam.save(path)
+    monkeypatch.undo()
+    back = NamespaceIndexFamily.load(spark, path)
+    assert back.namespaces() == ["A"]
+    assert back.member("A").indexed.count() == 20
+
+
 def test_ivf_load_restores_vec_col(spark, tmp_path):
     """Round-6 ADVICE: an index built over a non-default vector column
     (e.g. the store's 'values') must restore that column name on load —
@@ -804,7 +833,7 @@ def test_ivf_load_restores_vec_col(spark, tmp_path):
     assert loaded.indexed.filter(F.col("id") == "k100").count() == 1
 
 
-def test_ivfpq_save_load_keeps_drift_and_vec_col(spark, emb, tmp_path):
+def test_ivfpq_save_load_keeps_drift_and_vec_col(spark, emb, tmp_path, upsert_feed):
     """IVFPQIndex now persists the same meta as IVFIndex: drift counters
     (is_rebuild_required stays live across persistence) and the
     build-time vector column."""
@@ -817,8 +846,8 @@ def test_ivfpq_save_load_keeps_drift_and_vec_col(spark, emb, tmp_path):
     assert loaded.ivf._built_count == idx.ivf._built_count
     assert loaded.ivf._vec_col == "embedding"
     assert not loaded.is_rebuild_required()
-    loaded.add(emb.filter(F.col("vec_id") >= 400))  # 100/400 = 25%
-    assert loaded.is_rebuild_required()
+    loaded.apply_changes(upsert_feed(emb.filter(F.col("vec_id") >= 400)))
+    assert loaded.is_rebuild_required()  # 100/400 = 25%
 
 
 def test_recall_curve_measure_select_and_persist(spark, emb, qvec, tmp_path):

@@ -125,13 +125,13 @@ def test_save_load_roundtrip(tmp_path, spark, gidx, emb, qvec):
     assert recall_at_k(back.search(qvec, K, ef=None, nprobe=None), exact) == 1.0
 
 
-def test_pending_tail_immediately_visible(spark, emb, qvec):
+def test_pending_tail_immediately_visible(spark, emb, qvec, upsert_feed):
     idx = GraphANNIndex(n_blocks=2, m=4, ef_construction=32)
     idx.build(emb)
     near = [float(x) for x in qvec]
     near[0] += 1e-4
     new = spark.createDataFrame([(999_001, near, 0)], emb.schema)
-    idx.add(new)
+    idx.apply_changes(upsert_feed(new))
     got = {r.vec_id for r in idx.search(qvec, 2, ef=None, nprobe=None).collect()}
     assert got == {QVID, 999_001}
     # exact path sees the tail too
@@ -163,7 +163,7 @@ def test_apply_changes_delete_and_upsert(spark, emb, qvec):
     assert got[0] == QVID
 
 
-def test_rebuild_trigger_and_fold(spark, emb):
+def test_rebuild_trigger_and_fold(spark, emb, upsert_feed):
     idx = GraphANNIndex(n_blocks=2, m=4, ef_construction=32)
     idx.build(emb)
     n = idx._built_count
@@ -172,7 +172,7 @@ def test_rebuild_trigger_and_fold(spark, emb):
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     assert not idx.is_rebuild_required()
-    idx.add(tail)
+    idx.apply_changes(upsert_feed(tail))
     assert idx.is_rebuild_required()
     idx.rebuild()
     assert idx.pending is None
@@ -184,7 +184,7 @@ def test_rebuild_trigger_and_fold(spark, emb):
     )
 
 
-def test_fold_pending_cow_semantics(spark, emb, qvec):
+def test_fold_pending_cow_semantics(spark, emb, qvec, upsert_feed):
     """fold_pending: tail rows become graph-served (exhaustive search ==
     brute force afterwards), untouched blocks keep their adjacency
     byte-identical, the drift counter keeps accumulating (router stays
@@ -199,8 +199,7 @@ def test_fold_pending_cow_semantics(spark, emb, qvec):
     near = [float(x) for x in qvec]
     near[0] += 1e-3
     new = spark.createDataFrame([(777_001, near, 0)], emb.schema)
-    idx.add(new)
-    idx._settle_drift()
+    idx.apply_changes(upsert_feed(new))
     drift = idx._added_count
     assert drift == 1
     idx.fold_pending()
@@ -498,7 +497,7 @@ def test_family_member_protocol(spark, emb):
     assert got == exact
 
 
-def test_save_over_loaded_path_after_fold(tmp_path, spark, emb, qvec):
+def test_save_over_loaded_path_after_fold(tmp_path, spark, emb, qvec, upsert_feed):
     """Maintained-index persistence: load → fold_pending → save back to
     the SAME path must succeed (staged atomic-swap save — a direct
     overwrite fails mid-write reading the files it is replacing and
@@ -511,7 +510,9 @@ def test_save_over_loaded_path_after_fold(tmp_path, spark, emb, qvec):
     back = GraphANNIndex.load(spark, p)
     near = [float(x) for x in qvec]
     near[2] += 1e-3
-    back.add(spark.createDataFrame([(888_001, near, 0)], emb.schema))
+    back.apply_changes(
+        upsert_feed(spark.createDataFrame([(888_001, near, 0)], emb.schema))
+    )
     back.fold_pending()
     back.save(p)  # over the path it was loaded from
     again = GraphANNIndex.load(spark, p)
@@ -622,23 +623,6 @@ def test_exhaustive_exact_after_heavy_deletes(spark, emb, qvec):
         for r in idx.search(qvec, K, ef=None, nprobe=None).collect()
     ]
     assert got == exact
-
-
-def test_add_counts_drift_lazily(spark, emb):
-    """add() must not run a count job eagerly (the r8 verdict's CDC
-    job-count trim): the drift contribution accumulates as a lazy plan
-    and settles in ONE count the first time the ratio is consulted."""
-    idx = GraphANNIndex(n_blocks=2, m=4, ef_construction=32)
-    idx.build(emb)
-    tail = emb.limit(5).select(
-        (F.col("vec_id") + 2_000_000).alias("vec_id"), "embedding", "label"
-    )
-    idx.add(tail)
-    assert idx._uncounted_adds is not None
-    assert idx._added_count == 0  # nothing counted yet
-    idx.is_rebuild_required()  # consults the ratio → settles
-    assert idx._uncounted_adds is None
-    assert idx._added_count == 5
 
 
 def test_batch_target_recall_through_graph(spark, emb):

@@ -1326,6 +1326,47 @@ def test_floor_is_per_namespace(spark, tmp_path):
         )
 
 
+def test_resync_bookmark_keeps_concurrent_write(spark, tmp_path):
+    """A write by another store object that lands while a floor-forced
+    resync runs is above the bookmark the resync leaves: auto mode routes
+    to the exact scan until the next sync, which applies the write."""
+    from mlvectordb_spark.operators.ann import IVFIndex
+
+    path = str(tmp_path / "race")
+    store, _centers, rng = _metadata_store(
+        spark, path, {"A": lambda: IVFIndex(n_clusters=4, seed=1)}, n=60
+    )
+    store.upsert_by_id(
+        [{"id": "A-1", "values": rng.normal(size=16).tolist()}], "A"
+    )
+    store.compact("A")
+    q = rng.normal(size=16)
+    other = VectorStore(spark, path, rebuild_threshold=0.95)
+    resync = store._resync_index
+
+    def racing(*args, **kwargs):
+        out = resync(*args, **kwargs)
+        other.upsert_by_id(
+            [{"id": "A-late", "values": (q + 1e-3).tolist()}], "A"
+        )
+        return out
+
+    store._resync_index = racing
+    store.sync_indexes()
+    store._resync_index = resync
+    exact = store.find_similar(q.tolist(), 3, "A", metric="l2", mode="exact")
+    assert exact[0]["id"] == "A-late"
+    assert not store._index_fresh("A")
+    assert store.find_similar(q.tolist(), 3, "A", metric="l2") == exact
+    store.sync_indexes()
+    assert store._index_fresh("A")
+    served = store.attached_index("A").indexed
+    assert served.filter("id = 'A-late'").count() == 1
+    assert store.find_similar(
+        q.tolist(), 3, "A", metric="l2", mode="indexed"
+    ) == exact
+
+
 # Spark jobs per point write with an exact garbage ledger. Both point
 # writes start with the id probe (stored ids + tombstone hits, one
 # collect). upsert_by_id then appends; a resurrecting upsert adds the
