@@ -22,7 +22,10 @@ reference: `recall_at_k` measures any approximate index against it
 
 from __future__ import annotations
 
+import hashlib
+import os
 from collections.abc import Sequence
+from urllib.parse import quote
 
 import numpy as np
 from pyspark.ml.feature import BucketedRandomProjectionLSH
@@ -32,7 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mlvectordb_spark.commit import publish
+from mlvectordb_spark.commit import (
+    CommittedIndex,
+    commit_generation,
+    open_frame,
+    open_generation,
+    stage_frame,
+)
 from mlvectordb_spark.functions.localdf import local_rows_df
 from mlvectordb_spark.functions.vector import metric_expr
 from mlvectordb_spark.operators.cdc import PendingTail, latest_per_key
@@ -42,152 +51,6 @@ from mlvectordb_spark.operators.knn import knn, rank_order
 # so a small query batch doesn't funnel the whole candidate set into
 # |queries| reducers
 TOPK_SALT_BUCKETS = 64
-
-
-def staged_index_save(path: str, write_into) -> None:
-    """Staged atomic-swap persistence, shared by every index family's
-    save(): `write_into(stage_dir)` writes the FULL layout into a sibling
-    staging directory, which then swaps over `path` with rollback on
-    failure. Two hazards this removes: saving a maintained index back
-    OVER the path it was loaded from used to make Spark read the files
-    it was replacing (the write fails mid-job and leaves the previous
-    layout half-destroyed — data loss, not just an error), and any crash
-    mid-save destroyed the old save. Callers must re-point their lazy
-    plans at the committed files afterwards (the swap replaced the files
-    the old plans reference).
-
-    Crash-debris handling: a crash mid-`write_into`
-    strands `<path>.staging-<uuid>`; a crash between the two renames
-    strands the previous save in `<path>.old-<uuid>` with nothing at
-    `path`. On entry: if `path` is missing but `.old-*` siblings
-    survive, the NEWEST one is restored to `path` (the crash-window
-    recovery — the data was a complete committed save); then any
-    remaining `.staging-*`/`.old-*` siblings older than an hour are
-    swept (the MergedTable staging-sweep policy applied to index
-    persistence — the age floor keeps a CONCURRENT save's live staging
-    dir safe)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-    import uuid as _uuid
-
-    cutoff = _time.time() - 3600
-    if not _os.path.exists(path):
-        # restore only STALE survivors: a fresh .old-<uuid> with `path`
-        # missing is most likely a CONCURRENT save sitting between its
-        # two renames — restoring it would make that save's commit
-        # rename fail AND its rollback rename fail (the dir we stole).
-        # A genuine crash survivor is, by definition, older than any
-        # live save's seconds-wide rename window.
-        survivors = sorted(
-            (
-                d
-                for d in _glob.glob(f"{path}.old-*")
-                if _os.path.getmtime(d) < cutoff
-            ),
-            key=_os.path.getmtime,
-        )
-        if survivors:
-            _os.rename(survivors[-1], path)
-    for debris in _glob.glob(f"{path}.staging-*") + _glob.glob(
-        f"{path}.old-*"
-    ):
-        try:
-            if _os.path.getmtime(debris) < cutoff:
-                _shutil.rmtree(debris, ignore_errors=True)
-        except OSError:
-            pass  # someone else swept or committed it first
-
-    stage = f"{path}.staging-{_uuid.uuid4().hex}"
-    write_into(stage)
-    old = None
-    if _os.path.exists(path):
-        old = f"{path}.old-{_uuid.uuid4().hex}"
-        _os.rename(path, old)
-        # Stamp the RENAME time: rename(2) keeps the directory's own
-        # mtime (the time its entries last changed, possibly hours ago),
-        # so without this an .old survivor from a save of an old index
-        # would look "stale" to a concurrent saver's <cutoff filter
-        # during this seconds-wide rename window and get stolen —
-        # recreating the race the filter exists to close.
-        try:
-            _os.utime(old, None)
-        except OSError:
-            pass
-    try:
-        _os.rename(stage, path)
-    except OSError as commit_err:
-        _shutil.rmtree(stage, ignore_errors=True)
-        if old is not None:
-            try:
-                _os.rename(old, path)  # roll back — the old save is intact
-            except OSError:
-                # A saver stalled past recover_index_path's grace window
-                # can find its .old STOLEN (restored to `path` by a
-                # concurrent loader): commit fails on the occupied path
-                # and the rollback source is gone. `path` holding a
-                # committed layout means the store is healed — degrade to
-                # a clean "save lost the race" error instead of a
-                # confusing secondary rename failure.
-                if _os.path.isdir(path):
-                    raise OSError(
-                        f"save lost a recovery race: {path} was restored "
-                        "by a concurrent loader while this save was "
-                        "between renames; the previous layout is intact, "
-                        "re-run the save"
-                    ) from commit_err
-                raise
-        raise
-    if old is not None:
-        _shutil.rmtree(old, ignore_errors=True)
-
-
-def recover_index_path(path: str, grace_sec: float = 10.0) -> bool:
-    """Crash-window self-heal for the index families' `load()`: if `path`
-    is missing but a committed previous save survives as
-    `<path>.old-<uuid>` (a crash between staged_index_save's two
-    renames), restore the newest survivor so load succeeds WITHOUT
-    waiting for the next save's hour-stale restore pass.
-
-    Telling a crash survivor from a CONCURRENT save sitting between its
-    two renames uses the rename-time stamp staged_index_save writes
-    (os.utime right after renaming path -> .old — rename(2) itself keeps
-    the dir's old content mtime): a live save's survivor is milliseconds
-    old. Survivors younger than `grace_sec` get a wait-and-recheck loop —
-    if the concurrent save commits, `path` reappears and nothing is
-    stolen; if the survivor is still orphaned after the grace, the saver
-    is dead and the survivor is restored. Returns whether `path` exists
-    on exit."""
-    import glob as _glob
-    import os as _os
-    import time as _time
-
-    deadline = _time.time() + grace_sec
-    while True:
-        if _os.path.exists(path):
-            return True
-        survivors = _glob.glob(f"{path}.old-*")
-        if not survivors:
-            return False
-        try:
-            newest = max(survivors, key=_os.path.getmtime)
-            age = _time.time() - _os.path.getmtime(newest)
-        except OSError:
-            # swept/committed under us — re-evaluate, but never spin:
-            # a PERSISTENTLY unstattable survivor (foreign uid, stale
-            # NFS dentry) must still hit the deadline and return
-            if _time.time() >= deadline:
-                return _os.path.exists(path)
-            _time.sleep(0.05)
-            continue
-        if age >= grace_sec or _time.time() >= deadline:
-            try:
-                _os.rename(newest, path)
-            except OSError:
-                pass  # another loader healed it (or a save committed)
-            return _os.path.exists(path)
-        _time.sleep(min(0.2, grace_sec))
 
 
 def per_key_topk(
@@ -279,7 +142,7 @@ def _rank_per_query(
     )
 
 
-class IVFIndex:
+class IVFIndex(CommittedIndex):
     """Inverted-file index over KMeans centroids.
 
     build() is a Spark job (fit + transform, no driver collection of data);
@@ -778,111 +641,42 @@ class IVFIndex:
         d = ((self.centroids - q) ** 2).sum(axis=1)
         return [int(i) for i in np.argsort(d)[: min(nprobe, len(d))]]
 
-    def save(self, path: str) -> None:
-        """Q23 (declared save_index, README:239-241): persist the derived
-        index — the clustered DataFrame partitioned BY cluster_id (so a
-        probe becomes physical partition pruning on reload) plus the
-        centroid table. Staged atomic-swap (staged_index_save): saving a
-        maintained index back over its own load path is safe and a
-        crashed save never destroys the previous one."""
+    def _stage(self, stage: str) -> dict:
+        """Write the clustered rows into `stage` partitioned BY cluster_id
+        (a probe becomes physical partition pruning on reload) and return
+        the driver-side state that travels with them: the centroids, the
+        exact-search pruning bounds (a reloaded index pays no corpus scan
+        to re-derive them), the W11 drift counters, the build-time vector
+        column (the default of refresh_stats / apply_changes / save) and
+        the measured recall curve (target_recall serving pays no
+        calibration jobs again)."""
         assert self.indexed is not None and self.centroids is not None
-        spark = self.indexed.sparkSession
         radii, counts = self.cluster_stats()
+        return {
+            "indexed": stage_frame(self.indexed, stage, "indexed", "cluster_id"),
+            "centroids": self.centroids.tolist(),
+            "radii": radii.tolist(),
+            "counts": counts.tolist(),
+            "built_count": int(self._built_count),
+            "added_count": int(self._added_count),
+            "vec_col": self._vec_col,
+            "recall_curve": _curve_state(self._recall_curve),
+        }
 
-        def write_into(stage: str) -> None:
-            (
-                self.indexed.write.mode("overwrite")
-                .partitionBy("cluster_id")
-                .parquet(f"{stage}/indexed")
-            )
-            cent_rows = [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(self.centroids)
-            ]
-            local_rows_df(spark, 
-                cent_rows, "cluster_id int, centroid array<double>"
-            ).write.mode("overwrite").parquet(f"{stage}/centroids")
-            # drift counters AND the build-time vector column travel with
-            # the index — otherwise a reloaded index silently disables the
-            # W11 rebuild trigger, and maintenance paths that default to
-            # self._vec_col (refresh_stats / apply_changes / save) would
-            # look for the ctor-default 'embedding' column in an index
-            # built over e.g. the store's 'values'
-            local_rows_df(spark, 
-                [(
-                    int(self._built_count),
-                    int(self._added_count),
-                    self._vec_col,
-                )],
-                "built_count long, added_count long, vec_col string",
-            ).write.mode("overwrite").parquet(f"{stage}/meta")
-            # exact-search pruning bounds travel with the index (k rows) —
-            # a reloaded index must not pay a corpus scan to re-derive them
-            local_rows_df(spark, 
-                [
-                    (i, float(radii[i]), int(counts[i]))
-                    for i in range(len(radii))
-                ],
-                "cluster_id int, radius double, n long",
-            ).write.mode("overwrite").parquet(f"{stage}/cluster_stats")
-            if self._recall_curve:
-                # measured nprobe→recall points travel with the index: a
-                # reloaded serving index honors target_recall without
-                # paying the calibration jobs again
-                local_rows_df(spark, 
-                    [
-                        (int(p), float(r))
-                        for p, r in sorted(self._recall_curve.items())
-                    ],
-                    "nprobe int, recall double",
-                ).write.mode("overwrite").parquet(f"{stage}/recall_curve")
-
-        staged_index_save(path, write_into)
-        self.indexed = spark.read.parquet(f"{path}/indexed")
+    def _reopen(self, spark, vdir: str, state: dict) -> None:
+        self.indexed = open_frame(spark, vdir, "indexed", state["indexed"])
 
     @classmethod
-    def load(cls, spark, path: str) -> "IVFIndex":
-        """Q23 load_index: restore centroids + clustered data + drift
-        counters (falling back to a count for indexes saved by older
-        writers, so is_rebuild_required() stays live across persistence)."""
-        recover_index_path(path)
-        cents = (
-            spark.read.parquet(f"{path}/centroids")
-            .orderBy("cluster_id")
-            .collect()
-        )
-        idx = cls(n_clusters=len(cents))
-        idx.centroids = np.array([r.centroid for r in cents])
-        idx.indexed = spark.read.parquet(f"{path}/indexed")
-        try:
-            meta = spark.read.parquet(f"{path}/meta").head()
-            idx._built_count = int(meta.built_count)
-            idx._added_count = int(meta.added_count)
-            # older meta layouts carry no vec_col and fall back to the
-            # ctor default ('embedding')
-            if "vec_col" in meta.__fields__ and meta.vec_col:
-                idx._vec_col = str(meta.vec_col)
-        except Exception:  # noqa: BLE001 — pre-meta index layout
-            idx._built_count = idx.indexed.count()
-            idx._added_count = 0
-        try:
-            srows = spark.read.parquet(f"{path}/cluster_stats").collect()
-            radii = np.zeros(len(cents), dtype=np.float64)
-            counts = np.zeros(len(cents), dtype=np.int64)
-            for r in srows:
-                radii[int(r.cluster_id)] = float(r.radius)
-                counts[int(r.cluster_id)] = int(r.n)
-            idx._radii, idx._counts = radii, counts
-        except Exception:  # noqa: BLE001 — pre-stats layout; lazy recompute
-            pass
-        try:
-            crows = spark.read.parquet(f"{path}/recall_curve").collect()
-            if crows:
-                idx._recall_curve = {
-                    int(r.nprobe): float(r.recall) for r in crows
-                }
-        except Exception:  # noqa: BLE001 — curve never measured/saved
-            pass
+    def _from_state(cls, spark, vdir: str, state: dict) -> "IVFIndex":
+        idx = cls(n_clusters=len(state["centroids"]))
+        idx.centroids = np.array(state["centroids"], dtype=np.float64)
+        idx._radii = np.array(state["radii"], dtype=np.float64)
+        idx._counts = np.array(state["counts"], dtype=np.int64)
+        idx._built_count = state["built_count"]
+        idx._added_count = state["added_count"]
+        idx._vec_col = state["vec_col"]
+        idx._recall_curve = _curve_from(state["recall_curve"])
+        idx._reopen(spark, vdir, state)
         return idx
 
     def search(
@@ -920,9 +714,9 @@ class IVFIndex:
         so serving can pick nprobe for a recall target without paying
         this again (`nprobe_for_recall`)."""
         assert self.indexed is not None and self.centroids is not None
-        vec_col = vec_col or self._vec_col
         curve = _measure_recall_curve(
-            self, k, n_queries, nprobes, vec_col, id_col, self.n_clusters
+            self, k, n_queries, _nprobe_dials(nprobes, self.n_clusters),
+            vec_col or self._vec_col, id_col, "nprobe",
         )
         # an empty measurement (empty index) is not cached: a later call —
         # after rows arrive via CDC — re-measures instead of serving a
@@ -941,22 +735,29 @@ class IVFIndex:
         )
 
 
+def _nprobe_dials(nprobes: Sequence[int] | None, n_clusters: int) -> list[int]:
+    if nprobes is None:
+        nprobes = [1, 2, 4, 8, 16]
+    return [min(int(p), n_clusters) for p in nprobes]
+
+
 def _measure_recall_curve(
     index,
     k: int,
     n_queries: int,
-    nprobes: Sequence[int] | None,
+    dials: Sequence[int],
     vec_col: str,
     id_col: str,
-    n_clusters: int,
+    dial: str,
+    **fixed,
 ) -> dict[int, float]:
-    """The recall-calibration kernel shared by IVFIndex and IVFPQIndex:
-    mean recall@k of `index.search(nprobe=...)` vs `index.search_exact`
-    over a deterministic xxhash-selected sample of the index's own rows.
-    Requires only the family protocol (indexed / search / search_exact)."""
-    if nprobes is None:
-        nprobes = [1, 2, 4, 8, 16]
-    nprobes = sorted({min(int(p), n_clusters) for p in nprobes if p >= 1})
+    """The recall-calibration kernel of every family with a recall dial:
+    mean recall@k of `index.search(q, k, <dial>=d, **fixed)` (IVF and
+    IVF+PQ: `nprobe`; the graph: `ef` at a fixed `nprobe`) against
+    `index.search_exact` over a deterministic xxhash-selected sample of
+    the index's own rows, for each distinct dial value d >= 1. Requires
+    only the family protocol (indexed / search / search_exact)."""
+    dials = sorted({int(d) for d in dials if d >= 1})
     sample = (
         index.indexed.select(
             F.col(id_col).alias("qk"), F.col(vec_col).alias("qv")
@@ -967,49 +768,65 @@ def _measure_recall_curve(
     )
     if not sample:
         # an EMPTY index measures nothing: return an empty curve, which
-        # nprobe_for_recall resolves to the full-probe fallback (exact
-        # coverage) — fabricating recall 1.0 here would be cached and
-        # persisted, then silently under-probe once rows arrive
+        # the callers do not cache and the selection resolves to the
+        # family's exact-coverage fallback — fabricating recall 1.0 here
+        # would be persisted, then silently under-probe once rows arrive
         return {}
-    totals = {p: 0.0 for p in nprobes}
+    totals = {d: 0.0 for d in dials}
     for row in sample:
         q = [float(x) for x in row.qv]
         # deliberately NOT recall_at_k(approx, exact): that helper
         # re-collects the exact frame per comparison — here the exact ids
-        # collect once per query and serve every nprobe point (|nprobes|×
+        # collect once per query and serve every dial point (|dials|×
         # fewer exact-search jobs over the calibration loop)
         exact = index.search_exact(q, k, vec_col=vec_col, id_col=id_col)
         exact_ids = {r[0] for r in exact.select(id_col).collect()}
         if not exact_ids:
-            for p in nprobes:
-                totals[p] += 1.0
+            for d in dials:
+                totals[d] += 1.0
             continue
-        for p in nprobes:
+        for d in dials:
             approx = index.search(
-                q, k, nprobe=p, vec_col=vec_col, id_col=id_col
+                q, k, vec_col=vec_col, id_col=id_col, **{dial: d}, **fixed
             )
             got = {r[0] for r in approx.select(id_col).collect()}
-            totals[p] += len(got & exact_ids) / len(exact_ids)
-    return {p: totals[p] / len(sample) for p in nprobes}
+            totals[d] += len(got & exact_ids) / len(exact_ids)
+    return {d: totals[d] / len(sample) for d in dials}
 
 
 def _nprobe_for_recall(
-    curve: dict[int, float] | None, target: float, n_clusters: int
-) -> int:
+    curve: dict[int, float] | None, target: float, fallback
+):
+    """Smallest measured dial value whose recall meets `target`, else
+    `fallback` — the family's exact-coverage setting (`n_clusters` for
+    IVF, `None` = exhaustive for the graph). Raises when the curve was
+    never measured: a serving router must not silently guess (auto →
+    approx would silently eat a 30% recall cliff)."""
     if curve is None:
         raise ValueError(
             "no measured recall curve: call measure_recall_curve() "
             "(or load() an index saved after measuring)"
         )
     # an empty curve (measured over an empty index) falls through to the
-    # full-probe fallback — conservative, never under-probing
-    for p in sorted(curve):
-        if curve[p] >= target:
-            return p
-    return n_clusters
+    # fallback — conservative, never under-probing
+    for d in sorted(curve):
+        if curve[d] >= target:
+            return d
+    return fallback
 
 
-class LSHIndex:
+def _curve_state(curve: dict[int, float] | None) -> list | None:
+    """A recall curve as JSON state: sorted [dial, recall] pairs."""
+    if curve is None:
+        return None
+    return [[int(d), float(r)] for d, r in sorted(curve.items())]
+
+
+def _curve_from(state: list | None) -> dict[int, float] | None:
+    return None if state is None else {int(d): float(r) for d, r in state}
+
+
+class LSHIndex(CommittedIndex):
     """BucketedRandomProjectionLSH wrapper (euclidean LSH)."""
 
     def __init__(
@@ -1038,52 +855,51 @@ class LSHIndex:
         self.cdc = PendingTail()
         return self.indexed
 
-    def save(self, path: str) -> None:
-        """Q23: persist the fitted LSH model (MLlib save) + data with the
-        per-table bucket ids MATERIALIZED as plain int columns (b0..bN).
-        The hash vectors themselves aren't parquet-representable, but the
-        bucket ids are — and a loaded index then serves `search_exact`
-        bucket-window filters as PUSHED parquet predicates with no
-        re-hashing of the corpus per query (the 100 TB serving shape; the
-        IVF analog is save's partitionBy(cluster_id)). Staged atomic-swap
-        (staged_index_save): save-over-own-load-path safe, crash-safe."""
+    def _stage(self, stage: str) -> dict:
+        """Write the fitted MLlib model and the rows with the per-table
+        bucket ids MATERIALIZED as plain int columns (b0..bN) into
+        `stage`. The hash vectors themselves aren't parquet-representable,
+        but the bucket ids are — and a loaded index then serves
+        `search_exact` bucket-window filters as PUSHED parquet predicates
+        with no re-hashing of the corpus per query (the 100 TB serving
+        shape; the IVF analog is its partitionBy(cluster_id))."""
         assert self.model is not None and self.indexed is not None
-        spark = self.indexed.sparkSession
+        self.model.write().save(os.path.join(stage, "model"))
+        buckets = [f"b{i}" for i in range(self.num_hash_tables)]
+        keep = [
+            c for c in self.indexed.columns
+            if c not in ("__hashes", "__features", *buckets)
+        ]
+        data = self.indexed.select(*keep, *[
+            self._bucket_col(i).alias(b) for i, b in enumerate(buckets)
+        ])
+        return {"data": stage_frame(data, stage, "data")}
 
-        def write_into(stage: str) -> None:
-            self.model.write().overwrite().save(f"{stage}/model")
-            keep = [
-                c
-                for c in self.indexed.columns
-                if c not in ("__hashes", "__features")
-            ]
-            bucket_cols = [
-                self._bucket_col(i).alias(f"b{i}")
-                for i in range(self.num_hash_tables)
-            ]
-            self.indexed.select(*keep, *bucket_cols).write.mode(
-                "overwrite"
-            ).parquet(f"{stage}/data")
+    def _reopen(self, spark, vdir: str, state: dict) -> None:
+        self.indexed = open_frame(spark, vdir, "data", state["data"])
 
-        staged_index_save(path, write_into)
-        self.indexed = spark.read.parquet(f"{path}/data")
+    @classmethod
+    def _from_state(cls, spark, vdir: str, state: dict) -> "LSHIndex":
+        from pyspark.ml.feature import BucketedRandomProjectionLSHModel
+
+        idx = cls()
+        idx.model = BucketedRandomProjectionLSHModel.load(
+            os.path.join(vdir, "model")
+        )
+        idx.bucket_length = float(idx.model.getBucketLength())
+        idx.num_hash_tables = int(idx.model.getNumHashTables())
+        idx._reopen(spark, vdir, state)
+        return idx
 
     @classmethod
     def load(
         cls, spark, path: str, vec_col: str = "embedding"
     ) -> "LSHIndex":
-        """Q23: restore the model and the bucket-materialized data. The
-        b0..bN columns serve search_exact directly (pushed filters);
-        approx paths re-hash on demand (`_with_features`)."""
-        from pyspark.ml.feature import BucketedRandomProjectionLSHModel
-
-        recover_index_path(path)
-        idx = cls()
-        idx.model = BucketedRandomProjectionLSHModel.load(f"{path}/model")
-        idx.bucket_length = float(idx.model.getBucketLength())
-        idx.num_hash_tables = int(idx.model.getNumHashTables())
-        idx.indexed = spark.read.parquet(f"{path}/data")
-        return idx
+        """Restore the model and the bucket-materialized rows of the
+        newest generation. The b0..bN columns serve search_exact directly
+        (pushed filters); approx paths re-hash on demand
+        (`_with_features`)."""
+        return super().load(spark, path)
 
     def apply_changes(
         self, changes: DataFrame, vec_col: str = "embedding",
@@ -1258,7 +1074,7 @@ class LSHIndex:
         )
 
 
-class IVFPQIndex:
+class IVFPQIndex(CommittedIndex):
     """IVF + PQ — the standard large-scale ANN architecture (faiss
     IVF*,PQ*): KMeans partitions give partition-pruned probes, PQ codes
     give an 8×-smaller scan INSIDE the probed clusters, and BOTH layers
@@ -1351,111 +1167,29 @@ class IVFPQIndex:
         )
         return self.encoded
 
-    def save(self, path: str) -> None:
-        """Persist ONE physical dataset partitioned by cluster_id (probe =
-        partition pruning) carrying codes + error + full vectors, plus the
-        driver-scale state of both layers. Staged atomic-swap
-        (staged_index_save): save-over-own-load-path safe, crash-safe."""
-        assert self.encoded is not None
-        spark = self.encoded.sparkSession
-        radii, counts = self.ivf.cluster_stats()
+    def _stage(self, stage: str) -> dict:
+        """ONE physical dataset partitioned by cluster_id (probe =
+        partition pruning) carrying codes + error + full vectors, written
+        by the IVF layer, plus the driver-scale state of both layers."""
+        assert self.encoded is not None and self.pq.codebooks is not None
+        return {
+            "ivf": self.ivf._stage(stage),
+            "codebooks": self.pq.codebooks.tolist(),
+            "recall_curve": _curve_state(self._recall_curve),
+        }
 
-        def write_into(stage: str) -> None:
-            (
-                self.encoded.write.mode("overwrite")
-                .partitionBy("cluster_id")
-                .parquet(f"{stage}/encoded")
-            )
-            cent_rows = [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(self.ivf.centroids)
-            ]
-            local_rows_df(spark, 
-                cent_rows, "cluster_id int, centroid array<double>"
-            ).write.mode("overwrite").parquet(f"{stage}/centroids")
-            local_rows_df(spark, 
-                [
-                    (i, float(radii[i]), int(counts[i]))
-                    for i in range(len(radii))
-                ],
-                "cluster_id int, radius double, n long",
-            ).write.mode("overwrite").parquet(f"{stage}/cluster_stats")
-            m, k_sub, sub = self.pq.codebooks.shape
-            local_rows_df(spark, 
-                [
-                    (b, j, [float(x) for x in self.pq.codebooks[b, j]])
-                    for b in range(m)
-                    for j in range(k_sub)
-                ],
-                "b int, j int, centroid array<double>",
-            ).write.mode("overwrite").parquet(f"{stage}/codebooks")
-            # drift counters + build-time vector column (the IVFIndex meta
-            # contract): without them a reloaded composed index silently
-            # disables is_rebuild_required() and defaults maintenance to
-            # the ctor 'embedding' column
-            local_rows_df(spark, 
-                [(
-                    int(self.ivf._built_count),
-                    int(self.ivf._added_count),
-                    self.ivf._vec_col,
-                )],
-                "built_count long, added_count long, vec_col string",
-            ).write.mode("overwrite").parquet(f"{stage}/meta")
-            if self._recall_curve:
-                local_rows_df(spark, 
-                    [
-                        (int(p), float(r))
-                        for p, r in sorted(self._recall_curve.items())
-                    ],
-                    "nprobe int, recall double",
-                ).write.mode("overwrite").parquet(f"{stage}/recall_curve")
-
-        staged_index_save(path, write_into)
-        self.encoded = spark.read.parquet(f"{path}/encoded")
-        self.ivf.indexed = self.encoded
+    def _reopen(self, spark, vdir: str, state: dict) -> None:
+        self.ivf._reopen(spark, vdir, state["ivf"])
+        self.indexed = self.ivf.indexed
 
     @classmethod
-    def load(cls, spark, path: str) -> "IVFPQIndex":
-        recover_index_path(path)
-        cents = (
-            spark.read.parquet(f"{path}/centroids").orderBy("cluster_id").collect()
-        )
-        idx = cls(n_clusters=len(cents))
-        idx.ivf.centroids = np.array([r.centroid for r in cents])
-        idx.encoded = spark.read.parquet(f"{path}/encoded")
-        idx.ivf.indexed = idx.encoded
-        srows = spark.read.parquet(f"{path}/cluster_stats").collect()
-        radii = np.zeros(len(cents))
-        counts = np.zeros(len(cents), dtype=np.int64)
-        for r in srows:
-            radii[int(r.cluster_id)] = float(r.radius)
-            counts[int(r.cluster_id)] = int(r.n)
-        idx.ivf._radii, idx.ivf._counts = radii, counts
-        crows = spark.read.parquet(f"{path}/codebooks").collect()
-        m = max(r.b for r in crows) + 1
-        k_sub = max(r.j for r in crows) + 1
-        books = np.zeros((m, k_sub, len(crows[0].centroid)))
-        for r in crows:
-            books[r.b, r.j] = r.centroid
+    def _from_state(cls, spark, vdir: str, state: dict) -> "IVFPQIndex":
+        books = np.array(state["codebooks"], dtype=np.float64)
+        idx = cls(m=books.shape[0], k_sub=books.shape[1])
+        idx.ivf = IVFIndex._from_state(spark, vdir, state["ivf"])
         idx.pq.codebooks = books
-        idx.pq.encoded = idx.encoded
-        try:
-            meta = spark.read.parquet(f"{path}/meta").head()
-            idx.ivf._built_count = int(meta.built_count)
-            idx.ivf._added_count = int(meta.added_count)
-            if meta.vec_col:
-                idx.ivf._vec_col = str(meta.vec_col)
-        except Exception:  # noqa: BLE001 — pre-meta layout: counts from stats
-            idx.ivf._built_count = int(counts.sum())
-            idx.ivf._added_count = 0
-        try:
-            rrows = spark.read.parquet(f"{path}/recall_curve").collect()
-            if rrows:
-                idx._recall_curve = {
-                    int(r.nprobe): float(r.recall) for r in rrows
-                }
-        except Exception:  # noqa: BLE001 — curve never measured/saved
-            pass
+        idx.indexed = idx.ivf.indexed
+        idx._recall_curve = _curve_from(state["recall_curve"])
         return idx
 
     def search(
@@ -1495,9 +1229,9 @@ class IVFPQIndex:
         the shared `_measure_recall_curve` kernel over this object's
         search/search_exact; cached and persisted by save()."""
         assert self.encoded is not None
-        vec_col = vec_col or self.ivf._vec_col
         curve = _measure_recall_curve(
-            self, k, n_queries, nprobes, vec_col, id_col, self.n_clusters
+            self, k, n_queries, _nprobe_dials(nprobes, self.n_clusters),
+            vec_col or self.ivf._vec_col, id_col, "nprobe",
         )
         self._recall_curve = curve or None
         return curve
@@ -1841,61 +1575,60 @@ class NamespaceIndexFamily:
             kwargs["pre_filter"] = pre_filter
         return self.member(namespace).search_exact(qvec, k, **kwargs)
 
-    def save(self, path: str) -> None:
-        """Q23 per-namespace persistence (reference save_index,
-        README.md:239-241, with the namespace as the unit of isolation):
-        each member saves under `<path>/<ns-quoted>/` via its own save()
-        (IVF: cluster-partitioned parquet + centroids + drift counters +
-        pruning bounds; LSH: model + materialized buckets), plus a tiny
-        manifest mapping namespaces to member class names."""
-        import hashlib as _hashlib
-        import json as _json
-        import os as _os
-        from urllib.parse import quote
-
-        _os.makedirs(path, exist_ok=True)
-        manifest = {}
+    def _stage(self, stage: str) -> dict:
+        """Every member's layout under `stage/<member dir>` and one state
+        entry per namespace: its dir, member class name and member state.
+        The dir is the quoted name for readability plus an md5 suffix, so
+        namespaces that differ only in case cannot collide on
+        case-insensitive filesystems."""
+        members = {}
         for ns, idx in self.members.items():
-            # quoted name for readability + md5 suffix so namespaces that
-            # differ only in case cannot collide on case-insensitive
-            # filesystems
             sub = (
                 quote(ns, safe="")[:64]
                 + "-"
-                + _hashlib.md5(ns.encode("utf-8")).hexdigest()[:8]
+                + hashlib.md5(ns.encode("utf-8")).hexdigest()[:8]
             )
-            idx.save(_os.path.join(path, sub))
-            manifest[ns] = {"dir": sub, "cls": type(idx).__name__}
-        # atomic: a crash mid-write leaves the previous manifest, which
-        # still names loadable members (each member save is staged)
-        publish(_os.path.join(path, "family.json"), _json.dumps(manifest))
+            members[ns] = {
+                "dir": sub,
+                "cls": type(idx).__name__,
+                "state": idx._stage(os.path.join(stage, sub)),
+            }
+        return {"members": members}
+
+    def save(self, path: str) -> None:
+        """Q23 per-namespace persistence (reference save_index,
+        README.md:239-241, with the namespace as the unit of isolation):
+        every member writes into the SAME stage, so the whole family is
+        one committed generation under `path` — a failure in any member
+        leaves the previous family whole."""
+        vdir, state = commit_generation(path, self._stage)
+        for ns, m in state["members"].items():
+            idx = self.members[ns]
+            idx._reopen(
+                idx.indexed.sparkSession, os.path.join(vdir, m["dir"]),
+                m["state"],
+            )
 
     @classmethod
     def load(cls, spark, path: str, factory=None) -> "NamespaceIndexFamily":
-        """Restore every member from the manifest; member classes resolve
-        from this module by the saved class name. Pass the SAME `factory`
-        the family was built with — lazy creation of namespaces first seen
-        after the reload uses it (persistence cannot capture a lambda, so
-        omitting it silently reverts new members to the default
-        IVFIndex())."""
-        import json as _json
-        import os as _os
-
-        recover_index_path(path)
-
-        with open(_os.path.join(path, "family.json"), encoding="utf-8") as fh:
-            manifest = _json.load(fh)
+        """Restore every member of the newest generation; member classes
+        resolve from this module by the saved class name. Pass the SAME
+        `factory` the family was built with — lazy creation of namespaces
+        first seen after the reload uses it (persistence cannot capture a
+        lambda, so omitting it silently reverts new members to the
+        default IVFIndex())."""
+        vdir, state = open_generation(path)
         fam = cls(factory=factory)
-        for ns, meta in manifest.items():
-            member_cls = globals().get(meta["cls"])
+        for ns, m in state["members"].items():
+            member_cls = globals().get(m["cls"])
             if member_cls is None:
                 # members defined outside this module (GraphANNIndex
                 # imports FROM here, so it can't be imported at top level)
                 from mlvectordb_spark.operators import graph_ann as _graph
 
-                member_cls = getattr(_graph, meta["cls"])
-            fam.members[ns] = member_cls.load(
-                spark, _os.path.join(path, meta["dir"])
+                member_cls = getattr(_graph, m["cls"])
+            fam.members[ns] = member_cls._from_state(
+                spark, os.path.join(vdir, m["dir"]), m["state"]
             )
         return fam
 

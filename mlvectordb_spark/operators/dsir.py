@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mlvectordb_spark.commit import publish_durable
 from mlvectordb_spark.functions.localdf import local_rows_df
 
 from mlvectordb_spark.operators.curation import (
@@ -110,30 +111,11 @@ class DSIRState:
         )
 
     def save(self, path: str) -> None:
-        """Staged write + fsync + atomic rename (the MomentState / merge
-        sink crash discipline: rename alone is atomic against process
-        crashes, not power loss)."""
-        import os
-        import uuid
-
-        stage = f"{path}.staging-{uuid.uuid4().hex}"
-        with open(stage, "wb") as f:
-            np.savez(
-                f, raw=self.raw, tgt=self.tgt,
-                salt=np.array(self.salt),
-                last_batch_id=self.last_batch_id,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(stage, path)
-        try:
-            dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass  # non-POSIX dir fsync — rename is still atomic
+        """Durable atomic publish (`commit.publish_durable`)."""
+        publish_durable(path, lambda fh: np.savez(
+            fh, raw=self.raw, tgt=self.tgt, salt=np.array(self.salt),
+            last_batch_id=self.last_batch_id,
+        ))
 
     @classmethod
     def load(cls, path: str) -> "DSIRState":

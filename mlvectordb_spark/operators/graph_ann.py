@@ -58,8 +58,6 @@ search / search_exact / save / load / is_rebuild_required).
 from __future__ import annotations
 
 import heapq
-import json
-import os
 import time
 from collections.abc import Sequence
 
@@ -68,13 +66,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mlvectordb_spark.functions.localdf import local_rows_df
+from mlvectordb_spark.commit import CommittedIndex, open_frame, stage_frame
 from mlvectordb_spark.functions.vector import (
     metric_ascending,
     metric_expr,
     vector_lit,
 )
-from mlvectordb_spark.operators.ann import IVFIndex, per_key_topk
+from mlvectordb_spark.operators.ann import (
+    IVFIndex,
+    _curve_from,
+    _curve_state,
+    _measure_recall_curve,
+    _nprobe_for_recall,
+    per_key_topk,
+)
 from mlvectordb_spark.operators.cdc import PendingTail
 from mlvectordb_spark.operators.knn import knn, rank_order
 
@@ -553,7 +558,7 @@ def _entry_points(X: np.ndarray, metric: str) -> list[int]:
     return seeds
 
 
-class GraphANNIndex:
+class GraphANNIndex(CommittedIndex):
     """Partitioned small-world-graph ANN index (see module docstring).
 
     `m` / `ef_construction` mirror hnswlib's M / ef_construction
@@ -617,6 +622,7 @@ class GraphANNIndex:
         # a recall target without re-measuring — the graph's dial is ef
         # where IVF's is nprobe, same calibration contract
         self._recall_curve: dict[int, float] | None = None
+        self._curve_nprobe: int | None = None
         self.cdc = PendingTail()
 
     # ---------------------------------------------------------------- build
@@ -831,16 +837,13 @@ class GraphANNIndex:
         id_col: str | None = None,
         nprobe: int | None = None,
     ) -> dict[int, float]:
-        """Measure mean recall@k of `search(ef=...)` against the
-        certified-exact path over a deterministic xxhash-selected sample
-        of the index's own vectors — the same calibration contract as
-        IVFIndex.measure_recall_curve, with the graph's dial (ef) in
+        """Measure mean recall@k of `search(ef=...)` at routing width
+        `nprobe` against the certified-exact path — the shared
+        `ann._measure_recall_curve` kernel with the graph's dial (ef) in
         place of IVF's (nprobe). One-time ingest-class cost; cached on
         the object and persisted by save(), so a reloaded serving index
         honors `target_recall` without re-measuring."""
         assert self.indexed is not None, "build() first"
-        vcol = vec_col or self._vec_col
-        icol = id_col or self._id_col
         if efs is None:
             # the tail extends to where large blocks actually reach the
             # 0.9 serving class: measured at 1M×64d (32 blocks of 31k),
@@ -853,37 +856,13 @@ class GraphANNIndex:
             # (cheapest) ef that reaches target, so the wider sweep only
             # costs two extra one-time calibration points.
             efs = [16, 32, 64, 128, 256, 384]
-        efs = sorted({int(e) for e in efs if e >= 1})
-        sample = (
-            self.indexed.select(
-                F.col(icol).alias("qk"), F.col(vcol).alias("qv")
-            )
-            .orderBy(F.xxhash64(F.col("qk").cast("string")))
-            .limit(n_queries)
-            .collect()
+        curve = _measure_recall_curve(
+            self, k, n_queries, efs, vec_col or self._vec_col,
+            id_col or self._id_col, "ef", nprobe=nprobe,
         )
-        if not sample:
-            # empty index measures nothing; ef_for_recall then falls back
-            # to the exhaustive mode — conservative, never under-probing
-            self._recall_curve = None
-            return {}
-        totals = {e: 0.0 for e in efs}
-        for row in sample:
-            q = [float(x) for x in row.qv]
-            exact = self.search_exact(q, k, vec_col=vcol, id_col=icol)
-            exact_ids = {r[0] for r in exact.select(icol).collect()}
-            if not exact_ids:
-                for e in efs:
-                    totals[e] += 1.0
-                continue
-            for e in efs:
-                approx = self.search(
-                    q, k, ef=e, nprobe=nprobe, id_col=icol
-                )
-                got = {r[0] for r in approx.select(icol).collect()}
-                totals[e] += len(got & exact_ids) / len(exact_ids)
-        curve = {e: totals[e] / len(sample) for e in efs}
-        self._recall_curve = curve
+        # an empty measurement (empty index) is not cached; ef_for_recall
+        # then raises instead of serving a stale nothing
+        self._recall_curve = curve or None
         # the curve is only valid at the routing width it was measured at;
         # target_recall serving replays this nprobe alongside the chosen ef
         self._curve_nprobe = nprobe
@@ -893,17 +872,8 @@ class GraphANNIndex:
         """Smallest measured ef whose recall@k meets `target`; None when
         no measured point reaches it — meaning: use the exhaustive mode
         (`ef=None`, exact coverage). Raises if the curve was never
-        measured — a serving router must not silently guess (the same
-        contract as IVF's nprobe_for_recall)."""
-        if self._recall_curve is None:
-            raise ValueError(
-                "no measured recall curve: call measure_recall_curve() "
-                "(or load() an index saved after measuring)"
-            )
-        for e in sorted(self._recall_curve):
-            if self._recall_curve[e] >= target:
-                return e
-        return None
+        measured (the contract of IVF's nprobe_for_recall)."""
+        return _nprobe_for_recall(self._recall_curve, target, None)
 
     def search(
         self,
@@ -945,8 +915,7 @@ class GraphANNIndex:
             # target.
             ef = self.ef_for_recall(target_recall)
             nprobe = (
-                None if ef is None
-                else getattr(self, "_curve_nprobe", None)
+                None if ef is None else self._curve_nprobe
             )
         icol = id_col or self._id_col
         out = self._graph_candidates(qvec, k, ef, nprobe)
@@ -1019,8 +988,7 @@ class GraphANNIndex:
         if target_recall is not None:
             ef = self.ef_for_recall(target_recall)
             nprobe = (
-                None if ef is None
-                else getattr(self, "_curve_nprobe", None)
+                None if ef is None else self._curve_nprobe
             )
         qrows = queries.select(query_id, query_vec).collect()
         routed: dict[int, list[tuple]] = {}
@@ -1271,104 +1239,55 @@ class GraphANNIndex:
 
     # ---------------------------------------------------------- persistence
 
-    def save(self, path: str) -> None:
-        """Persist block-partitioned (probe = partition pruning on
-        reload), plus router centroids, the pending tail, and the drift /
-        shape meta. STAGED: everything writes into a sibling staging
-        directory, then one atomic swap replaces `path` — so (a) saving a
-        maintained index back OVER the path it was loaded from works (the
-        lazy plan keeps reading the old files while the staging write
-        runs; a direct overwrite fails mid-write and leaves the old
-        layout half-destroyed), and (b) a crashed save never corrupts the
-        previous save (the MergedTable commit lesson applied to index
-        persistence). After the swap the instance re-points at the
-        committed files."""
-        from mlvectordb_spark.operators.ann import staged_index_save
-
+    def _stage(self, stage: str) -> dict:
+        """Write the rows block-partitioned (a probe is partition pruning
+        on reload) and the pending tail into `stage`; return the router
+        centroids, the build parameters, the column roles, the drift
+        counters and the measured ef→recall curve with the routing width
+        it was measured at."""
         assert self.indexed is not None
-        spark = self.indexed.sparkSession
-        had_pending = self.pending is not None
-        meta = {
-            "n_blocks": self.n_blocks,
-            "m": self.m,
-            "ef_construction": self.ef_construction,
-            "metric": self.metric,
-            "seed": self.seed,
-            "descent_rho": self.descent_rho,
-            "descent_delta": self.descent_delta,
+        return {
+            "indexed": stage_frame(self.indexed, stage, "indexed", "block_id"),
+            "pending": (
+                None if self.pending is None
+                else stage_frame(self.pending, stage, "pending")
+            ),
+            "centroids": self._router.centroids.tolist(),
+            "params": {
+                "n_blocks": self.n_blocks,
+                "m": self.m,
+                "ef_construction": self.ef_construction,
+                "metric": self.metric,
+                "seed": self.seed,
+                "descent_rho": self.descent_rho,
+                "descent_delta": self.descent_delta,
+            },
             "vec_col": self._vec_col,
             "id_col": self._id_col,
             "data_cols": self._data_cols,
             "built_count": int(self._built_count),
             "added_count": int(self._added_count),
-            # measured ef→recall points travel with the index (IVF's
-            # recall_curve contract): a reloaded serving index honors
-            # target_recall without paying the calibration jobs again
-            "recall_curve": (
-                None if self._recall_curve is None
-                else {str(e): r for e, r in self._recall_curve.items()}
-            ),
-            "curve_nprobe": getattr(self, "_curve_nprobe", None),
+            "recall_curve": _curve_state(self._recall_curve),
+            "curve_nprobe": self._curve_nprobe,
         }
-        def write_into(stage: str) -> None:
-            (
-                self.indexed.write.mode("overwrite")
-                .partitionBy("block_id")
-                .parquet(f"{stage}/indexed")
-            )
-            cents = self._router.centroids
-            local_rows_df(spark, 
-                [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-                "block_id int, centroid array<double>",
-            ).write.mode("overwrite").parquet(f"{stage}/centroids")
-            if had_pending:
-                self.pending.write.mode("overwrite").parquet(
-                    f"{stage}/pending"
-                )
-            with open(os.path.join(stage, "graph_meta.json"), "w") as f:
-                json.dump(meta, f)
 
-        staged_index_save(path, write_into)
-        # re-point this instance's lazy plans at the committed files (the
-        # swap replaced the files any pre-save plans referenced)
-        self.indexed = spark.read.parquet(f"{path}/indexed")
+    def _reopen(self, spark, vdir: str, state: dict) -> None:
+        self.indexed = open_frame(spark, vdir, "indexed", state["indexed"])
         self.pending = (
-            spark.read.parquet(f"{path}/pending") if had_pending else None
+            None if state["pending"] is None
+            else open_frame(spark, vdir, "pending", state["pending"])
         )
 
     @classmethod
-    def load(cls, spark, path: str) -> "GraphANNIndex":
-        from mlvectordb_spark.operators.ann import recover_index_path
-
-        recover_index_path(path)
-        with open(os.path.join(path, "graph_meta.json")) as f:
-            meta = json.load(f)
-        idx = cls(
-            n_blocks=meta["n_blocks"],
-            m=meta["m"],
-            ef_construction=meta["ef_construction"],
-            metric=meta["metric"],
-            seed=meta["seed"],
-            descent_rho=meta.get("descent_rho", 1.0),
-            descent_delta=meta.get("descent_delta", 0.0),
-        )
-        idx._vec_col = meta["vec_col"]
-        idx._id_col = meta["id_col"]
-        idx._data_cols = meta.get("data_cols")
-        idx._built_count = meta["built_count"]
-        idx._added_count = meta["added_count"]
-        curve = meta.get("recall_curve")
-        if curve:
-            idx._recall_curve = {int(e): float(r) for e, r in curve.items()}
-            idx._curve_nprobe = meta.get("curve_nprobe")
-        cents = (
-            spark.read.parquet(f"{path}/centroids")
-            .orderBy("block_id")
-            .collect()
-        )
-        idx._router.centroids = np.array([r.centroid for r in cents])
-        idx._router._vec_col = meta["vec_col"]
-        idx.indexed = spark.read.parquet(f"{path}/indexed")
-        if os.path.isdir(f"{path}/pending"):
-            idx.pending = spark.read.parquet(f"{path}/pending")
+    def _from_state(cls, spark, vdir: str, state: dict) -> "GraphANNIndex":
+        idx = cls(**state["params"])
+        idx._vec_col = idx._router._vec_col = state["vec_col"]
+        idx._id_col = state["id_col"]
+        idx._data_cols = state["data_cols"]
+        idx._built_count = state["built_count"]
+        idx._added_count = state["added_count"]
+        idx._recall_curve = _curve_from(state["recall_curve"])
+        idx._curve_nprobe = state["curve_nprobe"]
+        idx._router.centroids = np.array(state["centroids"], dtype=np.float64)
+        idx._reopen(spark, vdir, state)
         return idx

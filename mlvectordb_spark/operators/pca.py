@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mlvectordb_spark.commit import publish_durable
+
 _PARTIAL_SCHEMA = T.StructType(
     [
         T.StructField("n", T.LongType()),
@@ -201,30 +203,11 @@ class MomentState:
         return _model_from_cov(mean, cov, self.n, k)
 
     def save(self, path: str) -> None:
-        import os
-        import uuid
-
-        stage = f"{path}.staging-{uuid.uuid4().hex}"
-        with open(stage, "wb") as f:
-            np.savez(
-                f, n=self.n, s=self.s, o=self.o,
-                last_batch_id=self.last_batch_id,
-            )
-            # fsync BEFORE the rename: without it an OS crash can commit
-            # the directory entry over the last good state while the new
-            # file's blocks were never written — replace() alone is
-            # atomic against process crashes, not power loss
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(stage, path)
-        try:
-            dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass  # non-POSIX-dir fsync (or perms) — rename is still atomic
+        """Durable atomic publish (`commit.publish_durable`)."""
+        publish_durable(path, lambda fh: np.savez(
+            fh, n=self.n, s=self.s, o=self.o,
+            last_batch_id=self.last_batch_id,
+        ))
 
     @classmethod
     def load(cls, path: str) -> "MomentState":

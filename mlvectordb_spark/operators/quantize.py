@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mlvectordb_spark.functions.localdf import local_rows_df
-
+from mlvectordb_spark.commit import CommittedIndex, open_frame, stage_frame
 from mlvectordb_spark.functions.vector import l2_sq
 
 
@@ -92,7 +91,7 @@ def sq8_error_stats(
     )
 
 
-class PQIndex:
+class PQIndex(CommittedIndex):
     """Product quantization: split the d-dim space into `m` subspaces,
     k-means a small codebook per subspace, store each vector as m small
     codes (+1 double) — the standard faiss-style compression step beyond
@@ -225,37 +224,26 @@ class PQIndex:
 
     # -- persistence (Q23 contract) ----------------------------------------
 
-    def save(self, path: str) -> None:
+    def _stage(self, stage: str) -> dict:
         assert self.codebooks is not None and self.encoded is not None
-        spark = self.encoded.sparkSession
-        m, k_sub, sub = self.codebooks.shape
-        rows = [
-            (b, j, [float(x) for x in self.codebooks[b, j]])
-            for b in range(m)
-            for j in range(k_sub)
-        ]
-        local_rows_df(spark, 
-            rows, "b int, j int, centroid array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/codebooks")
-        self.encoded.write.mode("overwrite").parquet(f"{path}/encoded")
+        return {
+            "encoded": stage_frame(self.encoded, stage, "encoded"),
+            "codebooks": self.codebooks.tolist(),
+            "vec_col": self._vec_col,
+        }
+
+    def _reopen(self, spark, vdir: str, state: dict) -> None:
+        self.encoded = open_frame(spark, vdir, "encoded", state["encoded"])
 
     @classmethod
-    def load(cls, spark, path: str) -> "PQIndex":
+    def _from_state(cls, spark, vdir: str, state: dict) -> "PQIndex":
         import numpy as np
 
-        from mlvectordb_spark.operators.ann import recover_index_path
-
-        recover_index_path(path)
-        rows = spark.read.parquet(f"{path}/codebooks").collect()
-        m = max(r.b for r in rows) + 1
-        k_sub = max(r.j for r in rows) + 1
-        sub = len(rows[0].centroid)
-        books = np.zeros((m, k_sub, sub))
-        for r in rows:
-            books[r.b, r.j] = r.centroid
-        idx = cls(m=m, k_sub=k_sub)
+        books = np.array(state["codebooks"], dtype=np.float64)
+        idx = cls(m=books.shape[0], k_sub=books.shape[1])
         idx.codebooks = books
-        idx.encoded = spark.read.parquet(f"{path}/encoded")
+        idx._vec_col = state["vec_col"]
+        idx._reopen(spark, vdir, state)
         return idx
 
     # -- search -------------------------------------------------------------

@@ -62,7 +62,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mlvectordb_spark.commit import ConcurrentWriteError, publish
+from mlvectordb_spark.commit import ConcurrentWriteError, publish, sweep_stale
 from mlvectordb_spark.operators.expectations import _FAILED
 from mlvectordb_spark.operators.merge import dedup_source, merge_into
 
@@ -656,34 +656,11 @@ class MergedTable:
                 if self.has_recorded_changes(v):
                     shutil.rmtree(self._cdir(v))
                 removed.append(v)
-        # staging dirs from CRASHED writers (a live writer holds its
-        # staging for seconds; anything older than an hour is debris —
-        # a committed version was renamed away and left nothing behind)
-        import time
-
-        cutoff = time.time() - 3600
-        for name in os.listdir(self.path):
-            if not name.startswith(".staging_"):
-                continue
-            p = os.path.join(self.path, name)
-            try:
-                if os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-        # same policy for staged change recordings (_changes/vN.w-<token>)
-        # stranded by writers that crashed before their commit rename
-        cdir = os.path.join(self.path, "_changes")
-        if os.path.isdir(cdir):
-            for name in os.listdir(cdir):
-                if ".w-" not in name:
-                    continue
-                p = os.path.join(cdir, name)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
+        # stages stranded by writers that crashed before their commit
+        # rename: staging dirs, and staged change recordings
+        # (_changes/vN.w-<token>)
+        sweep_stale(self.path)
+        sweep_stale(os.path.join(self.path, "_changes"), ".w-")
         return removed
 
 

@@ -768,8 +768,9 @@ def test_namespace_family_save_load_roundtrip(spark, tmp_path):
 
 
 def test_family_manifest_failed_write_keeps_previous(spark, tmp_path, monkeypatch):
-    """A family save that fails while writing `family.json` leaves the
-    previous manifest in place, so the previous family still loads."""
+    """A family save that fails while writing its state document leaves
+    the previous generation in place, so the previous family still
+    loads."""
     import json
 
     from mlvectordb_spark.operators.ann import IVFIndex, NamespaceIndexFamily
@@ -787,9 +788,7 @@ def test_family_manifest_failed_write_keeps_previous(spark, tmp_path, monkeypatc
 
     def dying(self, o, _one_shot=False):
         chunks = real(self, o, _one_shot)
-        if not (isinstance(o, dict) and o and all(
-            isinstance(v, dict) and "cls" in v for v in o.values()
-        )):
+        if not (isinstance(o, dict) and "members" in o):
             return chunks
 
         def partial():
@@ -809,8 +808,8 @@ def test_family_manifest_failed_write_keeps_previous(spark, tmp_path, monkeypatc
 
 
 def test_ivf_load_restores_vec_col(spark, tmp_path):
-    """Round-6 ADVICE: an index built over a non-default vector column
-    (e.g. the store's 'values') must restore that column name on load —
+    """An index built over a non-default vector column (e.g. the
+    store's 'values') must restore that column name on load —
     otherwise refresh_stats()/apply_changes()/save() default to the ctor
     'embedding' and crash on the reloaded layout."""
     df = spark.createDataFrame(
@@ -851,9 +850,8 @@ def test_ivfpq_save_load_keeps_drift_and_vec_col(spark, emb, tmp_path, upsert_fe
 
 
 def test_recall_curve_measure_select_and_persist(spark, emb, qvec, tmp_path):
-    """Round-6 verdict missing #2 (pytest gate): the measured nprobe→recall
-    curve is monotone non-decreasing, nprobe_for_recall picks the smallest
-    nprobe meeting the target (full-probe fallback when unreachable,
+    """The measured nprobe→recall curve is monotone non-decreasing,
+    nprobe_for_recall picks the smallest nprobe meeting the target (full-probe fallback when unreachable,
     ValueError when never measured), and the curve survives save/load."""
     idx = IVFIndex(n_clusters=8, seed=42)
     idx.build(emb)
@@ -875,9 +873,8 @@ def test_recall_curve_measure_select_and_persist(spark, emb, qvec, tmp_path):
 
 
 def test_family_drift_counters_survive_save_load_cdc(spark, tmp_path):
-    """Round-6 verdict #10: NamespaceIndexFamily.load then apply_changes
-    from a feed written AFTER the save — per-namespace drift counters
-    survive the round-trip and keep counting."""
+    """NamespaceIndexFamily.load then apply_changes from a feed written
+    AFTER the save — per-namespace drift counters survive the round-trip and keep counting."""
     from mlvectordb_spark.operators.ann import NamespaceIndexFamily
 
     fam = NamespaceIndexFamily(factory=lambda: IVFIndex(n_clusters=2, seed=9))
@@ -928,8 +925,8 @@ def test_ivfpq_approx_search_and_recall_curve(spark, emb, qvec, tmp_path):
 
 
 def test_recall_curve_empty_index_is_conservative(spark):
-    """r7 review: measuring over an EMPTY index must not fabricate (and
-    persist) recall 1.0 — it returns an empty curve, is not cached (a
+    """Measuring over an EMPTY index must not fabricate (and persist)
+    recall 1.0 — it returns an empty curve, is not cached (a
     later measure re-runs), and the selection helper resolves an empty
     curve to the full-probe fallback."""
     from mlvectordb_spark.operators.ann import (
@@ -951,25 +948,57 @@ def test_recall_curve_empty_index_is_conservative(spark):
     assert _nprobe_for_recall({}, 0.9, 4) == 4
 
 
-def test_ivf_save_over_loaded_path_after_changes(tmp_path, spark, sf_dir):
-    """Maintained-index persistence (every family shares
-    staged_index_save): load -> apply_changes -> save back to the SAME
-    path must succeed — a direct overwrite makes Spark read the files it
-    is replacing, fails mid-write, and leaves the previous layout
-    half-destroyed — and the reloaded index serves the maintained state
+def _maintained_families():
+    """family -> (factory, roll-forward of a CDC feed into the index)."""
+    from mlvectordb_spark.operators.ann import IVFPQIndex
+    from mlvectordb_spark.operators.graph_ann import GraphANNIndex
+    from mlvectordb_spark.operators.quantize import PQIndex
+
+    def roll(idx, feed):
+        idx.apply_changes(feed)
+
+    def encode(idx, feed):
+        # PQIndex has no CDC path: new rows enter through its codebooks
+        base = idx.encoded
+        idx.encoded = base.unionByName(
+            idx.encode(feed.drop("change_type", "write_version"))
+        )
+
+    return {
+        "ivf": (lambda: IVFIndex(n_clusters=4, seed=42), roll),
+        "ivfpq": (lambda: IVFPQIndex(n_clusters=4, m=8, k_sub=8, seed=42), roll),
+        "lsh": (
+            lambda: LSHIndex(bucket_length=0.5, num_hash_tables=4, seed=42),
+            roll,
+        ),
+        "graph": (
+            lambda: GraphANNIndex(n_blocks=2, m=4, ef_construction=16), roll
+        ),
+        "pq": (lambda: PQIndex(m=8, k_sub=16, seed=42), encode),
+    }
+
+
+def _served_count(idx) -> int:
+    """Rows an index serves: its table, plus the graph's pending tail."""
+    table = idx.encoded if hasattr(idx, "codebooks") else idx.indexed
+    pending = getattr(idx, "pending", None)
+    return table.count() + (0 if pending is None else pending.count())
+
+
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "graph", "pq"])
+def test_save_over_loaded_path_after_changes(tmp_path, spark, sf_dir, family):
+    """Maintained-index persistence: load -> roll forward -> save back to
+    the SAME path must succeed (the save reads the committed generation
+    it supersedes), and the reloaded index serves the maintained state
     exactly."""
-    from pyspark.sql import functions as F
-
-    from mlvectordb_spark.operators.ann import IVFIndex
-    from mlvectordb_spark.operators.knn import knn
-    from mlvectordb_spark.sources.testdata import load_table
-
     emb = load_table(spark, sf_dir, "embeddings")
-    p = str(tmp_path / "ivf_selfsave")
-    idx = IVFIndex(n_clusters=4, seed=42)
+    factory, roll = _maintained_families()[family]
+    cls = type(factory())
+    p = str(tmp_path / "selfsave")
+    idx = factory()
     idx.build(emb)
     idx.save(p)
-    back = IVFIndex.load(spark, p)
+    back = cls.load(spark, p)
     qvec = emb.filter(F.col("vec_id") == 7).select("embedding").head()[0]
     near = [float(x) for x in qvec]
     near[1] += 1e-3
@@ -978,10 +1007,12 @@ def test_ivf_save_over_loaded_path_after_changes(tmp_path, spark, sf_dir):
         "vec_id long, embedding array<float>, label int, "
         "change_type string, write_version long",
     )
-    back.apply_changes(feed)
+    roll(back, feed)
     back.save(p)  # over the path it was loaded from
-    again = IVFIndex.load(spark, p)
-    assert again.indexed.count() == emb.count() + 1
+    again = cls.load(spark, p)
+    assert _served_count(again) == emb.count() + 1
+    if family == "graph":
+        assert again.pending is not None, "the pending tail was not saved"
     got = [r.vec_id for r in again.search_exact(qvec, 2).collect()]
     want = [
         r.vec_id
@@ -993,261 +1024,191 @@ def test_ivf_save_over_loaded_path_after_changes(tmp_path, spark, sf_dir):
     assert got == want
 
 
-def test_staged_save_sweeps_crash_debris(tmp_path, spark):
-    """r8 verdict #5: a crash mid-write_into strands a `.staging-*`
-    sibling and a crash between the two renames strands the previous
-    save in `.old-*` with nothing at `path`. The NEXT save must (a)
-    restore the newest `.old-*` when `path` is missing, (b) sweep
-    stale debris older than an hour, and (c) leave a CONCURRENT save's
-    fresh staging dir (and other paths entirely) untouched."""
-    import json
+def _generation(spark, kind: str, extra: int):
+    """An IVF index over namespace A's rows, or (kind="family") a family
+    over namespaces A (20 rows) and B (30 rows); `extra` rows more in
+    each namespace tell one generation from another."""
+    from mlvectordb_spark.operators.ann import NamespaceIndexFamily
+
+    rows = [
+        (f"{ns}{i}", [float(i), float(i % 3)], ns)
+        for ns, n in (("A", 20 + extra), ("B", 30 + extra))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows, "id string, values array<float>, namespace string"
+    )
+    if kind == "family":
+        fam = NamespaceIndexFamily(
+            factory=lambda: IVFIndex(n_clusters=2, seed=6)
+        )
+        fam.build(df, vec_col="values", id_col="id")
+        return fam
+    idx = IVFIndex(n_clusters=2, seed=6)
+    idx.build(
+        df.filter(F.col("namespace") == "A").drop("namespace"),
+        vec_col="values", id_col="id",
+    )
+    return idx
+
+
+def _loaded_sizes(spark, kind: str, path: str) -> dict[str, int]:
+    from mlvectordb_spark.operators.ann import NamespaceIndexFamily
+
+    if kind == "family":
+        fam = NamespaceIndexFamily.load(spark, path)
+        return {ns: fam.member(ns).indexed.count() for ns in fam.namespaces()}
+    return {"A": IVFIndex.load(spark, path).indexed.count()}
+
+
+def _sizes(kind: str, extra: int) -> dict[str, int]:
+    sizes = {"A": 20 + extra, "B": 30 + extra}
+    return sizes if kind == "family" else {"A": sizes["A"]}
+
+
+def _committed(path: str) -> list[str]:
+    import os
+
+    return sorted(os.listdir(path))
+
+
+@pytest.mark.parametrize("kind", ["ivf", "family"])
+def test_failed_stage_write_keeps_previous_generation(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A save that fails inside its stage write — for the family, after
+    the first member's rows were written, in the second member's —
+    leaves exactly the previous generation, and no stage behind."""
+    import mlvectordb_spark.operators.ann as ann
+
+    path = str(tmp_path / kind)
+    _generation(spark, kind, 0).save(path)
+    committed = _committed(path)
+    real = ann.stage_frame
+    calls = []
+
+    def dying(df, stage, name, partition_by=None):
+        out = real(df, stage, name, partition_by)
+        calls.append(name)
+        if len(calls) == (2 if kind == "family" else 1):
+            raise OSError("no space left on device")
+        return out
+
+    monkeypatch.setattr(ann, "stage_frame", dying)
+    with pytest.raises(OSError):
+        _generation(spark, kind, 1).save(path)
+    monkeypatch.undo()
+    assert len(calls) == (2 if kind == "family" else 1)
+    assert _loaded_sizes(spark, kind, path) == _sizes(kind, 0)
+    assert _committed(path) == committed
+
+
+@pytest.mark.parametrize("kind", ["ivf", "family"])
+def test_crash_after_commit_rename_loads_new_generation(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A save that dies between its commit rename and the removal of
+    older generations has committed: load returns exactly the new
+    generation, and the next save removes the one left behind."""
+    import os
+
+    path = str(tmp_path / kind)
+    _generation(spark, kind, 0).save(path)
+    real = os.rename
+
+    def crash_after(src, dst):
+        real(src, dst)
+        if os.path.dirname(dst) == path:
+            raise RuntimeError("killed after the commit rename")
+
+    monkeypatch.setattr(os, "rename", crash_after)
+    with pytest.raises(RuntimeError):
+        _generation(spark, kind, 1).save(path)
+    monkeypatch.undo()
+    assert len(_committed(path)) == 2
+    assert _loaded_sizes(spark, kind, path) == _sizes(kind, 1)
+    _generation(spark, kind, 2).save(path)
+    assert len(_committed(path)) == 1
+    assert _loaded_sizes(spark, kind, path) == _sizes(kind, 2)
+
+
+def test_racing_saves_one_commits(spark, tmp_path, monkeypatch):
+    """Two saves racing for one generation number: the one that renames
+    first commits, the other raises ConcurrentWriteError without leaving
+    its stage, and load returns the winner."""
+    import mlvectordb_spark.operators.ann as ann
+    from mlvectordb_spark.commit import ConcurrentWriteError
+
+    path = str(tmp_path / "race")
+    _generation(spark, "ivf", 0).save(path)
+    loser, winner = _generation(spark, "ivf", 1), _generation(spark, "ivf", 2)
+    real = ann.stage_frame
+
+    def winner_commits_meanwhile(df, stage, name, partition_by=None):
+        out = real(df, stage, name, partition_by)
+        monkeypatch.setattr(ann, "stage_frame", real)
+        winner.save(path)
+        return out
+
+    monkeypatch.setattr(ann, "stage_frame", winner_commits_meanwhile)
+    with pytest.raises(ConcurrentWriteError):
+        loser.save(path)
+    assert _loaded_sizes(spark, "ivf", path) == _sizes("ivf", 2)
+    assert len(_committed(path)) == 1
+
+
+def test_save_sweeps_only_stale_stages(spark, tmp_path):
+    """A stage a crashed save left behind is removed by the next save
+    once it is an hour old; a younger one may be a live writer's and is
+    kept."""
     import os
     import time
 
-    from mlvectordb_spark.operators.ann import staged_index_save
-
-    p = str(tmp_path / "idx")
-
-    def writer(payload):
-        def write_into(stage):
-            os.makedirs(stage, exist_ok=True)
-            with open(os.path.join(stage, "meta.json"), "w") as f:
-                json.dump(payload, f)
-        return write_into
-
-    staged_index_save(p, writer({"v": 1}))
-    # simulate a crash between rename(path→old) and rename(stage→path)
-    old = f"{p}.old-deadbeef"
-    os.rename(p, old)
-    assert not os.path.exists(p)
-    # plus stale debris from a crashed write_into, and a FRESH staging
-    # dir from a concurrent save that must survive the sweep
-    stale = f"{p}.staging-cafe"
+    path = str(tmp_path / "sweep")
+    _generation(spark, "ivf", 0).save(path)
+    stale, live = (os.path.join(path, f".staging_{t}") for t in ("old", "new"))
     os.makedirs(stale)
+    os.makedirs(live)
     past = time.time() - 7200
     os.utime(stale, (past, past))
-    os.utime(old, (past, past))
-    fresh = f"{p}.staging-live"
-    os.makedirs(fresh)
-    other = str(tmp_path / "other") + ".staging-x"
-    os.makedirs(other)
-    os.utime(other, (past, past))
-
-    staged_index_save(p, writer({"v": 2}))
-    with open(os.path.join(p, "meta.json")) as f:
-        assert json.load(f) == {"v": 2}
-    assert not os.path.exists(stale), "stale staging debris not swept"
-    assert not os.path.exists(old), "recovered .old-* must not linger"
-    assert os.path.exists(fresh), "fresh concurrent staging swept!"
-    assert os.path.exists(other), "unrelated path's debris touched"
+    _generation(spark, "ivf", 1).save(path)
+    assert not os.path.exists(stale)
+    assert os.path.exists(live)
+    assert _loaded_sizes(spark, "ivf", path) == _sizes("ivf", 1)
 
 
-def test_staged_save_success_leaves_no_old_sibling(tmp_path):
-    """A SUCCESSFUL re-save must delete its .old-<uuid> rollback dir: a
-    lingering survivor leaks a full index copy per save AND lets
-    recover_index_path silently resurrect an index the user later
-    deletes (r11 review regression — the post-commit rmtree was dropped
-    while adding the lost-race rollback path)."""
-    import glob
-    import json
-    import os
+def test_load_without_committed_generation_raises(spark, tmp_path):
+    """Nothing committed under the path (missing, or empty as a fresh
+    mkdtemp) is a FileNotFoundError that names the path."""
+    import re
 
-    from mlvectordb_spark.operators.ann import staged_index_save
-
-    p = str(tmp_path / "idx3")
-
-    def writer(payload):
-        def write_into(stage):
-            os.makedirs(stage, exist_ok=True)
-            with open(os.path.join(stage, "meta.json"), "w") as f:
-                json.dump(payload, f)
-        return write_into
-
-    for v in (1, 2, 3):
-        staged_index_save(p, writer({"v": v}))
-    with open(os.path.join(p, "meta.json")) as f:
-        assert json.load(f) == {"v": 3}
-    assert glob.glob(f"{p}.old-*") == [], "committed save left rollback dir"
-    assert glob.glob(f"{p}.staging-*") == []
+    for path in (str(tmp_path / "missing"), str(tmp_path)):
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            IVFIndex.load(spark, path)
 
 
-def test_staged_save_recovers_old_when_path_missing(tmp_path, spark):
-    """The crash-window recovery alone: nothing at `path`, a committed
-    save stranded in `.old-*` — the next save starts from the recovered
-    state (write_into can read it) and commits normally. Only STALE
-    survivors are restored: a fresh `.old-*` with `path` missing is
-    indistinguishable from a concurrent save mid-swap, and stealing its
-    dir would break that save's commit AND rollback renames."""
-    import json
-    import os
-    import time
-
-    from mlvectordb_spark.operators.ann import staged_index_save
-
-    p = str(tmp_path / "idx2")
-    staged_index_save(
-        p, lambda s: (
-            os.makedirs(s, exist_ok=True),
-            open(os.path.join(s, "m.txt"), "w").write("one"),
-        )
-    )
-    os.rename(p, f"{p}.old-1111")
-    # FRESH survivor (mtime now): must NOT be restored — simulate by
-    # asserting the next save does not see the previous state
-    probe = {}
-    staged_index_save(
-        p, lambda s: (
-            probe.__setitem__("prev_exists", os.path.exists(p)),
-            os.makedirs(s, exist_ok=True),
-            open(os.path.join(s, "m.txt"), "w").write("zero"),
-        )
-    )
-    assert probe["prev_exists"] is False
-    # reset: strand again, this time backdated past the hour floor
-    import shutil
-
-    shutil.rmtree(p)
-    past = time.time() - 7200
-    os.utime(f"{p}.old-1111", (past, past))
-
-    seen = {}
-
-    def write_into(stage):
-        # recovery happened BEFORE write_into runs: the previous save is
-        # back at `path` for incremental writers to read
-        with open(os.path.join(p, "m.txt")) as f:
-            seen["prev"] = f.read()
-        os.makedirs(stage, exist_ok=True)
-        with open(os.path.join(stage, "m.txt"), "w") as f:
-            f.write("two")
-
-    staged_index_save(p, write_into)
-    assert seen["prev"] == "one"
-    with open(os.path.join(p, "m.txt")) as f:
-        assert f.read() == "two"
+# Spark jobs per save / load of a checkpointed sf0.001 build. A save is
+# one write job per staged frame (LSH: plus the MLlib model's metadata
+# and data writes); a load reads the state document on the driver and
+# opens its frames with their recorded schemas (LSH: plus the MLlib
+# model's reads).
+_PERSIST_JOBS = {
+    "ivf": (1, 0),
+    "ivfpq": (1, 0),
+    "graph": (1, 0),
+    "lsh": (3, 3),
+}
 
 
-def test_staged_save_stamps_old_rename_time(tmp_path, monkeypatch):
-    """ADVICE r9 (medium): rename(2) keeps the renamed directory's own
-    content mtime, so an index last WRITTEN hours ago would strand an
-    `.old-*` that looks stale during its saver's live rename window —
-    a concurrent save's restore pass would steal it mid-swap.
-    staged_index_save must therefore stamp the `.old` dir at RENAME
-    time. Simulate a hard crash between the two renames (a non-OSError
-    from the commit rename skips the rollback) over an index whose
-    content is 2h old: the survivor's mtime must be now, not 2h ago —
-    with no test-side utime backdating the production path."""
-    import json
-    import os
-    import time
-
-    from mlvectordb_spark.operators.ann import staged_index_save
-
-    p = str(tmp_path / "idx3")
-
-    def writer(tag):
-        def write_into(stage):
-            os.makedirs(stage, exist_ok=True)
-            with open(os.path.join(stage, "m.txt"), "w") as f:
-                f.write(tag)
-
-        return write_into
-
-    staged_index_save(p, writer("one"))
-    past = time.time() - 7200
-    os.utime(p, (past, past))  # content last written 2h ago
-
-    real_rename = os.rename
-
-    def crash_between_renames(src, dst):
-        if dst == p and src.startswith(f"{p}.staging-"):
-            raise RuntimeError("simulated crash before commit rename")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_between_renames)
-    try:
-        staged_index_save(p, writer("two"))
-    except RuntimeError:
-        pass
-    monkeypatch.undo()
-
-    import glob
-
-    survivors = glob.glob(f"{p}.old-*")
-    assert not os.path.exists(p)
-    assert len(survivors) == 1
-    age = time.time() - os.path.getmtime(survivors[0])
-    assert age < 60, f".old survivor carries content mtime ({age:.0f}s old)"
-
-
-def test_recover_index_path_waits_out_live_save(tmp_path):
-    """recover_index_path must not steal a LIVE save's just-renamed
-    `.old-*`: with a fresh survivor and `path` missing it waits; when
-    the concurrent save commits (path appears), it returns leaving the
-    survivor for the saver's own cleanup. If nothing commits within the
-    grace, the saver is dead and the survivor is restored."""
-    import os
-    import threading
-    import time
-
-    from mlvectordb_spark.operators.ann import recover_index_path
-
-    p = str(tmp_path / "idx4")
-    old = f"{p}.old-live"
-    os.makedirs(old)
-    with open(os.path.join(old, "m.txt"), "w") as f:
-        f.write("prev")
-
-    def commit_later():
-        time.sleep(0.4)
-        os.makedirs(p)
-
-    t = threading.Thread(target=commit_later)
-    t.start()
-    assert recover_index_path(p, grace_sec=3.0) is True
-    t.join()
-    assert os.path.exists(old), "live save's .old was stolen"
-
-    # dead-saver branch: fresh survivor, nothing ever commits — after
-    # the grace the survivor is restored to path
-    import shutil
-
-    shutil.rmtree(p)
-    assert recover_index_path(p, grace_sec=0.5) is True
-    assert not os.path.exists(old)
-    with open(os.path.join(p, "m.txt")) as f:
-        assert f.read() == "prev"
-    # nothing at path, no survivors → heal impossible
-    shutil.rmtree(p)
-    assert recover_index_path(p, grace_sec=0.1) is False
-
-
-def test_load_self_heals_crash_survivor(tmp_path, spark):
-    """r9 verdict #9: a crash between staged_index_save's two renames
-    leaves nothing at `path`; the next load() must succeed WITHOUT an
-    intervening save. Survivor stamped 30s in the past (production
-    stamps rename time — this models a crash 30s ago), so the live-save
-    grace has elapsed and recovery is immediate."""
-    import os
-    import time
-
-    from mlvectordb_spark.operators.ann import IVFIndex
-
-    df = spark.createDataFrame(
-        [(i, [float(i), float(i % 3)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    p = str(tmp_path / "ivf_heal")
-    idx = IVFIndex(n_clusters=4, seed=42)
-    idx.build(df)
-    idx.save(p)
-    old = f"{p}.old-crashed"
-    os.rename(p, old)
-    past = time.time() - 30
-    os.utime(old, (past, past))
-    assert not os.path.exists(p)
-
-    back = IVFIndex.load(spark, p)  # no save in between
-    assert back.indexed.count() == 40
-    got = [r.vec_id for r in back.search_exact([7.0, 1.0], 1).collect()]
-    assert got == [7]
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "graph", "lsh"])
+def test_save_load_jobs_pinned(spark, sf_dir, tmp_path, family, spark_jobs):
+    emb = load_table(spark, sf_dir, "embeddings")
+    factory, _ = _maintained_families()[family]
+    idx = factory()
+    idx.build(emb)
+    idx.indexed = idx.indexed.localCheckpoint()
+    path = str(tmp_path / family)
+    save_jobs, _ = spark_jobs(lambda: idx.save(path))
+    load_jobs, back = spark_jobs(lambda: type(idx).load(spark, path))
+    assert (save_jobs, load_jobs) == _PERSIST_JOBS[family]
+    assert back.indexed.count() == emb.count()

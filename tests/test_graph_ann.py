@@ -499,10 +499,9 @@ def test_family_member_protocol(spark, emb):
 
 def test_save_over_loaded_path_after_fold(tmp_path, spark, emb, qvec, upsert_feed):
     """Maintained-index persistence: load → fold_pending → save back to
-    the SAME path must succeed (staged atomic-swap save — a direct
-    overwrite fails mid-write reading the files it is replacing and
-    leaves the old layout half-destroyed) and the reloaded index serves
-    the folded state exactly."""
+    the SAME path must succeed (the save reads the committed generation
+    it supersedes) and the reloaded index serves the folded state
+    exactly."""
     p = str(tmp_path / "selfsave")
     idx = GraphANNIndex(n_blocks=2, m=4, ef_construction=16)
     idx.build(emb)
@@ -729,7 +728,7 @@ def test_descent_rho_builds_exact_and_persists(spark, emb, qvec, tmp_path):
 
 
 def test_descent_delta_builds_exact_and_persists(spark, emb, qvec, tmp_path):
-    """The r10 convergence dial (descent_delta — Dong et al.'s δ):
+    """The convergence dial (descent_delta — Dong et al.'s δ):
     exhaustive search stays EXACT whatever the early stop does
     (connectivity repair + unvisited sweep are pool-independent), the
     dial survives save/load, and out-of-range values are rejected."""

@@ -539,6 +539,37 @@ def test_vacuum_keeps_current_version_readable(spark, tmp_path):
     want = {i: float(i) for i in range(16)}
     want[3], want[4] = 33.0, 44.0
     assert got == want
+
+
+def test_vacuum_sweeps_only_stale_stages(spark, tmp_path):
+    """vacuum removes the staging dirs and staged change recordings that
+    crashed writers stranded once they are an hour old (the
+    `commit.sweep_stale` rule index saves share); younger ones may be a
+    live writer's and stay."""
+    import os
+    import time
+
+    from mlvectordb_spark.streaming.merge_sink import apply_merge_batch
+
+    path = str(tmp_path / "t")
+    table = MergedTable(spark, path, n_buckets=2)
+    apply_merge_batch(
+        table,
+        spark.createDataFrame(
+            [(1, 1.0, 1, False)], "id bigint, val double, seq bigint, deleted boolean"
+        ),
+        0, "id", "seq", "deleted",
+    )
+    changes = os.path.join(path, "_changes")
+    stale = [os.path.join(path, ".staging_old"), os.path.join(changes, "v9.w-old")]
+    live = [os.path.join(path, ".staging_new"), os.path.join(changes, "v9.w-new")]
+    past = time.time() - 7200
+    for d in stale + live:
+        os.makedirs(d)
+    for d in stale:
+        os.utime(d, (past, past))
+    table.vacuum(retain_last=1)
+    assert [os.path.exists(d) for d in stale + live] == [False, False, True, True]
     with pytest.raises(ValueError):
         table.vacuum(retain_last=0)
 

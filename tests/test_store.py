@@ -1872,27 +1872,41 @@ def test_legacy_manifests_migrate_once(spark, tmp_path):
 
 
 def test_store_state_writes_only_through_commits():
-    """No state write in operators/store.py can bypass the commit: the
-    module opens no file for writing and never calls json.dump."""
+    """No persisted-state write can bypass `commit.py`: operators/store.py
+    and the index modules (ann.py, graph_ann.py, quantize.py) open no
+    file for writing and never call json.dump, and the index modules
+    neither rename nor remove directories — their saves go through
+    `commit.commit_generation`."""
     import ast
 
+    import mlvectordb_spark.operators.ann as ann_mod
+    import mlvectordb_spark.operators.graph_ann as graph_mod
+    import mlvectordb_spark.operators.quantize as quantize_mod
     import mlvectordb_spark.operators.store as store_mod
 
-    with open(store_mod.__file__, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read())
-    for node in ast.walk(tree):
-        if not isinstance(node, ast.Call):
-            continue
-        name = ast.unparse(node.func)
-        assert name != "json.dump", node.lineno
-        if name in ("open", "os.fdopen", "io.open"):
-            mode = node.args[1] if len(node.args) > 1 else next(
-                (k.value for k in node.keywords if k.arg == "mode"), None
-            )
-            assert mode is None or (
-                isinstance(mode, ast.Constant)
-                and not set(mode.value) & set("wax+")
-            ), f"write-mode open at line {node.lineno}"
+    index_only = {"os.rename", "os.replace", "shutil.rmtree"}
+    for mod, banned in (
+        (store_mod, {"json.dump"}),
+        (ann_mod, {"json.dump"} | index_only),
+        (graph_mod, {"json.dump"} | index_only),
+        (quantize_mod, {"json.dump"} | index_only),
+    ):
+        with open(mod.__file__, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        where = os.path.basename(mod.__file__)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = ast.unparse(node.func)
+            assert name not in banned, (where, name, node.lineno)
+            if name in ("open", "os.fdopen", "io.open"):
+                mode = node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "mode"), None
+                )
+                assert mode is None or (
+                    isinstance(mode, ast.Constant)
+                    and not set(mode.value) & set("wax+")
+                ), f"write-mode open at {where}:{node.lineno}"
 
 
 def test_family_lazy_create_collapses_feed(spark, tmp_path):
@@ -2022,7 +2036,7 @@ def test_auto_staleness_is_per_namespace(spark, tmp_path):
 
 
 def test_family_load_takes_factory_for_lazy_creation(spark, tmp_path):
-    """Review r6 #4: a reloaded family uses the caller-resupplied factory
+    """A reloaded family uses the caller-resupplied factory
     for namespaces first seen after the reload."""
     from mlvectordb_spark.operators.ann import IVFIndex, NamespaceIndexFamily
 
